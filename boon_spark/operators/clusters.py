@@ -24,9 +24,6 @@ Scale notes:
   executors feel anything (the iterative-lineage trap, same reason
   ``ivf_topk`` collects its tiny centroid state to the driver; the edge
   frame is NOT tiny, so it stays distributed and checkpoints instead).
-  On a real cluster with executor churn, pass
-  ``checkpoint=lambda df: df.checkpoint()`` (with a configured
-  checkpoint dir) for loss-durable truncation.
 * ``attach_clusters`` — one join of the corpus against the label frame
   (clustered docs only — typically ≪ corpus, so AQE broadcasts it);
   singletons get their own id via ``coalesce``, never a second pass.
@@ -44,38 +41,15 @@ re-expressible in the DuckDB oracle as a recursive min-label CTE.
 
 from __future__ import annotations
 
-from typing import Callable, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ._ckpt import pin, release
+
 __all__ = ["connected_components", "attach_clusters", "keep_canonical",
            "cluster_size_stats"]
-
-
-def _release_checkpoint(df: DataFrame) -> None:
-    """Release a superseded round's storage blocks NOW, not at the next
-    GC + ContextCleaner sweep (waiting accumulates ~rounds full copies
-    of the edge frame in executor storage).
-
-    ``DataFrame.unpersist()`` is a CacheManager no-op for a
-    ``localCheckpoint``'d frame — its blocks are RDD-level cache behind
-    the ``LogicalRDD`` plan node, not a registered cached query
-    (measured: ``getRDDStorageInfo`` still lists the RDD after the
-    DataFrame-level call, and drops it after the RDD-level one).  So
-    release at the RDD level when the plan is a ``LogicalRDD``, and
-    fall back to the DataFrame-level call for ``persist()``-based
-    checkpoint callables.  Best-effort by design (touches py4j
-    internals): never load-bearing for correctness, and only ever
-    called on frames no longer referenced."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getName().endswith(".LogicalRDD"):
-            plan.rdd().unpersist(False)
-            return
-    except Exception:
-        pass
-    df.unpersist()
 
 
 def _canonical_edges(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
@@ -118,10 +92,8 @@ def _small_star(e: DataFrame) -> DataFrame:
 
 
 def connected_components(edges: DataFrame, src_col: str = "id_a",
-                         dst_col: str = "id_b", *, max_iters: int = 50,
-                         checkpoint: Optional[
-                             Callable[[DataFrame], DataFrame]] = None
-                         ) -> DataFrame:
+                         dst_col: str = "id_b", *,
+                         max_iters: int = 50) -> DataFrame:
     """Connected components over an undirected edge frame; returns
     ``(node, component)`` where ``component`` is the MIN node id of the
     component, for every node that appears in at least one edge.
@@ -136,27 +108,19 @@ def connected_components(edges: DataFrame, src_col: str = "id_a",
     wrong labels — the confirm makes early termination impossible, at
     the cost of one extra anti-join only on the final round).
 
-    ``checkpoint`` defaults to eager ``localCheckpoint`` (right for
-    local/ephemeral runs); pass ``lambda df: df.checkpoint()`` for
-    durable truncation on a long-lived cluster.
-
     Raises ``RuntimeError`` if not converged within ``max_iters``
     rounds (the algorithm needs O(log n); 50 covers any realistic
     graph — non-convergence means something is wrong, not that more
     rounds are needed).  On success the returned frame carries
     ``_cc_stats = {"rounds", "edges_start", "edges_end"}`` — the
-    convergence telemetry an unattended 100 TB run should log (same
-    attached-attribute shape as ``token_kgram_candidates``'s
-    ``_cached_kgrams``).
+    convergence telemetry an unattended 100 TB run should log.
     """
-    # LAZY localCheckpoint by default: the fingerprint aggregate right
-    # after it is the action that materializes the checkpoint, so each
-    # round runs ONE job (materialize + convergence evidence together)
-    # instead of two — at cluster scale that removes a full re-read of
-    # the cached edge blocks per round, at gate scale it halves the
-    # loop's fixed job overhead (guide §1.2: fewer passes).  A caller
-    # checkpoint callable is used as given (assumed eager/durable).
-    ck = checkpoint or (lambda df: df.localCheckpoint(eager=False))
+    # LAZY localCheckpoint pins: the fingerprint aggregate right after
+    # each pin is the action that materializes it, so each round runs
+    # ONE job (materialize + convergence evidence together) instead of
+    # two — at cluster scale that removes a full re-read of the cached
+    # edge blocks per round, at gate scale it halves the loop's fixed
+    # job overhead (guide §1.2: fewer passes).
 
     def fingerprint(e: DataFrame):
         row = e.agg(
@@ -165,7 +129,7 @@ def connected_components(edges: DataFrame, src_col: str = "id_a",
                        F.lit(0).cast("decimal(38,0)")).alias("h")).first()
         return row["n"], row["h"]
 
-    cur = ck(_canonical_edges(edges, src_col, dst_col))
+    cur = pin(_canonical_edges(edges, src_col, dst_col))
     cur_fp = fingerprint(cur)
     edges_start = cur_fp[0]
     rounds = 0
@@ -174,21 +138,21 @@ def connected_components(edges: DataFrame, src_col: str = "id_a",
         if cur_fp[0] == 0:  # no edges at all — vacuously converged
             converged = True
             break
-        nxt = ck(_small_star(_large_star(cur)))
+        nxt = pin(_small_star(_large_star(cur)))
         nxt_fp = fingerprint(nxt)
         rounds += 1
         if nxt_fp == cur_fp and cur.exceptAll(nxt).isEmpty():
             # equal counts + empty one-sided multiset difference
             # ⇒ the distinct sets are identical: true fixed point
-            _release_checkpoint(cur)
+            release(cur)
             converged = True
             cur = nxt
             break
-        # release the superseded round's blocks NOW (RDD-level — the
-        # DataFrame-level call is a no-op for localCheckpoint frames;
-        # nxt is already materialized by ck/fingerprint, so nothing
-        # recomputes)
-        _release_checkpoint(cur)
+        # release the superseded round's blocks NOW, not at the next GC
+        # + ContextCleaner sweep (waiting accumulates ~rounds copies of
+        # the edge frame in executor storage); nxt is already
+        # materialized by its fingerprint, so nothing recomputes
+        release(cur)
         cur, cur_fp = nxt, nxt_fp
     if not converged:
         raise RuntimeError(

@@ -37,7 +37,8 @@ import pandas as pd  # noqa: F401 — resolves pandas_udf type hints
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import cosine, simhash_signature
+from ._ckpt import StorageLevel, pin
+from .similarity import _idot, cosine, simhash_signature
 
 # ---------------------------------------------------------------------------
 # shingling + exact
@@ -328,9 +329,8 @@ def minhash_lsh_pairs(df: DataFrame, *, text_col: str = "text",
     # NO ReusedExchange forms (the measured r5 law), so without persist
     # the corpus is re-shingled/re-signed once per consumer (measured
     # r7: 3 ArrowEvalPython passes per action, ~2/3 of the pair
-    # pipeline's cost).  Spill-safe; handle attached for early release.
-    from pyspark import StorageLevel
-    sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
+    # pipeline's cost).  Spill-safe.
+    sig = pin(sig, StorageLevel.MEMORY_AND_DISK)
 
     # bucket join: candidates are pairs sharing any band bucket.  Cap
     # bucket size to bound the quadratic pair expansion per reducer
@@ -358,10 +358,8 @@ def minhash_lsh_pairs(df: DataFrame, *, text_col: str = "text",
                              F.col("_sh").alias("sh_b")), on="id_b"))
     jac = (F.size(F.array_intersect("sh_a", "sh_b")) /
            F.size(F.array_union("sh_a", "sh_b")))
-    out = (pairs.select("id_a", "id_b", jac.alias("jaccard"))
-           .filter(F.col("jaccard") >= jaccard_threshold))
-    out._cached_sig = sig
-    return out
+    return (pairs.select("id_a", "id_b", jac.alias("jaccard"))
+            .filter(F.col("jaccard") >= jaccard_threshold))
 
 
 def minhash_lsh_bucket_stats(df: DataFrame, *, text_col: str = "text",
@@ -448,19 +446,18 @@ def cross_table_contamination(corpus: DataFrame, benchmark: DataFrame, *,
     fast = hash_family == "xxhash64"
 
     if metric == "containment":
-        from pyspark import StorageLevel
         # persist both shingle bases: the corpus side is consumed by
         # the hot-set guard collect, the candidate join, AND the exact
         # verify (three actions/broadcast-boundary consumers — the r5
         # no-ReusedExchange law means each would otherwise re-run the
         # shingle UDF over the full corpus); the benchmark side by the
         # token index, the size frame, and the verify.  Spill-safe.
-        sh_c = _shingle_base(corpus, text_col=text_col, id_col=id_col,
-                             shingle_n=shingle_n) \
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        sh_b = _shingle_base(benchmark, text_col=text_col, id_col=id_col,
-                             shingle_n=shingle_n) \
-            .persist(StorageLevel.MEMORY_AND_DISK)
+        sh_c = pin(_shingle_base(corpus, text_col=text_col,
+                                 id_col=id_col, shingle_n=shingle_n),
+                   StorageLevel.MEMORY_AND_DISK)
+        sh_b = pin(_shingle_base(benchmark, text_col=text_col,
+                                 id_col=id_col, shingle_n=shingle_n),
+                   StorageLevel.MEMORY_AND_DISK)
         hasher = _min_hasher(0, fast)
 
         def tokens(sh, out_id):
@@ -559,13 +556,9 @@ def cross_table_contamination(corpus: DataFrame, benchmark: DataFrame, *,
         overlap = inter / F.size("sh_b")
     else:
         overlap = inter / (F.size("sh_c") + F.size("sh_b") - inter)
-    out = (pairs.select("corpus_id", "benchmark_id",
-                        overlap.alias("overlap"))
-           .filter(F.col("overlap") >= threshold))
-    if metric == "containment":
-        # unpersist handles (the repo's cached_corpus idiom)
-        out._cached_shingles = (sig_c, sig_b)
-    return out
+    return (pairs.select("corpus_id", "benchmark_id",
+                         overlap.alias("overlap"))
+            .filter(F.col("overlap") >= threshold))
 
 
 def ngram_jaccard_pairs(df: DataFrame, *, text_col: str = "text",
@@ -689,7 +682,8 @@ def simhash_near_dups(df: DataFrame, *, text_col: str = "text",
     width = 64 // chunks
     fp = df.select(F.col(id_col).alias("_id"),
                    simhash64(F.col(text_col), shingle_n).alias("_fp"))
-    fp = fp.filter(F.col("_fp").isNotNull()).cache()
+    fp = pin(fp.filter(F.col("_fp").isNotNull()),
+             StorageLevel.MEMORY_AND_DISK_DESER)
 
     def chunk(col: Column, i: int) -> Column:
         if width >= 64:  # max_hamming=0: the single chunk IS the fp
@@ -810,10 +804,8 @@ def embedding_near_dups_quantized(df: DataFrame, *,
     # persist: the signed frame feeds the bucket-size agg AND both join
     # sides, across broadcast boundaries where no ReusedExchange forms
     # (r5 law) — without it the corpus is quantized and signed three
-    # times per action.  Handle attached as result._cached_sig (the
-    # cached_corpus idiom) so callers can release it after their action.
-    from pyspark import StorageLevel
-    base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    # times per action.
+    base = pin(base, StorageLevel.MEMORY_AND_DISK)
 
     sizes = (base.groupBy("_sig")
              .agg(F.count(F.lit(1)).alias("_bn"))
@@ -827,22 +819,15 @@ def embedding_near_dups_quantized(df: DataFrame, *,
                        F.col("_qv").alias("qb"),
                        F.col("_nrm").alias("_nb"), "_sig")
     joined = a.join(b_, on="_sig").filter(F.col("id_a") < F.col("id_b"))
-
-    def idot(x: Column, y: Column) -> Column:
-        return F.aggregate(F.zip_with(x, y, lambda u, v: u * v),
-                           F.lit(0).cast("long"), lambda acc, u: acc + u)
-
-    dot = idot(F.col("qa"), F.col("qb"))
+    dot = _idot(F.col("qa"), F.col("qb"))
     num2 = threshold_num * threshold_num
     den2 = threshold_den * threshold_den
-    out = (joined
-           .select("id_a", "id_b", dot.alias("_dot"), "_na", "_nb")
-           .filter((F.col("_dot") > 0) &
-                   (F.lit(den2) * F.col("_dot") * F.col("_dot") >=
-                    F.lit(num2) * F.col("_na") * F.col("_nb")))
-           .select("id_a", "id_b"))
-    out._cached_sig = base
-    return out
+    return (joined
+            .select("id_a", "id_b", dot.alias("_dot"), "_na", "_nb")
+            .filter((F.col("_dot") > 0) &
+                    (F.lit(den2) * F.col("_dot") * F.col("_dot") >=
+                     F.lit(num2) * F.col("_na") * F.col("_nb")))
+            .select("id_a", "id_b"))
 
 
 def embedding_near_dups_oracle_sql(*, dim: int, threshold_num: int = 2,

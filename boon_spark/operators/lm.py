@@ -52,13 +52,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ._ckpt import pin, release
+from ._ckpt import StorageLevel, pin, release
 
 __all__ = ["ln64_bounds", "fit_bigram_lm", "score_bigram_lm",
            "score_bigram_lm_oracle_sql", "pmi_collocations",
            "pmi_collocations_oracle_sql", "fit_backoff_lm",
-           "score_backoff_lm", "score_backoff_lm_oracle_sql",
-           "unpersist_model"]
+           "score_backoff_lm", "score_backoff_lm_oracle_sql"]
 
 #: q64 resolution: 64 steps per nat
 LN64_R = 64
@@ -119,20 +118,11 @@ def fit_bigram_lm(df: DataFrame, *, tokens_col: str = "tokens",
     # WORSE here — the LogicalRDD loses size statistics, flipping the
     # corpus-side score joins from broadcast to sort-merge (lm_score
     # 2.3s -> 4.5s) — while persist keeps accurate in-memory stats.
-    # unpersist_model() releases the blocks.
-    uni = uni.persist()
-    bi = bi.persist()
+    uni = pin(uni, StorageLevel.MEMORY_AND_DISK_DESER)
+    bi = pin(bi, StorageLevel.MEMORY_AND_DISK_DESER)
     vocab = uni.count()
     return {"uni": uni, "bi": bi, "vocab": int(vocab),
             "bounds": ln64_bounds(n_steps), "n_steps": int(n_steps)}
-
-
-def unpersist_model(model: dict) -> None:
-    """Release the pinned count frames of a fitted LM model
-    (fit_bigram_lm / fit_backoff_lm)."""
-    for k in ("uni", "bi", "tri"):
-        if k in model:
-            release(model[k])
 
 
 def _q64_udf(spark, bounds: np.ndarray):
@@ -309,11 +299,8 @@ def pmi_collocations(df: DataFrame, k: int, *,
              F.col("w2").asc()]
     top = cand.orderBy(*order).limit(int(k))
     w = Window.orderBy(*order)
-    out = (top.withColumn("rank", F.row_number().over(w).cast("long"))
-           .select("rank", "w1", "w2", "c12", "pmi_q64"))
-    # unpersist handle for the caller (the repo's cached_corpus idiom)
-    out._pmi_persisted = bi
-    return out
+    return (top.withColumn("rank", F.row_number().over(w).cast("long"))
+            .select("rank", "w1", "w2", "c12", "pmi_q64"))
 
 
 def pmi_collocations_oracle_sql(k: int, *, gen_sql: str = "doc_id",
@@ -425,8 +412,8 @@ def fit_backoff_lm(df: DataFrame, *, tokens_col: str = "tokens",
     # broadcast-stats measurement); tri has ONE consumer (the
     # seen-trigram arm), so pinning it would only pay a
     # materialization write for nothing (r7)
-    uni = uni.persist()
-    bi = bi.persist()
+    uni = pin(uni, StorageLevel.MEMORY_AND_DISK_DESER)
+    bi = pin(bi, StorageLevel.MEMORY_AND_DISK_DESER)
     n_tokens = uni.agg(F.sum("c")).first()[0] or 0
     return {"uni": uni, "bi": bi, "tri": tri,
             "n_tokens": int(n_tokens),

@@ -40,9 +40,9 @@ frequencies aggregate over those matches only and broadcast back.  No
 full inverted index is materialized.  The final per-query top-k is a
 rank window over matched (query, doc) pairs.  The two twice-consumed
 intermediates (query terms, matched postings — both small by contract)
-are persisted spill-safely, with unpersist handles on the result
-(without this Spark recomputes each subtree per consumer: measured 6
-scans and 2 posting shuffles instead of 3 and 1, 4x wall time).
+are persisted spill-safely (without this Spark recomputes each subtree
+per consumer: measured 6 scans and 2 posting shuffles instead of 3 and
+1, 4x wall time).
 
 Overflow is a contract, not an assumption (same policy as
 ``lsh_topk_quantized``): the plan-time guard bounds the worst-case
@@ -62,6 +62,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._ckpt import StorageLevel, pin
 from .dedup import normalized_text
 from .packing import _div
 
@@ -204,13 +205,11 @@ def _bm25_rank_pipeline(corpus: DataFrame, queries: DataFrame, *, k: int,
     aliased ``_s``), and the (score desc, doc_id asc) rank window.
     Keeping this shared is what stops the two variants' cache/join/rank
     behavior drifting apart."""
-    from pyspark import StorageLevel
-    qterms = _query_terms(queries, query_id_col, query_text_col,
-                          max_query_len).persist(
-        StorageLevel.MEMORY_AND_DISK)
+    qterms = pin(_query_terms(queries, query_id_col, query_text_col,
+                              max_query_len), StorageLevel.MEMORY_AND_DISK)
     stats = _corpus_stats(corpus, text_col, max_doc_len)
-    post = _postings(corpus, qterms, id_col, text_col,
-                     max_doc_len).persist(StorageLevel.MEMORY_AND_DISK)
+    post = pin(_postings(corpus, qterms, id_col, text_col, max_doc_len),
+               StorageLevel.MEMORY_AND_DISK)
     dfreq = (post.groupBy("term")
              .agg(F.count(F.lit(1)).cast("long").alias("df")))
     scored = (post.join(F.broadcast(dfreq), "term")
@@ -221,12 +220,9 @@ def _bm25_rank_pipeline(corpus: DataFrame, queries: DataFrame, *, k: int,
               .agg(agg_score.alias(score_alias)))
     w = Window.partitionBy("query_id").orderBy(
         F.col(score_alias).desc(), F.col("doc_id").asc())
-    out = (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-           .filter(F.col("rank") <= k)
-           .select("query_id", "rank", "doc_id", score_alias))
-    out.cached_qterms = qterms
-    out.cached_postings = post
-    return out
+    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "rank", "doc_id", score_alias))
 
 
 def bm25_topk(corpus: DataFrame, queries: DataFrame, *, k: int,
@@ -287,8 +283,7 @@ def bm25_topk_float(corpus: DataFrame, queries: DataFrame, *, k: int,
     Shares every plumbing stage and cap with the quantized path:
     ``_query_terms`` (``max_query_len`` exclusion), ``_corpus_stats``
     / ``_postings`` (``max_doc_len`` exclusion), the broadcast-gated
-    posting explode, and the persisted twice-consumed intermediates
-    (handles attached as ``cached_qterms``/``cached_postings``).
+    posting explode, and the persisted twice-consumed intermediates.
     ``avgdl`` comes from the shared stats stage as integer
     milli-tokens (≤ 0.001-token quantization — the one documented
     deviation from the textbook formula).  No ``max_docs`` contract:

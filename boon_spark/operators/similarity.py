@@ -28,6 +28,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ._ckpt import StorageLevel, pin
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -73,17 +75,6 @@ def _exact_query_chunks(q_all: DataFrame, n_q: int,
         for i in range(n_chunks)]
 
 
-def _attach_cached(out: DataFrame, cached) -> DataFrame:
-    """Expose a chunked-mode persisted corpus projection on the result as
-    ``result.cached_corpus`` so callers can ``.unpersist()`` it after
-    their action instead of leaking one MEMORY_AND_DISK cache per call
-    (``spark.catalog.clearCache()`` is the blunt fallback — it drops
-    unrelated caches too)."""
-    if cached is not None:
-        out.cached_corpus = cached
-    return out
-
-
 def cosine_topk(corpus: DataFrame, queries: DataFrame, *, k: int,
                 id_col: str = "vec_id", vec_col: str = "embedding",
                 exclude_self: bool = True, sub_buckets: int = 16,
@@ -115,8 +106,8 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, *, k: int,
       EXACT (row_number over the small query side, ≤ max per pass — a
       hash-pmod chunk only bounds the average), and chunked mode
       ``persist()``\\s the corpus projection so the corpus is still read
-      once, not once per chunk; the cache lives until the session drops
-      it or the caller unpersists via ``spark.catalog.clearCache()``.
+      once, not once per chunk; the enclosing ``_ckpt.scope()`` releases
+      it (outside a scope it lives for the session).
 
     The shuffle carries only candidate lists, never the corpus×Q
     cross product.
@@ -126,7 +117,6 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, *, k: int,
     c = corpus.select(F.col(id_col).alias("neighbor_id"),
                       F.col(vec_col).alias("_cv"))
 
-    cached = None
     if max_queries_per_pass is not None:
         # opt-in broadcast chunking: n_q is a driver action on the SMALL
         # side only, and only in this branch (the default path runs zero
@@ -134,8 +124,7 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, *, k: int,
         n_q = q_all.count()
         chunks = _exact_query_chunks(q_all, n_q, max_queries_per_pass)
         if len(chunks) > 1:
-            from pyspark import StorageLevel
-            c = cached = c.persist(StorageLevel.MEMORY_AND_DISK)
+            c = pin(c, StorageLevel.MEMORY_AND_DISK)
     else:
         chunks = [q_all]
 
@@ -178,11 +167,10 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, *, k: int,
         cand = cand.unionByName(extra)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos").desc(), F.col("neighbor_id").asc())
-    out = (cand
-           .withColumn("rank", F.row_number().over(w))
-           .filter(F.col("rank") <= k)
-           .select("query_id", "neighbor_id", "rank"))
-    return _attach_cached(out, cached)
+    return (cand
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "neighbor_id", "rank"))
 
 
 # ---------------------------------------------------------------------------
@@ -261,13 +249,11 @@ def lsh_bucket_topk(corpus: DataFrame, queries: DataFrame, *, k: int,
         c = c.join(F.broadcast(over), on="_sig", how="left_anti")
     q_all = queries.select(F.col(id_col).alias("query_id"),
                            F.col(vec_col).alias("_qv"), sig_c.alias("_sig0"))
-    cached = None
     if max_queries_per_pass is not None:
         n_q = q_all.count()
         chunks = _exact_query_chunks(q_all, n_q, max_queries_per_pass)
         if len(chunks) > 1:
-            from pyspark import StorageLevel
-            c = cached = c.persist(StorageLevel.MEMORY_AND_DISK)
+            c = pin(c, StorageLevel.MEMORY_AND_DISK)
     else:
         chunks = [q_all]
 
@@ -297,10 +283,9 @@ def lsh_bucket_topk(corpus: DataFrame, queries: DataFrame, *, k: int,
     scored = scored.dropDuplicates(["query_id", "neighbor_id"])
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos").desc(), F.col("neighbor_id").asc())
-    out = (scored.withColumn("rank", F.row_number().over(w))
-           .filter(F.col("rank") <= k)
-           .select("query_id", "neighbor_id", "rank"))
-    return _attach_cached(out, cached)
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "neighbor_id", "rank"))
 
 
 def _idot(x: Column, y: Column) -> Column:
@@ -460,8 +445,7 @@ def lsh_topk_quantized(corpus: DataFrame, queries: DataFrame, *, k: int,
         # count agg and the anti-join probe side, across a broadcast
         # boundary where no ReusedExchange forms — without it the
         # corpus is quantized and signed twice per action (r7)
-        from pyspark import StorageLevel
-        c = c.persist(StorageLevel.MEMORY_AND_DISK)
+        c = pin(c, StorageLevel.MEMORY_AND_DISK)
         over = (c.groupBy("_sig").agg(F.count(F.lit(1)).alias("_n"))
                 .filter(F.col("_n") > max_bucket).select("_sig"))
         c = c.join(F.broadcast(over), on="_sig", how="left_anti")

@@ -42,15 +42,6 @@ def column_stats(df: DataFrame, columns: Sequence[str], *,
     return df.agg(*aggs)
 
 
-def partition_stats(df: DataFrame, columns: Sequence[str],
-                    **kw) -> DataFrame:
-    """Stats keyed by physical partition id — the per-partition verdict
-    building block (SURVEY.md §7 step 5)."""
-    return column_stats(
-        df.withColumn("_pid", F.spark_partition_id()),
-        columns, by=["_pid"], **kw)
-
-
 def value_quantiles(df: DataFrame, column: str,
                     qs: Sequence[float] = (0.25, 0.5, 0.75, 0.9, 0.99),
                     *, by: Optional[str] = None) -> DataFrame:

@@ -48,6 +48,7 @@ import pandas as pd  # noqa: F401 — resolves pandas_udf type hints
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ._ckpt import StorageLevel, pin
 from .dedup import _hash_shingle
 from .packing import _div
 
@@ -372,23 +373,21 @@ def token_kgram_candidates(df: DataFrame, k: int, *,
     (guarded by ``max_hot`` — a loud ValueError, never an oversized
     broadcast), which comes back as a broadcast anti-join.  The cold
     (document, k-gram hash) frame feeds three consumers (pair join both
-    sides + per-doc sizes), so it is persisted spill-safely for the
-    query's lifetime — the handle is attached to the result as
-    ``_cached_kgrams`` for callers who want to unpersist early.
+    sides + per-doc sizes), so it is pinned spill-safely (released by
+    the enclosing ``_ckpt.scope()``, else kept for the session).
     Audit companion: :func:`token_kgram_stats`."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if min_shared < 1:
         raise ValueError(f"min_shared must be >= 1, got {min_shared}")
-    from pyspark import StorageLevel
     # persist the exploded (doc, hash) frame BEFORE the hot-set guard:
     # the guard's collect is its own action, so without the persist the
     # k-gram hashing ran twice (guard pass + cold materialization) —
     # one computation now feeds both (r7; a localCheckpoint pin was
     # measured 2x worse here — the pair self-join wants the persisted
     # plan's statistics)
-    ex = _kgram_exploded(df, k, tokens_col, id_col) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    ex = pin(_kgram_exploded(df, k, tokens_col, id_col),
+             StorageLevel.MEMORY_AND_DISK)
     hot_rows = (ex.groupBy("h")
                 .agg(F.count(F.lit(1)).alias("_df"))
                 .filter(F.col("_df") > max_bucket)
@@ -402,7 +401,7 @@ def token_kgram_candidates(df: DataFrame, k: int, *,
     if hot_rows:
         hot = df.sparkSession.createDataFrame(hot_rows, "h long")
         cold = ex.join(F.broadcast(hot), "h", "left_anti")
-    cold = cold.persist(StorageLevel.MEMORY_AND_DISK)
+    cold = pin(cold, StorageLevel.MEMORY_AND_DISK)
 
     sizes = (cold.groupBy("_id")
              .agg(F.count(F.lit(1)).cast("bigint").alias("_nk")))
@@ -419,12 +418,10 @@ def token_kgram_candidates(df: DataFrame, k: int, *,
                       F.col("_nk").alias("_nb"))
     denom = F.least(F.col("_na"), F.col("_nb"))
     shared1000 = F.col("shared") * 1000
-    out = (pairs.join(na, "id_a").join(nb, "id_b")
-           .select("id_a", "id_b", "shared",
-                   ((shared1000 - shared1000 % denom) / denom)
-                   .cast("bigint").alias("containment_permille")))
-    out._cached_kgrams = cold
-    return out
+    return (pairs.join(na, "id_a").join(nb, "id_b")
+            .select("id_a", "id_b", "shared",
+                    ((shared1000 - shared1000 % denom) / denom)
+                    .cast("bigint").alias("containment_permille")))
 
 
 # ----------------------------------------------------------------- #

@@ -1,6 +1,7 @@
-"""Sources: driver test tables + the deterministic synthetic sequences
-generator for the input_hint table
-``(doc_id string, tokens array<int32>, n_tok int32, source string)``.
+"""Sources: the deterministic synthetic sequences generator for the
+input_hint table
+``(doc_id string, tokens array<int32>, n_tok int32, source string)``,
+its ``sources`` dimension, and the flagship constraint suite over it.
 
 The generator is fully distributed: it builds rows from ``spark.range``
 with per-row seeded arithmetic (xorshift-style mixing on the row index),
@@ -10,24 +11,8 @@ no driver-side materialization, scales to any row count.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings")
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-def load_table(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, t, sf_dir) for t in TABLES}
-
 
 # ---------------------------------------------------------------------------
 # synthetic sequences table (input_hint shape), deterministic, distributed
@@ -40,7 +25,6 @@ _SOURCE_CUTS = [80, 95, 99, 100]
 
 def synthetic_sequences(spark: SparkSession, n_rows: int, *, seed: int = 42,
                         vocab: int = 50257, max_len: int = 64,
-                        dirty_frac_permille: int = 2,
                         partitions: int | None = None) -> DataFrame:
     """Deterministic sequences table with injected violations.
 

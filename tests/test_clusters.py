@@ -181,15 +181,21 @@ def test_convergence_telemetry_attached(spark):
 def test_superseded_rounds_release_storage(spark):
     # DataFrame.unpersist() is a CacheManager no-op for localCheckpoint
     # frames (ADVICE r5): the loop must release at the RDD level, so
-    # executor storage holds O(1) edge-frame copies, not O(rounds)
+    # executor storage holds O(1) edge-frame copies, not O(rounds); the
+    # scope then releases the final fixed-point frame too
+    from boon_spark.operators._ckpt import scope
     from boon_spark.operators.clusters import connected_components
     sc = spark.sparkContext
-    before = len(sc._jsc.sc().getRDDStorageInfo())
+
+    def stored():
+        return {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+
+    before = stored()
     edges = spark.createDataFrame([(i, i + 1) for i in range(32)],
                                   "id_a int, id_b int")
-    out = connected_components(edges)
-    out.count()
-    after = len(sc._jsc.sc().getRDDStorageInfo())
-    # only the final fixed-point frame may remain stored (plus whatever
-    # unrelated tests left behind) — superseded rounds must be gone
-    assert after - before <= 1, (before, after)
+    with scope():
+        out = connected_components(edges)
+        out.count()
+        # superseded rounds are gone mid-scope: one stored frame at most
+        assert len(stored() - before) <= 1, (before, stored())
+    assert stored() - before == set(), (before, stored())

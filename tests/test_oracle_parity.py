@@ -1,7 +1,8 @@
 """Replicates the driver's correctness gate locally: run every
 ``__spark_entry__.queries()`` entry on Spark AND its ``oracle_sql()`` on
 DuckDB at sf0.01, compare row-count, column names, and order-insensitive
-values."""
+values.  Each gate runs inside a pin scope, which must leave no
+persistent RDD behind."""
 
 import math
 import os
@@ -13,6 +14,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
+from boon_spark.operators._ckpt import scope
 
 # default sf0.01 = the driver gate scale; the CLAUDE.md 10x sweep runs
 # the same module with SPARK_GRAFT_PARITY_SF=/root/testdata/sf0.1
@@ -44,6 +46,10 @@ def _norm_rows(cols, rows):
     return sorted(tuple(_norm_cell(r[i]) for i in order) for r in rows)
 
 
+def _persistent_rdds(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
 ORACLES = entry_mod.oracle_sql()
 QUERY_IDS = sorted(entry_mod.queries())
 
@@ -51,9 +57,15 @@ QUERY_IDS = sorted(entry_mod.queries())
 @pytest.mark.parametrize("name", QUERY_IDS)
 def test_query_matches_oracle(spark, duck, name):
     q = entry_mod.queries()[name]
-    sdf = q(spark, SF_DIR)
-    s_cols = sdf.columns
-    s_rows = [tuple(r) for r in sdf.collect()]
+    # compare id sets, not counts: the scope may also drop an equal
+    # plan an earlier test cached outside any scope
+    before = _persistent_rdds(spark)
+    with scope():
+        sdf = q(spark, SF_DIR)
+        s_cols = sdf.columns
+        s_rows = [tuple(r) for r in sdf.collect()]
+    leaked = _persistent_rdds(spark) - before
+    assert not leaked, f"{name}: persistent RDDs left behind {leaked}"
     if name not in ORACLES:
         pytest.skip(f"{name}: no oracle (rows-only check)")
     ddf = duck.execute(ORACLES[name]).fetchall()

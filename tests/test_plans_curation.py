@@ -78,10 +78,10 @@ def test_remove_boilerplate_output_is_shuffle_free(spark, docs):
 
 
 def test_token_kgram_exchanges_carry_hashes_not_tokens(spark, toks):
+    from boon_spark.operators._ckpt import scope
     from boon_spark.operators.tokens import token_kgram_candidates
-    out = token_kgram_candidates(toks, 3, max_bucket=300)
-    plan = _plan(out)
-    try:
+    with scope():
+        plan = _plan(token_kgram_candidates(toks, 3, max_bucket=300))
         # every partitioning key in the plan is the hash, an id, or the
         # pair ids — the token arrays never cross an exchange
         for ln in plan.splitlines():
@@ -90,8 +90,6 @@ def test_token_kgram_exchanges_carry_hashes_not_tokens(spark, toks):
         # the cold (document, hash) frame is persisted and reused by the
         # pair join and the per-doc size aggregation
         assert "InMemoryTableScan" in plan
-    finally:
-        out._cached_kgrams.unpersist()
 
 
 def test_ranked_topk_plans_as_take_ordered(spark, docs, toks):

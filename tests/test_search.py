@@ -4,6 +4,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from boon_spark.operators._ckpt import scope
 from boon_spark.operators.search import (bm25_df_stats,
                                          bm25_df_stats_oracle_sql,
                                          bm25_topk, bm25_topk_oracle_sql,
@@ -141,12 +142,12 @@ def test_intermediates_are_persisted_once(spark):
     # persistence Spark recomputes the whole subtree per consumer
     # (measured: 6 scans, 2 posting shuffles, 4x wall time at sf0.1)
     docs, qs = _frames(spark)
-    out = bm25_topk(docs, qs, k=3, max_query_len=8)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("InMemoryTableScan") >= 3
-    assert out.cached_postings.is_cached and out.cached_qterms.is_cached
-    out.cached_postings.unpersist()
-    out.cached_qterms.unpersist()
+    with scope() as pins:
+        out = bm25_topk(docs, qs, k=3, max_query_len=8)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("InMemoryTableScan") >= 3
+        # exactly the two intermediates, each persisted
+        assert len(pins) == 2 and all(p.is_cached for p in pins)
 
 
 def test_doc_len_overflow_guard_and_exclusion(spark):
@@ -178,15 +179,14 @@ def test_float_variant_matches_quantized_ranking(spark):
     import math
     from boon_spark.operators.search import bm25_topk_float
     docs, qs = _frames(spark)
-    fl = bm25_topk_float(docs, qs, k=3, max_query_len=8)
-    qt = bm25_topk(docs, qs, k=3, max_query_len=8)
-    got_f = [(r.query_id, r.rank, r.doc_id)
-             for r in fl.orderBy("query_id", "rank").collect()]
-    got_q = [(r.query_id, r.rank, r.doc_id)
-             for r in qt.orderBy("query_id", "rank").collect()]
+    with scope():
+        fl = bm25_topk_float(docs, qs, k=3, max_query_len=8)
+        qt = bm25_topk(docs, qs, k=3, max_query_len=8)
+        got_f = [(r.query_id, r.rank, r.doc_id)
+                 for r in fl.orderBy("query_id", "rank").collect()]
+        got_q = [(r.query_id, r.rank, r.doc_id)
+                 for r in qt.orderBy("query_id", "rank").collect()]
     assert got_f == got_q and got_f  # same ranking, non-degenerate
-    fl.cached_qterms.unpersist(); fl.cached_postings.unpersist()
-    qt.cached_qterms.unpersist(); qt.cached_postings.unpersist()
 
     # score VALUES are the textbook formula (hand-computed reference
     # for query 10 = "cat mat"; shared-stats avgdl is milli-token

@@ -2,6 +2,7 @@
 
 from pyspark.sql import functions as F
 
+from boon_spark.operators._ckpt import scope
 from boon_spark.operators.similarity import cosine_topk
 
 
@@ -100,14 +101,12 @@ def test_cosine_topk_chunked_mode_caches_corpus(spark, tmp_path):
     _emb(spark, 40).write.parquet(path)
     corpus = spark.read.parquet(path)
     q = _emb(spark, 30)
-    try:
+    with scope():
         out = cosine_topk(corpus, q, k=3, id_col="vec_id",
                           max_queries_per_pass=7)
         assert "InMemoryTableScan" in _plan(out), \
             "chunked mode lost the corpus persist"
         assert len(out.collect()) == 30 * 3
-    finally:
-        spark.catalog.clearCache()
 
 
 def test_cosine_topk_exact_chunks(spark):
@@ -116,14 +115,11 @@ def test_cosine_topk_exact_chunks(spark):
     from boon_spark.operators.similarity import _exact_query_chunks
     q = _emb(spark, 23).select(F.col("vec_id").alias("query_id"),
                                F.col("embedding").alias("_qv"))
-    try:
-        chunks = _exact_query_chunks(q, 23, 7)
-        assert len(chunks) == 4
-        sizes = [c.count() for c in chunks]
-        assert all(s <= 7 for s in sizes), sizes
-        assert sum(sizes) == 23
-    finally:
-        spark.catalog.clearCache()
+    chunks = _exact_query_chunks(q, 23, 7)
+    assert len(chunks) == 4
+    sizes = [c.count() for c in chunks]
+    assert all(s <= 7 for s in sizes), sizes
+    assert sum(sizes) == 23
 
 
 def _hot_corpus(spark, n_hot=50, n_cold=20, dim=16):
@@ -171,13 +167,11 @@ def test_lsh_topk_chunked_matches_single_pass(spark):
     from boon_spark.operators.similarity import lsh_bucket_topk
     corpus = _hot_corpus(spark, n_hot=5, n_cold=40)
     q = corpus.filter(F.col("vec_id") < 12)
-    try:
+    with scope():
         chunked = lsh_bucket_topk(corpus, q, k=4, dim=16, bits=4,
                                   max_queries_per_pass=3).collect()
         single = lsh_bucket_topk(corpus, q, k=4, dim=16, bits=4).collect()
         assert sorted(map(tuple, chunked)) == sorted(map(tuple, single))
-    finally:
-        spark.catalog.clearCache()
 
 
 def test_lsh_topk_quantized_recall_and_determinism(spark):
