@@ -50,6 +50,12 @@ def _read(spark, path, floor=True):
     design (deterministic hashing, total-order ranks), so results are
     unchanged.
 
+    The file stat is local-filesystem only: on an object-store path
+    (``s3a://``, ``gs://``, ``abfss://``) ``os.path.isdir`` and ``glob``
+    see no local files and the size lookup fails, so the floor never
+    fires there — a single tiny object-store file is scanned as it is
+    laid out.
+
     ``floor=False`` opts a query out: measured on the gate tables, the
     floor pays off only when scan-side per-row compute dominates —
     for shuffle-bound pipelines over the same tiny inputs the extra

@@ -2,7 +2,11 @@
 rerun → only that partition recomputed; changed spec invalidates all."""
 
 import os
+from contextlib import nullcontext
 
+import pytest
+
+from boon_spark.operators._ckpt import StorageLevel
 from boon_spark.sources.manifest import (ValidationManifest, spec_hash,
                                          validate_partitioned)
 
@@ -75,7 +79,6 @@ def test_manifest_entries_carry_metrics(spark, tmp_path):
 def test_partition_cardinality_guard(spark, tmp_path):
     # a high-cardinality "partition" column must fail loudly instead of
     # collecting millions of distinct values onto the driver
-    import pytest
     from pyspark.sql import functions as F
     from boon_spark.sources.manifest import validate_partitioned
     df = spark.range(50).select(
@@ -83,3 +86,103 @@ def test_partition_cardinality_guard(spark, tmp_path):
     with pytest.raises(ValueError, match="distinct values"):
         validate_partitioned(spark, df, {"properties": {}}, "p",
                              str(tmp_path / "m"), max_partitions=10)
+
+
+def _persistent_rdds(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _capture_pins(monkeypatch):
+    """Record the frame and level of every ``_ckpt.pin`` call."""
+    from boon_spark.operators import _ckpt
+    pins, real = [], _ckpt.pin
+
+    def spy(df, level=None):
+        out = real(df, level)
+        pins.append((out, level))
+        return out
+    monkeypatch.setattr(_ckpt, "pin", spy)
+    return pins
+
+
+def test_violations_path_pins_one_narrow_frame(spark, tmp_path, monkeypatch):
+    # the write and the metrics aggregate share ONE evaluation of the
+    # projection; the pin never carries the input's wide columns
+    pins = _capture_pins(monkeypatch)
+    validate_partitioned(spark, _df(spark), SPEC, "source",
+                         str(tmp_path / "m"),
+                         violations_path=str(tmp_path / "v"),
+                         row_id="doc_id")
+    assert len(pins) == 1
+    df, level = pins[0]
+    assert df.columns == ["source", "valid", "violations",
+                          "violation_count"]
+    assert level == StorageLevel.MEMORY_AND_DISK
+
+
+def test_no_violations_path_pins_nothing(spark, tmp_path, monkeypatch):
+    # the metrics aggregate is then the only consumer
+    pins = _capture_pins(monkeypatch)
+    out = validate_partitioned(spark, _df(spark), SPEC, "source",
+                               str(tmp_path / "m"), row_id="doc_id")
+    assert pins == []
+    assert sorted(out["metrics"]) == ["books", "code", "web"]
+
+
+@pytest.mark.parametrize("fail_at", [None, "write", "record"])
+def test_pin_released_before_return(spark, tmp_path, monkeypatch, fail_at):
+    # "write": the violations path is a regular file, so the write fails
+    # (before the pin's blocks are built); "record": the pin is filled
+    # and read when the manifest step raises
+    pins = _capture_pins(monkeypatch)
+    vpath, transform = tmp_path / "v", None
+    if fail_at == "write":
+        vpath.write_text("x")
+    elif fail_at == "record":
+        def transform(p, m):
+            raise RuntimeError("manifest step failed")
+    before = _persistent_rdds(spark)
+    with pytest.raises(Exception) if fail_at else nullcontext():
+        validate_partitioned(spark, _df(spark), SPEC, "source",
+                             str(tmp_path / "m"),
+                             violations_path=str(vpath), row_id="doc_id",
+                             metrics_transform=transform)
+    assert len(pins) == 1
+    assert pins[0][0].storageLevel == StorageLevel.NONE
+    # a set difference, not equality: the context cleaner may drop an
+    # earlier test's unreferenced RDD meanwhile, which is not a leak
+    assert _persistent_rdds(spark) - before == set()
+    # a failed call records nothing
+    assert len(ValidationManifest(str(tmp_path / "m")).entries()) == \
+        (0 if fail_at else 3)
+
+
+def test_metrics_match_engine_flag_with_null_key(spark, tmp_path):
+    # per-partition metrics read off the pin agree with the engine's own
+    # flag aggregate, computed independently over the raw frame — NULL
+    # partition key and multi-violation rows included
+    from boon_spark.engine import Engine
+    from boon_spark.sources.manifest import NULL_PARTITION
+    spec = {"required": ["n_tok"],
+            "properties": {"n_tok": {"minimum": 1, "maximum": 100,
+                                     "multipleOf": 2},
+                           "doc_id": {"pattern": "^d"}}}
+    rows = [(("d" if i % 7 else "x") + str(i),
+             None if i % 11 == 0 else i % 150,
+             [None, "web", "books", "code"][i % 4]) for i in range(400)]
+    df = spark.createDataFrame(rows,
+                               "doc_id string, n_tok int, source string")
+    flag = Engine.from_schema(spec, row_id="doc_id").validate(df) \
+        .flag(by=["source"]).collect()
+    expect = {NULL_PARTITION if r.source is None else r.source:
+              (r.n_rows, r.n_invalid, r.n_violations, r.valid)
+              for r in flag}
+    assert sorted(expect) == [NULL_PARTITION, "books", "code", "web"]
+    assert any(n_viol > n_inv for _, n_inv, n_viol, _ in expect.values())
+    for vpath in (str(tmp_path / "v"), None):
+        out = validate_partitioned(spark, df, spec, "source",
+                                   str(tmp_path / f"m{vpath is None}"),
+                                   violations_path=vpath, row_id="doc_id")
+        got = {p: (m["n_rows"], m["n_invalid"], m["n_violations"],
+                   m["valid"]) for p, m in out["metrics"].items()}
+        assert got == expect, vpath

@@ -173,6 +173,41 @@ def test_manifest_batch_replay_is_idempotent(spark, tmp_path):
     assert snapshot() == (after, viols_after)
 
 
+def test_manifest_batch_handler_leaves_no_pins(spark, tmp_path,
+                                              monkeypatch):
+    # every micro-batch pins its annotated frame once (write + metrics)
+    # and releases it before the handler returns; a replay pins nothing
+    from boon_spark.operators import _ckpt
+    from boon_spark.streaming.validate_stream import manifest_batch_handler
+
+    pins, real = [], _ckpt.pin
+
+    def spy(df, level=None):
+        pins.append(level)
+        return real(df, level)
+    monkeypatch.setattr(_ckpt, "pin", spy)
+    handle = manifest_batch_handler(
+        SPEC, partition_col="source", manifest_path=str(tmp_path / "m"),
+        violations_path=str(tmp_path / "v"), row_id="doc_id",
+        run_id="test-run")
+    b0 = spark.createDataFrame(
+        [(f"d{i}", i + 80, ["web", "books"][i % 2]) for i in range(40)],
+        "doc_id string, n_tok int, source string")
+    b1 = spark.createDataFrame(
+        [("dX", 999, "web")], "doc_id string, n_tok int, source string")
+
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    for batch, batch_id, n_pins in ((b0, 0, 1), (b0, 0, 1), (b1, 1, 2),
+                                    (b1, 1, 2)):
+        before = persistent()
+        handle(batch, batch_id)
+        assert len(pins) == n_pins
+        # a set difference: the context cleaner may drop an unrelated
+        # unreferenced RDD meanwhile, which is not a leak
+        assert persistent() - before == set(), f"batch {batch_id} leaked"
+
+
 def test_manifest_new_run_batch_zero_is_not_a_replay(spark, tmp_path):
     # ADVICE r3: batch ids are per-checkpoint.  A manifest that outlives
     # its checkpoint sees the NEW query's batch 0 with the same batch_id
