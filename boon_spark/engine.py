@@ -25,7 +25,7 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .plans.builder import PlanBuilder, empty_viols
+from .plans.builder import PlanBuilder
 from .schema import CompiledSchema, compile_schema
 
 
@@ -74,22 +74,15 @@ class Engine:
         """Build (valid, violations) Columns against ``df``'s schema —
         for embedding checks into a caller's own select().  Hoisting is
         disabled (no staging projection exists to carry prelude columns);
-        prefer :meth:`annotate` for content-heavy schemas."""
+        prefer :meth:`annotate` for content-heavy schemas.  ``violations``
+        is the concatenation of the keywords' NULL-free violation arrays,
+        built only for failing rows."""
         pb = PlanBuilder(df.schema, row_id=self.row_id, allow_hoist=False,
                          base_uri=self.compiled.base_uri)
         valid, viol_arrays = pb.build(
             self.compiled.root, None, None, pb.root_iloc())
-        if viol_arrays:
-            arr = viol_arrays[0] if len(viol_arrays) == 1 \
-                else F.concat(*viol_arrays)
-            # lazy error materialization (boon bool_result,
-            # src/validator.rs:849-855): only failing rows build detail
-            viols = F.when(~F.coalesce(valid, F.lit(False)),
-                           F.filter(arr, lambda v: v.isNotNull())) \
-                .otherwise(empty_viols())
-        else:
-            viols = empty_viols()
-        return F.coalesce(valid, F.lit(False)), viols
+        valid = F.coalesce(valid, F.lit(False))
+        return valid, _detail(pb, ~valid, viol_arrays)
 
     def annotate(self, df: DataFrame) -> DataFrame:
         """Three staged projections, each referencing the previous:
@@ -99,7 +92,9 @@ class Engine:
            whole-stage codegen.
         2. ``_viols`` — violation detail, guarded by ``~valid`` (a cheap
            column reference, so the expensive struct building runs only
-           for failing rows).
+           for failing rows): the concatenation of the keywords'
+           NULL-free violation arrays, no filter lambda, so it stays in
+           generated code except for per-element ``items`` detail.
         3. ``violations``/``violation_count`` — slice + size of ``_viols``.
 
         The stages reference prior aliases more than once, so Catalyst's
@@ -127,14 +122,7 @@ class Engine:
             base = df.select("*", *[c.alias(a)
                                     for a, c in pb.prelude.items()])
         step1 = base.select("*", F.coalesce(valid, F.lit(False)).alias("valid"))
-        if viol_arrays:
-            arr = viol_arrays[0] if len(viol_arrays) == 1 \
-                else F.concat(*viol_arrays)
-            viols = F.when(~F.col("valid"),
-                           F.filter(arr, lambda v: v.isNotNull())) \
-                .otherwise(empty_viols())
-        else:
-            viols = empty_viols()
+        viols = _detail(pb, ~F.col("valid"), viol_arrays)
         step2 = step1.select("*", viols.alias("_viols"))
         return step2.select(
             *df.columns, "valid",
@@ -143,6 +131,16 @@ class Engine:
 
     def validate(self, df: DataFrame) -> "ValidationResult":
         return ValidationResult(self.annotate(df), row_id=self.row_id)
+
+
+def _detail(pb: PlanBuilder, failed: Column, viol_arrays: list) -> Column:
+    """Lazy error materialization (boon bool_result,
+    src/validator.rs:849-855): only failing rows concatenate their
+    keywords' violation arrays."""
+    if not viol_arrays:
+        return pb.empty
+    arr = viol_arrays[0] if len(viol_arrays) == 1 else F.concat(*viol_arrays)
+    return F.when(failed, arr).otherwise(pb.empty)
 
 
 @dataclass

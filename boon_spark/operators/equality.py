@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .invariants import violation, violation_rows
+
 
 def check_equality(cur: DataFrame, ref: DataFrame, *, key: str = "doc_id",
                    columns: list[str] | None = None) -> DataFrame:
@@ -32,24 +34,15 @@ def check_equality(cur: DataFrame, ref: DataFrame, *, key: str = "doc_id",
     joined = cur.select(key, *columns).join(r, on=key, how="left")
 
     present = F.col("_ref_present").isNotNull()
-    checks = [F.when(~present, F.struct(
-        F.concat(F.lit("/"), F.col(key).cast("string"))
-        .alias("instance_location"),
-        F.lit("/x-equality/_missing").alias("keyword_location"),
-        F.lit("key missing from reference").alias("error")))]
+    row = F.concat(F.lit("/"), F.col(key).cast("string"))
+    checks = [violation(~present, row, "/x-equality/_missing",
+                        "key missing from reference")]
     for c in columns:
         mismatch = present & ~F.col(c).eqNullSafe(F.col(f"_ref_{c}"))
-        checks.append(F.when(mismatch, F.struct(
-            F.concat(F.lit("/"), F.col(key).cast("string"),
-                     F.lit(f"/{c}")).alias("instance_location"),
-            F.lit(f"/x-equality/{c}").alias("keyword_location"),
-            F.lit(f"value differs from reference for column '{c}'")
-            .alias("error"))))
-    arr = F.filter(F.array(*checks), lambda v: v.isNotNull())
-    return (joined.select(arr.alias("_viols"))
-            .filter(F.size("_viols") > 0)
-            .select(F.explode("_viols").alias("v"))
-            .select("v.instance_location", "v.keyword_location", "v.error"))
+        checks.append(violation(
+            mismatch, F.concat(row, F.lit(f"/{c}")), f"/x-equality/{c}",
+            f"value differs from reference for column '{c}'"))
+    return violation_rows(joined, checks)
 
 
 def snapshot_diff(old: DataFrame, new: DataFrame, *, key: str = "doc_id",

@@ -9,8 +9,30 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def violation(fail: Column, iloc: Column, keyword_location: str,
+              error: str) -> Column:
+    """A one-row violation array when ``fail``, else the empty array.
+    Never an array holding NULL, so no filter lambda has to strip one
+    and the projection stays in whole-stage codegen."""
+    return F.when(fail, F.array(F.struct(
+        iloc.alias("instance_location"),
+        F.lit(keyword_location).alias("keyword_location"),
+        F.lit(error).alias("error")))).otherwise(F.array().cast(
+            "array<struct<instance_location:string,"
+            "keyword_location:string,error:string>>"))
+
+
+def violation_rows(df: DataFrame, arrays: list[Column]) -> DataFrame:
+    """One row per violation in the concatenation of ``arrays``."""
+    arr = F.concat(*arrays) if len(arrays) > 1 else arrays[0]
+    return (df.select(arr.alias("_viols"))
+            .filter(F.size("_viols") > 0)
+            .select(F.explode("_viols").alias("v"))
+            .select("v.instance_location", "v.keyword_location", "v.error"))
 
 
 def check_invariants(df: DataFrame, invariants: list[dict], *,
@@ -20,16 +42,8 @@ def check_invariants(df: DataFrame, invariants: list[dict], *,
     iloc = (F.concat(F.lit("/"), F.coalesce(F.col(row_id).cast("string"),
                                             F.lit("?")))
             if row_id else F.lit("/"))
-    structs = []
-    for inv in invariants:
-        name, expr = inv["name"], inv["expr"]
-        ok = F.coalesce(F.expr(expr), F.lit(False))
-        structs.append(F.when(~ok, F.struct(
-            iloc.alias("instance_location"),
-            F.lit(f"/x-invariants/{name}").alias("keyword_location"),
-            F.lit(f"invariant failed: {expr}").alias("error"))))
-    arr = F.filter(F.array(*structs), lambda v: v.isNotNull())
-    return (df.select(arr.alias("_viols"))
-            .filter(F.size("_viols") > 0)
-            .select(F.explode("_viols").alias("v"))
-            .select("v.instance_location", "v.keyword_location", "v.error"))
+    return violation_rows(df, [
+        violation(~F.coalesce(F.expr(inv["expr"]), F.lit(False)), iloc,
+                  f"/x-invariants/{inv['name']}",
+                  f"invariant failed: {inv['expr']}")
+        for inv in invariants])

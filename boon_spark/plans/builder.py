@@ -12,13 +12,19 @@ Violation rows mirror boon's basic-output units
 error)`` with boon's exact message wording (``src/lib.rs:560-698``, see
 ``errors.MESSAGES``).  Like boon's lazy error materialization
 (``bool_result``/``vloc``, ``src/validator.rs:849-855,918-925``),
-violation detail is only computed for failing values: each violation struct
-is wrapped in ``F.when(fail, ...)`` so passing rows carry NULLs that are
-filtered out in the final ``F.filter``.
+violation detail is only computed for failing values: each keyword's
+violation array is ``F.when(fail, array(struct)).otherwise(<empty>)``, so
+every array is NULL-free and callers ``concat`` them as they are.  No
+NULL-stripping ``filter`` lambda is needed: such a lambda is a
+``CodegenFallback``, so the whole ``concat`` of violation structs under
+it would be evaluated interpreted instead of in generated code.
+Per-element detail (``items``) is guarded by the element's own validity,
+so only failing elements build structs.
 """
 
 from __future__ import annotations
 
+import math
 import re
 from functools import reduce
 from operator import and_, or_
@@ -38,10 +44,6 @@ VIOL_STRUCT = ("struct<instance_location:string,"
 VIOL_ARRAY = f"array<{VIOL_STRUCT}>"
 
 _TRUE = None  # sentinel meaning "statically always valid" — lets us prune
-
-
-def empty_viols() -> Column:
-    return F.array().cast(VIOL_ARRAY)
 
 
 def _type_depth(dt: Optional[T.DataType]) -> int:
@@ -184,6 +186,9 @@ class PlanBuilder:
         # the plan-time analogue of boon's runtime infinite-loop guard
         # (src/validator.rs:107-115,999-1011).
         self._force_depths: dict[tuple, int] = {}
+        # the empty violation array, built once: every keyword that does
+        # not fail contributes it, and each construction is a py4j call
+        self.empty = F.array().cast(VIOL_ARRAY)
 
     def _hoist(self, name: str, expr: Column) -> Column:
         """Register an expression for the prelude projection and return a
@@ -205,7 +210,8 @@ class PlanBuilder:
 
     def _viol(self, fail: Column, kw_loc: str, iloc: Column,
               msg: Column) -> Column:
-        """One scalar check → array with a single (nullable) struct.
+        """One scalar check → a one-struct array when ``fail``, else the
+        empty array (never an array holding a NULL).
         ``absoluteKeywordLocation`` (boon ``src/output.rs:416-445``) is
         the dereferenced keyword pointer — the use-site prefix of the
         current node swapped for its definition-site pointer — prefixed
@@ -218,11 +224,11 @@ class PlanBuilder:
         # explicit flag, NOT a '#'-substring test — property names may
         # legally contain '#'.)
         full = f"{cur_uri or self.base_uri}#{abs_kw}"
-        return F.array(F.when(fail, F.struct(
+        return F.when(fail, F.array(F.struct(
             iloc.alias("instance_location"),
             F.lit(kw_loc).alias("keyword_location"),
             F.lit(full).alias("absolute_keyword_location"),
-            msg.alias("error"))))
+            msg.alias("error")))).otherwise(self.empty)
 
     @staticmethod
     def _fail(value: Optional[Column], pred: Column) -> Column:
@@ -494,7 +500,7 @@ class PlanBuilder:
             valids.append(F.coalesce(ok, F.lit(False)))
             for va in e_viols:
                 viols.append(F.when(value.isNotNull() & (sz > i), va)
-                             .otherwise(empty_viols()))
+                             .otherwise(self.empty))
 
         items = _peek(node.items)
         if items is not None and not items.is_trivial_true():
@@ -505,7 +511,7 @@ class PlanBuilder:
             # whole validity projection inside whole-stage codegen
             # (higher-order-function lambdas fall out of codegen and are
             # interpreted per element, ~10x slower at scale)
-            fast = _range_only_valid(items, et, rest)
+            fast = _range_only_valid(items, dtype, rest)
             if fast is not None:
                 valid_all = fast
             else:
@@ -517,17 +523,20 @@ class PlanBuilder:
             fail = F.coalesce(value.isNotNull() & ~valid_all, F.lit(False))
             valids.append(~fail)
             # per-element violation detail with the element index in the
-            # instance pointer (boon item! macro, src/validator.rs:13-17)
+            # instance pointer (boon item! macro, src/validator.rs:13-17),
+            # guarded by the element's own validity like the row-level
+            # ~valid guard: a passing element builds no structs
             def elem_viols(x, i):
                 e_iloc = F.concat(iloc, F.lit("/"), (i + npfx).cast("string"))
-                _, evs = self.build(node.items, et, x, e_iloc)
+                e_ok, evs = self.build(node.items, et, x, e_iloc)
                 if not evs:
-                    return empty_viols()
-                return F.concat(*evs) if len(evs) > 1 else evs[0]
+                    return self.empty
+                return F.when(F.coalesce(e_ok, F.lit(False)), self.empty) \
+                    .otherwise(F.concat(*evs) if len(evs) > 1 else evs[0])
             self._lambda_depth += 1
             per_elem = F.flatten(F.transform(rest, elem_viols))
             self._lambda_depth -= 1
-            viols.append(F.when(fail, per_elem).otherwise(empty_viols()))
+            viols.append(F.when(fail, per_elem).otherwise(self.empty))
 
         if node.unevaluated_items is not None and node.items is None:
             # runtime annotation flow (2020-12; boon's Uneval merge,
@@ -553,7 +562,7 @@ class PlanBuilder:
                         F.lit("last "), (sz - npfx).cast("string"),
                         F.lit(" unevaluatedItems not allowed")))
                 elif isinstance(sub, Node) and not sub.is_trivial_true():
-                    fast = _range_only_valid(sub, et, rest)
+                    fast = _range_only_valid(sub, dtype, rest)
                     if fast is not None:
                         u_ok = fast
                     else:
@@ -716,7 +725,7 @@ class PlanBuilder:
                 # ContentSchema error; detailed_tree re-nests them)
                 sub = sub_viols[0] if len(sub_viols) == 1 \
                     else F.concat(*sub_viols)
-                viols.append(F.when(fail, sub).otherwise(empty_viols()))
+                viols.append(F.when(fail, sub).otherwise(self.empty))
 
     # ---------------------------------------------------------- unevaluated
     def _branch_valid(self, s: Node, dtype, value: Optional[Column],
@@ -964,7 +973,7 @@ class PlanBuilder:
         def guard_viols(va: Column) -> Column:
             if is_row:
                 return va
-            return F.when(value.isNotNull(), va).otherwise(empty_viols())
+            return F.when(value.isNotNull(), va).otherwise(self.empty)
 
         # required (src/validator.rs:214-219): SQL NULL models absence
         if node.required:
@@ -1061,7 +1070,7 @@ class PlanBuilder:
                         .otherwise(F.lit(True))
                     valids.append(F.coalesce(guard(ok), F.lit(False)))
                     viols.extend(
-                        guard_viols(F.when(not_ev, x).otherwise(empty_viols()))
+                        guard_viols(F.when(not_ev, x).otherwise(self.empty))
                         for x in vs2)
 
         if node.dependent_schemas:
@@ -1162,7 +1171,7 @@ class PlanBuilder:
                 v, vs = self.build(sub, vt, value.getItem(name), c_iloc)
                 valids.append(F.coalesce(guard(v), F.lit(False)))
                 viols.extend(F.when(value.isNotNull(), x)
-                             .otherwise(empty_viols()) for x in vs)
+                             .otherwise(self.empty) for x in vs)
         # map keys are RUNTIME values — patternProperties/
         # additionalProperties/propertyNames become higher-order-function
         # checks over map_keys/map_filter (SURVEY §2.2 map mappings),
@@ -1346,9 +1355,9 @@ class PlanBuilder:
             valids.append(F.when(cond, F.coalesce(then_v, F.lit(False)))
                           .otherwise(F.coalesce(else_v, F.lit(False))))
             t_arr = (F.concat(*then_vs) if len(then_vs) > 1
-                     else (then_vs[0] if then_vs else empty_viols()))
+                     else (then_vs[0] if then_vs else self.empty))
             e_arr = (F.concat(*else_vs) if len(else_vs) > 1
-                     else (else_vs[0] if else_vs else empty_viols()))
+                     else (else_vs[0] if else_vs else self.empty))
             viols.append(F.when(cond, t_arr).otherwise(e_arr))
 
 
@@ -1417,7 +1426,7 @@ def _py_string_check(node: Node, s: str, _seen: frozenset = frozenset()) -> bool
     return bool(ok)
 
 
-def _range_only_valid(items: Node, et: T.DataType,
+def _range_only_valid(items: Node, dtype: T.ArrayType,
                       arr: Column) -> Optional[Column]:
     """If the element subschema is only numeric range checks (+ an integer/
     number type assertion on an integer-typed column), compile the
@@ -1425,6 +1434,7 @@ def _range_only_valid(items: Node, et: T.DataType,
     forall lambda.  Equivalent because range predicates are monotone:
     every element in [lo, hi] ⇔ min ≥ lo and max ≤ hi.  NULL elements are
     handled separately (array_min/max skip NULLs)."""
+    et = dtype.elementType
     if items.boolean is not None or items.properties or items.required \
             or items.pattern or items.format or items.enum or items.has_const \
             or items.all_of or items.any_of or items.one_of or items.not_ \
@@ -1448,15 +1458,10 @@ def _range_only_valid(items: Node, et: T.DataType,
     if items.types is not None:
         if not ({"integer", "number"} & set(items.types)):
             return None
-        if "null" not in items.types:
+        if "null" not in items.types and dtype.containsNull:
             # a NULL element must fail the type check, but array_min/max
-            # skip NULLs.  NOTE: array_compact would be the obvious probe,
-            # but it rewrites to a higher-order filter() and knocks the
-            # whole projection out of whole-stage codegen.  sort_array
-            # stays codegen'd and puts NULLs first in ascending order, so
-            # a NULL head ⇔ some element is NULL.
-            checks.append((F.size(arr) == 0) |
-                          F.get(F.sort_array(arr), 0).isNotNull())
+            # skip NULLs (a containsNull=false column needs no probe)
+            checks.append(_no_null_element(items, et, arr))
     if items.minimum is not None:
         checks.append(F.array_min(arr) >= F.lit(items.minimum))
     if items.exclusive_minimum is not None:
@@ -1471,6 +1476,47 @@ def _range_only_valid(items: Node, et: T.DataType,
     # which pass range keywords (applicability) → coalesce to True.
     # (false AND NULL = false in SQL, so a real failure is never masked.)
     return F.coalesce(reduce(and_, checks), F.lit(True))
+
+
+_INT_BITS = {T.ByteType: 8, T.ShortType: 16, T.IntegerType: 32,
+             T.LongType: 64}
+
+
+def _excluded_int(items: Node, et: T.DataType) -> Optional[int]:
+    """An integer of element type ``et`` that the subschema's own range
+    bounds reject, or None when no bound yields one that fits."""
+    bits = _INT_BITS.get(type(et))
+    if bits is None:
+        return None
+    lo, hi = -(1 << (bits - 1)), (1 << (bits - 1)) - 1
+    for bound, pick in ((items.exclusive_maximum, math.ceil),
+                        (items.maximum, lambda b: math.floor(b) + 1),
+                        (items.minimum, lambda b: math.ceil(b) - 1),
+                        (items.exclusive_minimum, math.floor)):
+        if bound is None or (isinstance(bound, float)
+                             and not math.isfinite(bound)):
+            continue
+        s = pick(bound)
+        # a float bound compares in double: past 2^53 the sentinel could
+        # round onto the bound and stop being excluded
+        if lo <= s <= hi and (isinstance(bound, int) or abs(s) <= 1 << 53):
+            return s
+    return None
+
+
+def _no_null_element(items: Node, et: T.DataType, arr: Column) -> Column:
+    """True ⇔ ``arr`` holds no NULL element, as a codegen'd expression.
+    ``arrays_overlap(arr, [s])`` is NULL exactly when ``arr`` holds a NULL
+    and not ``s`` — one O(n) pass.  ``s`` is excluded by the element
+    bounds, so an array that does hold ``s`` fails the range check anyway
+    and the verdict stays exact.  Without a usable bound: ``sort_array``
+    puts NULLs first, so a NULL head ⇔ some element is NULL (O(n log n),
+    still codegen'd — ``array_compact``/``forall`` would be
+    higher-order functions and knock the projection out of codegen)."""
+    s = _excluded_int(items, et)
+    if s is None:
+        return (F.size(arr) == 0) | F.get(F.sort_array(arr), 0).isNotNull()
+    return F.arrays_overlap(arr, F.array(F.lit(s).cast(et))).isNotNull()
 
 
 def _fmt_num(x) -> str:

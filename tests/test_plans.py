@@ -46,6 +46,53 @@ def test_validity_projection_is_codegen(spark, seq):
     assert "array_min" in valid_line and "array_max" in valid_line
 
 
+@pytest.fixture(scope="module")
+def seq_parquet(spark, seq, tmp_path_factory):
+    # a parquet round-trip makes the token elements nullable
+    # (containsNull=true), so the NULL-element probe is planned
+    p = str(tmp_path_factory.mktemp("seq") / "seq.parquet")
+    seq.write.parquet(p)
+    df = spark.read.parquet(p)
+    assert df.schema["tokens"].dataType.containsNull
+    return df
+
+
+def _project_line(plan: str, marker: str) -> str:
+    return [ln for ln in plan.splitlines()
+            if "Project" in ln and marker in ln][0]
+
+
+def test_null_element_probe_is_linear_and_codegen(spark, seq_parquet):
+    # the NULL-element probe over nullable tokens is one arrays_overlap
+    # pass against a sentinel the items bounds exclude, not a per-row
+    # sort_array, and the valid projection stays whole-stage codegen'd
+    eng = Engine.from_schema(sequences_spec(), row_id="doc_id")
+    valid_line = _project_line(
+        _plan(eng.annotate(seq_parquet).select("valid")), "AS valid")
+    assert valid_line.lstrip(" +-:").startswith("*")
+    assert "sort_array" not in valid_line
+    assert "arrays_overlap" in valid_line
+
+
+def test_violation_stage_has_no_null_filter(spark, seq_parquet):
+    # keyword violation arrays are NULL-free, so no filter lambda strips
+    # NULL structs off the concatenated detail
+    eng = Engine.from_schema(sequences_spec(), row_id="doc_id")
+    viol_line = _project_line(_plan(eng.annotate(seq_parquet)), "AS _viols")
+    assert "CASE WHEN NOT valid" in viol_line
+    assert "filter(" not in viol_line
+
+
+def test_table_checks_have_no_lambdas(spark, seq_parquet):
+    from boon_spark.operators.equality import check_equality
+    from boon_spark.operators.invariants import check_invariants
+    inv = check_invariants(seq_parquet, sequences_spec()["invariants"],
+                           row_id="doc_id")
+    eq = check_equality(seq_parquet, seq_parquet, key="doc_id")
+    assert "lambdafunction" not in _plan(inv)
+    assert "lambdafunction" not in _plan(eq)
+
+
 def test_column_pruning_reaches_scan(spark, tmp_path):
     p = str(tmp_path / "docs.parquet")
     spark.createDataFrame(
