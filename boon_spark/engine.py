@@ -70,20 +70,6 @@ class Engine:
                    content_causes=content_causes)
 
     # ------------------------------------------------------------------
-    def check_columns(self, df: DataFrame) -> tuple[Column, Column]:
-        """Build (valid, violations) Columns against ``df``'s schema —
-        for embedding checks into a caller's own select().  Hoisting is
-        disabled (no staging projection exists to carry prelude columns);
-        prefer :meth:`annotate` for content-heavy schemas.  ``violations``
-        is the concatenation of the keywords' NULL-free violation arrays,
-        built only for failing rows."""
-        pb = PlanBuilder(df.schema, row_id=self.row_id, allow_hoist=False,
-                         base_uri=self.compiled.base_uri)
-        valid, viol_arrays = pb.build(
-            self.compiled.root, None, None, pb.root_iloc())
-        valid = F.coalesce(valid, F.lit(False))
-        return valid, _detail(pb, ~valid, viol_arrays)
-
     def annotate(self, df: DataFrame) -> DataFrame:
         """Three staged projections, each referencing the previous:
 

@@ -748,59 +748,21 @@ def embedding_near_dups_quantized(df: DataFrame, *,
     candidate pairs share a signature bucket (capped at ``max_bucket``);
     the verify is the squared-cosine inequality
     ``dot>0 AND den²·dot² ≥ num²·‖a‖²·‖b‖²`` — cosine ≥ num/den without
-    ever dividing or square-rooting.  Bounds: |x|≤1, dim≤128, q_bits≤10
-    keep ``den²·dot²`` under 2^63 for den ≤ 5."""
-    import numpy as np
+    ever dividing or square-rooting.  Clean rows, quantization,
+    signatures and norms come from the one kernel the quantized LSH
+    shares (``similarity._quantized_sig_frame``, no ``coord_bound``):
+    ragged and NULL-element rows are excluded, zero vectors are kept,
+    and a NaN/Inf coordinate or a batch whose int64 projections or
+    norms could overflow raises ``ValueError`` there.  The verify's
+    ``den²·dot²`` is JVM long arithmetic: |x|≤1, dim≤128, q_bits≤10 keep
+    it under 2^63 for den ≤ 5, and past that ANSI mode (Spark 4's
+    default) fails the job instead of wrapping."""
+    from .similarity import _quantized_sig_frame
 
     planes = quantized_planes(dim, bits, seed, q_bits)
-    scale = 1 << q_bits
-    # ragged/null-poisoned vectors must be EXCLUDED identically in both
-    # engines: Spark's zip_with pads short arrays with NULL and the
-    # integer dot then NULL-poisons (pair silently dropped), while
-    # DuckDB's list_sum SKIPS NULLs (partial dot that can pass) — the
-    # guard keeps the bit-identical contract on malformed rows.  It
-    # stays an EXPRESSION filter (before the fused UDF) because Arrow
-    # hands array<double> NULL elements to Python as NaN — only the JVM
-    # side can still tell a NULL element from a genuine NaN.
-    clean = (F.size(F.col(vec_col)) == dim) & \
-        (F.size(F.filter(F.col(vec_col), lambda x: x.isNull())) == 0)
-
-    # quantize + signature + squared norm in ONE numpy pass per row
-    # (the lsh_topk_quantized / _quantized_sig_frame shape, pinned
-    # bit-identical to the expression form by
-    # test_near_dups_fused_matches_expression): int64 matmul against
-    # the same integer planes replaces ~bits·dim interpreted HOF nodes,
-    # and the norms ride the candidate join instead of being re-derived
-    # per pair.  Bounds per the docstring keep every product exact in
-    # int64.  Genuine NaN/Inf coordinates raise loudly — the expression
-    # form's ANSI long cast aborts the job on those same rows.
-    pl = np.array(planes, dtype=np.int64)
-    pw = np.left_shift(np.int64(1), np.arange(bits, dtype=np.int64))
-
-    @F.pandas_udf("struct<qv: array<bigint>, sig: bigint, nrm: bigint>")
-    def _qsn(vec: pd.Series) -> pd.DataFrame:
-        qvs, sigs, nrms = [], [], []
-        for v in vec:
-            arr = np.asarray(v, dtype=np.float64) * scale
-            if (not np.isfinite(arr).all()
-                    or (np.abs(arr) >= 2.0 ** 63).any()):
-                raise ValueError(
-                    "embedding_near_dups_quantized: non-finite or "
-                    "int64-overflowing coordinate after quantization — "
-                    "the ANSI long cast fails these rows loudly, and so "
-                    "does the fused path")
-            q = np.floor(arr).astype(np.int64)
-            qvs.append(q)
-            sigs.append(int(pw[(pl @ q) >= 0].sum()))
-            nrms.append(int((q * q).sum()))
-        return pd.DataFrame({"qv": qvs, "sig": sigs, "nrm": nrms})
-
-    base = (df.filter(clean)
-            .select(F.col(id_col).alias("_id"),
-                    _qsn.asNondeterministic()(F.col(vec_col)).alias("_s"))
-            .select("_id", F.col("_s.qv").alias("_qv"),
-                    F.col("_s.sig").alias("_sig"),
-                    F.col("_s.nrm").alias("_nrm")))
+    base = _quantized_sig_frame(df, out_id="_id", id_col=id_col,
+                                vec_col=vec_col, dim=dim, q_bits=q_bits,
+                                coord_bound=None, planes=planes, bits=bits)
     # persist: the signed frame feeds the bucket-size agg AND both join
     # sides, across broadcast boundaries where no ReusedExchange forms
     # (r5 law) — without it the corpus is quantized and signed three

@@ -296,10 +296,9 @@ def _idot(x: Column, y: Column) -> Column:
 
 def _quantized_sig_of(qcol: Column, planes: list[list[int]],
                       bits: int) -> Column:
-    """Integer-plane SimHash signature of a quantized vector — shared by
-    :func:`lsh_topk_quantized` and its bucket-stats audit so the audited
-    buckets ARE the join's buckets (a drifted copy would count buckets
-    the join never formed)."""
+    """Integer-plane SimHash signature of a quantized vector, as
+    expressions — the reference :func:`_quantized_sig_frame` is pinned
+    bit-identical to in the tests (the kernel itself is numpy)."""
     s = None
     for b in range(bits):
         pl = F.array(*[F.lit(p).cast("long") for p in planes[b]])
@@ -313,10 +312,10 @@ def _quantized_sig_of(qcol: Column, planes: list[list[int]],
 
 def _quantized_clean_qv(vec_col: str, dim: int, q_bits: int,
                         coord_bound: float) -> tuple[Column, Column]:
-    """(clean-row predicate, quantized-vector column) shared by the
-    quantized join and its stats companion: rows that are ragged, hold
-    NULL elements, or exceed ``coord_bound`` are excluded identically in
-    both (and in the generated oracles)."""
+    """(clean-row predicate, quantized-vector column) as expressions —
+    the reference for :func:`_quantized_sig_frame`'s clean filter and
+    quantization (ragged, NULL-element and out-of-bound rows excluded,
+    as in the generated oracles)."""
     scale = 1 << q_bits
     qv = F.transform(F.col(vec_col),
                      lambda x: F.floor(x * F.lit(scale)).cast("long"))
@@ -329,56 +328,71 @@ def _quantized_clean_qv(vec_col: str, dim: int, q_bits: int,
 
 def _quantized_sig_frame(df: DataFrame, *, out_id: str | None,
                          id_col: str, vec_col: str, dim: int,
-                         q_bits: int, coord_bound: float,
+                         q_bits: int, coord_bound: float | None,
                          planes: list[list[int]], bits: int) -> DataFrame:
-    """``(out_id?, _qv, _sig, _nrm)`` — the clean-filter + quantize +
-    integer-plane signature + squared-norm pipeline as ONE numpy Arrow
-    UDF (r7): bit-identical to ``_quantized_clean_qv`` +
-    ``_quantized_sig_of`` + ``_idot`` (pinned in test_similarity_ids)
-    — floor of a power-of-two multiply, int64 matmul against the same
-    integer planes, int64 norms — but a single vectorized pass instead
-    of ~bits·dim interpreted HOF nodes per row, and the signature/norm
-    are computed ONCE per row instead of re-deriving norms per joined
-    pair.  Unclean rows (ragged / NULL element / out-of-bound / zero
-    norm) yield NULL and are filtered; the UDF is nondeterministic-
-    marked so the filter cannot clone it (guide §4.4)."""
+    """``(out_id?, _qv, _sig, _nrm)`` — the ONE quantize + integer-plane
+    signature + squared-norm kernel (``lsh_topk_quantized``,
+    ``lsh_quantized_bucket_stats``, ``dedup.embedding_near_dups_quantized``),
+    bit-identical to ``_quantized_clean_qv`` + ``_quantized_sig_of`` +
+    ``_idot`` (pinned in test_similarity_ids): one numpy pass per Arrow
+    batch — floor of a power-of-two multiply, one int64 matmul against
+    the integer planes, int64 norms that ride the joins.
+
+    Clean rows are chosen by an EXPRESSION filter before the UDF: ``dim``
+    elements, no NULL element.  Ragged and NULL-poisoned vectors must be
+    excluded identically in both engines (Spark's ``zip_with`` pads a
+    short array with NULL and the integer dot NULL-poisons; DuckDB's
+    ``list_sum`` skips NULLs and a partial dot can pass), and only the
+    JVM can tell a NULL element from a NaN: Arrow hands both to Python
+    as NaN.  ``coord_bound`` is the policy switch:
+
+    - given (LSH): rows with any ``|x| > coord_bound`` are excluded too
+      (Spark's NaN compares above every bound, so NaN rows go with
+      them), and so are zero-norm rows — the rank key divides by it;
+    - ``None`` (near-dups): zero-norm rows are kept (its oracle counts
+      them in the bucket sizes), and a NaN/Inf coordinate raises, as
+      the expression form's ANSI long cast does.
+
+    Overflow raises once per batch: with ``m = max|x·2^q_bits| + 1``
+    every ``|q| ≤ m``, so ``dim·m·max(m, max|plane|) < 2^63`` bounds
+    both the projections and the norms in int64.  The UDF is
+    nondeterministic-marked so the filters cannot clone it (guide
+    §4.4)."""
     import numpy as np
 
-    pl = np.array(planes, dtype=np.int64)
-    scale = 1 << q_bits
-    bound = float(coord_bound)
+    pl_t = np.array(planes, dtype=np.int64).T
     pw = np.left_shift(np.int64(1), np.arange(bits, dtype=np.int64))
+    scale = float(1 << q_bits)
+    pmax = int(np.abs(pl_t).max(initial=0))
 
-    @F.pandas_udf(
-        "struct<qv: array<bigint>, sig: bigint, nrm: bigint>")
+    @F.pandas_udf("struct<qv: array<bigint>, sig: bigint, nrm: bigint>")
     def _ss(vec: pd.Series) -> pd.DataFrame:
-        qvs, sigs, nrms = [], [], []
-        for v in vec:
-            if v is None or len(v) != dim:
-                qvs.append(None); sigs.append(None); nrms.append(None)
-                continue
-            arr = np.asarray(v, dtype=np.float64)
-            if np.isnan(arr).any() or (np.abs(arr) > bound).any():
-                qvs.append(None); sigs.append(None); nrms.append(None)
-                continue
-            q = np.floor(arr * scale).astype(np.int64)
-            nrm = int((q * q).sum())
-            if nrm <= 0:
-                qvs.append(None); sigs.append(None); nrms.append(None)
-                continue
-            sig = int(pw[(pl @ q) >= 0].sum())
-            qvs.append(q); sigs.append(sig); nrms.append(nrm)
-        return pd.DataFrame({"qv": qvs, "sig": sigs, "nrm": nrms})
+        x = np.array(vec.tolist(), dtype=np.float64).reshape(-1, dim) * scale
+        if not np.isfinite(x).all():
+            raise ValueError("quantized signature: non-finite coordinate")
+        m = int(np.abs(x).max(initial=0.0)) + 1
+        if dim * m * max(m, pmax) >= (1 << 63):
+            raise ValueError(
+                f"quantized signature: int64 overflow — a coordinate of "
+                f"magnitude {m - 1} after ·2^{q_bits} at dim={dim}; "
+                f"lower q_bits or normalize the vectors")
+        q = np.floor(x).astype(np.int64)
+        return pd.DataFrame({"qv": list(q), "sig": ((q @ pl_t) >= 0) @ pw,
+                             "nrm": (q * q).sum(axis=1)})
 
-    cols = ([F.col(id_col).alias(out_id)] if out_id else [])
-    return (df.select(*cols,
-                      _ss.asNondeterministic()(F.col(vec_col))
-                      .alias("_s"))
-            .filter(F.col("_s.sig").isNotNull())
-            .select(*([out_id] if out_id else []),
-                    F.col("_s.qv").alias("_qv"),
-                    F.col("_s.sig").alias("_sig"),
-                    F.col("_s.nrm").alias("_nrm")))
+    clean = (F.size(F.col(vec_col)) == dim) & (F.size(F.filter(
+        F.col(vec_col),
+        lambda x: x.isNull() if coord_bound is None else
+        x.isNull() | (F.abs(x) > F.lit(float(coord_bound))))) == 0)
+    cols = [F.col(id_col).alias(out_id)] if out_id else []
+    out = (df.filter(clean)
+           .select(*cols, _ss.asNondeterministic()(F.col(vec_col))
+                   .alias("_s"))
+           .select(*([out_id] if out_id else []),
+                   F.col("_s.qv").alias("_qv"),
+                   F.col("_s.sig").alias("_sig"),
+                   F.col("_s.nrm").alias("_nrm")))
+    return out if coord_bound is None else out.filter(F.col("_nrm") > 0)
 
 
 def lsh_topk_quantized(corpus: DataFrame, queries: DataFrame, *, k: int,
@@ -427,13 +441,10 @@ def lsh_topk_quantized(corpus: DataFrame, queries: DataFrame, *, k: int,
             f"int64 — lower q_bits/rank_shift/coord_bound")
     from .dedup import quantized_planes
     planes = quantized_planes(dim, bits, seed)
-    # ragged/null/out-of-bound vectors excluded identically in both
-    # engines (see dedup.embedding_near_dups_quantized NULL-poisoning
-    # note; the coord_bound arm is the overflow contract above).  The
-    # clean + quantize + signature + norm pipeline is ONE numpy Arrow
-    # pass per side (r7 — _quantized_sig_frame, pinned bit-identical to
-    # the expression form), and the norms ride the join instead of
-    # being re-derived per candidate pair.
+    # clean rows, quantization, signatures and norms: the shared kernel
+    # (_quantized_sig_frame — its docstring has the NULL/ragged rationale;
+    # the coord_bound arm is the overflow contract above), once per side,
+    # and the norms ride the join instead of being re-derived per pair.
     c = (_quantized_sig_frame(
             corpus, out_id="neighbor_id", id_col=id_col,
             vec_col=vec_col, dim=dim, q_bits=q_bits,
@@ -594,8 +605,8 @@ def lsh_quantized_bucket_stats(corpus: DataFrame, *, dim: int,
     signatures the quantized join actually buckets by
     (:func:`lsh_bucket_stats` audits the float ``simhash_signature``
     family — a different bucketing; ADVICE r4).  Shares
-    :func:`_quantized_sig_of` and the clean-row predicate with the join,
-    and is integer-exact, so it is DuckDB-oracle-pairable
+    :func:`_quantized_sig_frame` (clean rows + signatures) with the
+    join, and is integer-exact, so it is DuckDB-oracle-pairable
     (:func:`lsh_quantized_bucket_stats_oracle_sql`).  Count-only: the
     shuffle carries (signature, partial count), never embeddings."""
     from .dedup import quantized_planes

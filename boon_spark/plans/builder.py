@@ -149,7 +149,7 @@ class PlanBuilder:
     """
 
     def __init__(self, df_schema: T.StructType, row_id: Optional[str] = None,
-                 *, allow_hoist: bool = True, base_uri: str = "",
+                 *, base_uri: str = "",
                  content_causes: bool = False):
         self.df_schema = df_schema
         self.row_id = row_id
@@ -170,7 +170,6 @@ class PlanBuilder:
         # interpreted projections get no subexpression elimination
         self.prelude: dict[str, Column] = {}
         self._lambda_depth = 0
-        self._allow_hoist = allow_hoist
         # branch-validity memo for the unevaluated* annotation flows:
         # (id(branch_node), id(value)) → Column.  The per-FIELD loop in
         # _object_checks would otherwise rebuild every applicator
@@ -194,7 +193,7 @@ class PlanBuilder:
         """Register an expression for the prelude projection and return a
         reference to it.  Only legal outside lambda bodies (a lambda var
         cannot cross a projection boundary)."""
-        if self._lambda_depth > 0 or not self._allow_hoist:
+        if self._lambda_depth > 0:
             return expr
         alias = f"_bs_{name}_{len(self.prelude)}"
         self.prelude[alias] = expr

@@ -210,6 +210,24 @@ def test_embedding_near_dups_quantized_integer_exact(spark):
     assert got == want
 
 
+@pytest.mark.parametrize("bits", [2, 3, 4])
+def test_embedding_near_dups_quantized_raises_on_int64_overflow(spark, bits):
+    # |x·2^10| ≈ 3e9 is far below 2^63, but row 3's squared norm
+    # (~3.8e19) is not: the kernel must raise, not wrap and drop pairs
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors.exceptions.captured import PythonException
+
+    from boon_spark.operators.dedup import embedding_near_dups_quantized
+    df = spark.createDataFrame(
+        [(1, [0.5, 0.5, 0.0, 0.1]), (2, [0.5, 0.45, 0.05, 0.1]),
+         (3, [3e6, -3e6, 3e6, -3e6])],
+        "vec_id int, embedding array<double>")
+    with pytest.raises((PythonException, Py4JJavaError),
+                       match="int64 overflow"):
+        embedding_near_dups_quantized(df, dim=4, threshold_num=9,
+                                      threshold_den=10, bits=bits).collect()
+
+
 def test_simhash_max_bucket_caps_degenerate(spark):
     # 30 exact duplicates (of an unrelated text) share every chunk; cap 8
     # drops those hot buckets (exact dups are exact_duplicates' job)

@@ -1,5 +1,6 @@
 """cosine_topk must handle non-numeric id columns (string doc_ids)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from boon_spark.operators._ckpt import scope
@@ -366,19 +367,8 @@ def test_ivf_topk_ragged_seed_does_not_poison_dim(spark):
     assert all(r.neighbor_id < 1000 for r in out)
 
 
-def test_quantized_sig_frame_matches_expression(spark):
-    # r7: the clean+quantize+signature+norm pipeline is one numpy Arrow
-    # UDF; pin bit-equality against the expression reference on the
-    # edges: clean rows, ragged, NULL element, out-of-bound coordinate,
-    # zero vector (norm filter), negative coords
-    from pyspark.sql import functions as F
-    from boon_spark.operators.dedup import quantized_planes
-    from boon_spark.operators.similarity import (_idot,
-                                                 _quantized_clean_qv,
-                                                 _quantized_sig_frame,
-                                                 _quantized_sig_of)
-    dim, bits, q_bits, cb, seed = 8, 4, 6, 1.0, 42
-    rows = [
+_SIG_FRAME_ROWS = {
+    "mixed": [
         (0, [0.1, -0.2, 0.3, 0.5, -0.9, 1.0, -1.0, 0.25]),
         (1, [0.1] * 7),                     # ragged
         (2, [0.1, None, 0.3, 0.5, -0.9, 1.0, -1.0, 0.25]),  # NULL elem
@@ -386,7 +376,29 @@ def test_quantized_sig_frame_matches_expression(spark):
         (4, [0.0] * 8),                     # zero norm
         (5, [-0.5, 0.5, -0.25, 0.125, 0.75, -0.75, 0.99, -0.99]),
         (6, None),
-    ]
+    ],
+    "all_unclean": [                        # both sides return no rows
+        (1, [0.1] * 7),
+        (2, [0.1, None, 0.3, 0.5, -0.9, 1.0, -1.0, 0.25]),
+        (6, None),
+    ],
+}
+
+
+@pytest.mark.parametrize("case", sorted(_SIG_FRAME_ROWS))
+def test_quantized_sig_frame_matches_expression(spark, case):
+    # r7: the clean+quantize+signature+norm pipeline is one numpy Arrow
+    # UDF; pin bit-equality against the expression reference on the
+    # edges: clean rows, ragged, NULL element, out-of-bound coordinate,
+    # zero vector (norm filter), negative coords, and an all-unclean frame
+    from pyspark.sql import functions as F
+    from boon_spark.operators.dedup import quantized_planes
+    from boon_spark.operators.similarity import (_idot,
+                                                 _quantized_clean_qv,
+                                                 _quantized_sig_frame,
+                                                 _quantized_sig_of)
+    dim, bits, q_bits, cb, seed = 8, 4, 6, 1.0, 42
+    rows = _SIG_FRAME_ROWS[case]
     df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
     planes = quantized_planes(dim, bits, seed)
     got = {r.vec_id: (list(r._qv), r._sig, r._nrm) for r in
@@ -403,3 +415,23 @@ def test_quantized_sig_frame_matches_expression(spark):
              .withColumn("_nrm", _idot(F.col("_qv"), F.col("_qv")))
              .filter(F.col("_nrm") > 0)).collect()}
     assert got == want, f"{got} != {want}"
+
+
+def _python_udfs(df):
+    import re
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return set(re.findall(r"ArrowEvalPython \[(\w+)\(", plan))
+
+
+def test_quantized_kernel_shared_by_near_dups_and_lsh(spark):
+    # one quantized-signature kernel: the near-dups gate and the LSH
+    # bucket audit must run the SAME Python UDF, so a re-forked copy
+    # (with its own clean/overflow policy) shows up here
+    from boon_spark.operators.dedup import embedding_near_dups_quantized
+    from boon_spark.operators.similarity import lsh_quantized_bucket_stats
+    df = spark.createDataFrame([(1, [0.5, 0.5, 0.0, 0.1])],
+                               "vec_id int, embedding array<double>")
+    with scope():
+        nd = _python_udfs(embedding_near_dups_quantized(df, dim=4, bits=2))
+    st = _python_udfs(lsh_quantized_bucket_stats(df, dim=4, bits=2))
+    assert len(nd) == 1 and nd == st, f"{nd} != {st}"
