@@ -195,11 +195,8 @@ def main(argv=None) -> int:
                 return 1
             from .sources.manifest import validate_partitioned
             out = validate_partitioned(
-                spark, df, spec, args.partition_col, args.manifest,
-                violations_path=args.violations, row_id=args.row_id,
-                loader=ref_loader, assert_format=args.assert_format,
-                assert_content=args.assert_content,
-                default_draft=args.default_draft)
+                spark, df, compiled, args.partition_col, args.manifest,
+                violations_path=args.violations, row_id=args.row_id)
             print(json.dumps({"pending": out["pending"],
                               "skipped": out["skipped"],
                               "metrics": out["metrics"]}, indent=2))

@@ -258,6 +258,11 @@ class CompiledSchema:
     unique: list[list[str]] = field(default_factory=list)
     references: list[dict] = field(default_factory=list)
     invariants: list[dict] = field(default_factory=list)
+    # everything the compile read, for the manifest identity: the spec
+    # itself under default options with no outside resource, else
+    # ``{"spec": ..., <options the spec does not fix>, "fragment": ...,
+    # "resources": {uri: doc}}``
+    identity: Any = None
 
 
 def _expect(cond: bool, loc: str, kw: str, want: str, got: Any) -> None:
@@ -1268,13 +1273,25 @@ def compile_schema(doc: Any, *, resources: Optional[dict] = None,
     assert_format = bool(extra.get("assert_format", assert_format))
     assert_content = bool(extra.get("assert_content", assert_content))
     default_draft = extra.get("default_draft", default_draft)
-    root = Compiler(schema_doc, resources=resources,
-                    loader=loader, assert_format=assert_format,
-                    assert_content=assert_content,
-                    default_draft=default_draft).compile(fragment) \
-        if isinstance(schema_doc, (dict, bool)) else None
-    if root is None:
+    if not isinstance(schema_doc, (dict, bool)):
         raise CompileError("schema must be a dict or boolean")
+    compiler = Compiler(schema_doc, resources=resources,
+                        loader=loader, assert_format=assert_format,
+                        assert_content=assert_content,
+                        default_draft=default_draft)
+    root = compiler.compile(fragment)
+    # an option the spec sets inline is already part of the spec; every
+    # resource document other than the root, pre-supplied or loaded, is
+    # something the compile read
+    read = {k: v for k, v in (("assert_format", assert_format),
+                              ("assert_content", assert_content),
+                              ("default_draft", default_draft),
+                              ("fragment", fragment))
+            if v and k not in extra}
+    used = {u: d for u, d in compiler.resources.items()
+            if d is not schema_doc}
+    if used:
+        read["resources"] = used
     unique = [[c] if isinstance(c, str) else list(c) for c in extra.get("unique", [])]
     base = root_base_uri(schema_doc, default_draft)
     return CompiledSchema(
@@ -1284,4 +1301,5 @@ def compile_schema(doc: Any, *, resources: Optional[dict] = None,
         unique=unique,
         references=list(extra.get("references", [])),
         invariants=list(extra.get("invariants", [])),
+        identity={"spec": doc, **read} if read else doc,
     )

@@ -29,8 +29,18 @@ Design (scale-first):
 * the manifest itself is one tiny parquet file per completed partition,
   written atomically (tmp + rename) on the driver with pyarrow — no Spark
   job, no read-modify-write races, append-only lineage;
-* a manifest entry records the **spec hash**: rerunning with a changed
-  constraint suite invalidates prior completions automatically.
+* a manifest entry records the **spec hash** (:func:`spec_hash` of the
+  compiled schema): it covers the spec, the compile options the spec
+  does not set inline (``assert_format``, ``assert_content``,
+  ``default_draft``), ``fragment`` and every resource document the
+  compile read, pre-supplied or loaded.  Rerunning with a changed
+  constraint suite, option or ``$ref``'d document invalidates prior
+  completions automatically; a spec compiled with default options and
+  no outside resource hashes as the spec alone;
+* the batch report (:func:`validate_partitioned`) and the streaming
+  bridge (``streaming.validate_stream.manifest_batch_handler``) share
+  one annotation pass, :func:`_validate_pending`; each keeps its own
+  policy for which partitions are pending and how entries are written.
 """
 
 from __future__ import annotations
@@ -45,10 +55,18 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..engine import Engine
 from ..operators import _ckpt
+from ..schema import CompiledSchema
 
 
 def spec_hash(spec) -> str:
+    """The manifest identity of a spec dict or a :class:`CompiledSchema`
+    (its ``identity``: the spec plus whatever else the compile read).
+    ``spec_hash(spec) == spec_hash(compile_schema(spec))`` for a spec
+    compiled with default options and no outside resource."""
+    if isinstance(spec, CompiledSchema):
+        spec = spec.identity
     return hashlib.sha256(
         json.dumps(spec, sort_keys=True, default=str).encode()).hexdigest()[:16]
 
@@ -199,27 +217,26 @@ def validate_partitioned(spark: SparkSession, df: DataFrame, spec,
                          partition_col: str, manifest_path: str, *,
                          violations_path: Optional[str] = None,
                          row_id: Optional[str] = None,
-                         max_partitions: int = 100_000,
-                         violations_mode: str = "overwrite",
-                         resources: Optional[dict] = None,
-                         loader=None, assert_format: bool = False,
-                         assert_content: bool = False,
-                         default_draft=None,
-                         partition_rows: Optional[list] = None,
-                         force_pending: Optional[set] = None,
-                         metrics_transform=None,
-                         violations_batch: Optional[str] = None,
-                         replace_entries: bool = False) -> dict:
+                         max_partitions: int = 100_000) -> dict:
     """Validate all pending partitions of ``df``; returns
     ``{"pending": [...], "skipped": [...], "metrics": {partition: {...}}}``.
 
-    Spark work: one scan for the distinct partition keys (skipped when
-    ``partition_rows`` is given), then one annotation pass over the
-    pending partitions.  With ``violations_path`` that pass is the
-    violations write, which fills a narrow persisted pin of (key,
-    ``valid``, ``violations``, ``violation_count``); the metrics
-    aggregate reads the pin, which is released before this returns.
-    Without it, the metrics aggregate is the annotation pass.
+    ``spec`` is a spec dict, compiled once here with its inline options
+    (as :func:`validate_table` does), or a :class:`CompiledSchema`,
+    used as given (the CLI passes the one its ``$ref`` loader built).
+    A partition is complete when an entry carries this schema's
+    :func:`spec_hash`, which covers the spec, the compile options it
+    does not set inline, ``fragment`` and every outside resource
+    document the compile read.  A spec compiled with default options
+    and no outside resource hashes as the spec alone.
+
+    Spark work: one scan for the distinct partition keys, then one
+    annotation pass over the pending partitions.  With
+    ``violations_path`` that pass is the violations write, which fills
+    a narrow persisted pin of (key, ``valid``, ``violations``,
+    ``violation_count``); the metrics aggregate reads the pin, which is
+    released before this returns.  Without it, the metrics aggregate is
+    the annotation pass.
 
     Rerunning after a partial failure (or after
     ``ValidationManifest.invalidate(p)``) recomputes only the partitions
@@ -229,92 +246,74 @@ def validate_partitioned(spark: SparkSession, df: DataFrame, spec,
     partition values: a manifest keyed by a high-cardinality column
     (someone passing ``doc_id``) would otherwise OOM the driver and
     produce a useless million-entry manifest — fail loudly instead.
-
-    The streaming bridge's hooks (batch callers can ignore all five):
-
-    * ``partition_rows`` — pre-collected :func:`collect_partition_rows`
-      output, so a micro-batch is not re-scanned for keys the handler
-      already collected;
-    * ``force_pending`` — validate exactly these partition keys instead
-      of consulting ``manifest.completed`` (replay detection happens in
-      the handler against (run_id, batch_id) stamps; the entries are NOT
-      pre-invalidated, so a crash mid-handler cannot lose the prior
-      cumulative counts);
-    * ``metrics_transform(partition, metrics) -> metrics`` — applied
-      before each entry is recorded (the handler merges prior cumulative
-      counts and stamps the (run_id, batch_id) pair HERE, atomically
-      with the entry write — stamping in a second pass left a crash
-      window where counts were written unstamped and a replay
-      double-applied the batch);
-    * ``violations_batch`` — adds a ``_vbatch`` literal column and
-      partitions violations by (partition_col, _vbatch) with DYNAMIC
-      overwrite: a replayed batch rewrites exactly its own
-      (partition, batch) output instead of appending duplicates —
-      violations become idempotent under foreachBatch redelivery;
-    * ``replace_entries`` — after recording a partition's entry, remove
-      that partition's OLDER entry files (new-then-remove: a crash
-      between the two leaves a stale extra entry, cleaned on next touch,
-      never a missing one).
     """
-    from ..engine import Engine
-
-    shash = spec_hash(spec)
+    eng = _engine(spec, row_id)
+    shash = spec_hash(eng.compiled)
     manifest = ValidationManifest(manifest_path)
-
-    # NULL partition values get a sentinel key so they are validated and
-    # recorded like any other partition (isin() never matches SQL NULL).
-    # The RAW value is collected alongside the string key: the pruning
-    # filter must compare the column in its NATIVE type — an isin over
-    # cast-to-string does not convert to an Iceberg/hive partition
-    # predicate, so "skipped" partitions would be scanned and discarded
-    # row-by-row instead of pruned.
-    vrows = partition_rows if partition_rows is not None else \
-        collect_partition_rows(df, partition_col, max_partitions)
-    # a string key can collect SEVERAL distinct native values (e.g.
-    # decimal scale variants rendering to the same text): keep them ALL —
-    # dropping one would leave its rows unvalidated while the partition
-    # key is recorded complete
-    raw_of: dict[str, list] = {}
-    for r in vrows:
-        raw_of.setdefault(r._p, []).append(r._v)
-    all_parts = list(raw_of)
-    if force_pending is not None:
-        pending = sorted(set(all_parts) & set(force_pending))
-        skipped = sorted(set(all_parts) - set(force_pending))
-    else:
-        done = manifest.completed(shash)
-        pending = sorted(set(all_parts) - done)
-        skipped = sorted(set(all_parts) & done)
+    key_rows = collect_partition_rows(df, partition_col, max_partitions)
+    keys = {r._p for r in key_rows}
+    done = manifest.completed(shash)
+    pending, skipped = sorted(keys - done), sorted(keys & done)
     if not pending:
         return {"pending": [], "skipped": skipped, "metrics": {}}
+    if violations_path:
+        # dynamic overwrite only touches partitions that produce rows —
+        # a re-validated partition that is now CLEAN would keep its
+        # stale violation files, so pending partitions' old output is
+        # removed first (local-fs best effort; on object stores,
+        # downstream reads should treat the MANIFEST as the verdict
+        # source of truth)
+        _remove_stale_violations(violations_path, partition_col,
+                                 set(pending))
+    metrics = _validate_pending(df, partition_col, key_rows, pending, eng,
+                               violations_path)
+    for p, m in metrics.items():
+        manifest.record(p, shash, m)
+    return {"pending": pending, "skipped": skipped, "metrics": metrics}
 
-    # partition-pruning filter: completed partitions are never scanned
-    # (native-typed `col IN (...)` + `IS NULL` both push to the scan)
-    cond = F.col(partition_col).isin(
-        [v for p in pending if p != NULL_PARTITION for v in raw_of[p]])
-    if NULL_PARTITION in pending:
+
+def _engine(spec, row_id: Optional[str]) -> Engine:
+    """The engine over ``spec``: a :class:`CompiledSchema` as given, a
+    spec dict compiled once with its inline options."""
+    if isinstance(spec, CompiledSchema):
+        return Engine(spec, row_id=row_id)
+    return Engine.from_schema(spec, row_id=row_id)
+
+
+def _validate_pending(df: DataFrame, partition_col: str, key_rows: list,
+                     pending, eng: Engine,
+                     violations_path: Optional[str],
+                     batch: Optional[str] = None) -> dict:
+    """The annotation pass shared by the batch report and the streaming
+    bridge: validates the ``pending`` partition keys of ``df``, writes
+    their violations, and returns ``{partition: metrics}``.  Records
+    nothing — which partitions are pending and how entries are written
+    is the caller's policy.
+
+    ``key_rows`` is :func:`collect_partition_rows` output.  ``batch``
+    adds a ``_vbatch`` literal column and partitions violations by
+    (partition_col, _vbatch), so a replayed micro-batch dynamically
+    overwrites exactly its own output dirs (a deterministic batch
+    re-produces the same rows) and never touches earlier batches."""
+    # the pruning filter compares the column in its NATIVE type — an
+    # isin over cast-to-string does not convert to an Iceberg/hive
+    # partition predicate, so skipped partitions would be scanned and
+    # discarded row-by-row instead of pruned.  A string key can stand
+    # for SEVERAL native values (e.g. decimal scale variants rendering
+    # to the same text): all of them are kept, or some rows would go
+    # unvalidated while the key is recorded complete.  isin() never
+    # matches SQL NULL, so NULL gets its own IS NULL arm.
+    pending = set(pending)
+    mine = [r._v for r in key_rows if r._p in pending]
+    cond = F.col(partition_col).isin([v for v in mine if v is not None])
+    if None in mine:
         cond = cond | F.col(partition_col).isNull()
-    sub = df.filter(cond)
-    eng = Engine.from_schema(spec, row_id=row_id,
-                             resources=resources, loader=loader,
-                             assert_format=assert_format,
-                             assert_content=assert_content,
-                             default_draft=default_draft)
-    ann = eng.annotate(sub)
+    ann = eng.annotate(df.filter(cond))
 
     # the scope owns the pin: released before this returns, exception
     # path included (thread-local, so foreachBatch threads are covered)
     with _ckpt.scope():
         if violations_path:
-            if violations_mode == "overwrite" and violations_batch is None:
-                # dynamic overwrite only touches partitions that produce
-                # rows — a re-validated partition that is now CLEAN
-                # would keep its stale violation files, so pending
-                # partitions' old output is removed first (local-fs best
-                # effort; on object stores, downstream reads should
-                # treat the MANIFEST as the verdict source of truth)
-                _remove_stale_violations(violations_path, partition_col,
-                                         set(pending))
             # two consumers — the violations write and the metrics
             # aggregate — so the projection is evaluated once: the write
             # fills the pin, the aggregate reads its cached blocks.  The
@@ -336,23 +335,14 @@ def validate_partitioned(spark: SparkSession, df: DataFrame, spec,
                    .filter(F.col("v").isNotNull())
                    .select(partition_col, "v.instance_location",
                            "v.keyword_location", "v.error"))
-            if violations_batch is not None:
-                # per-(partition, batch) layout: a foreachBatch replay
-                # dynamically overwrites exactly its own output dirs (a
-                # deterministic batch re-produces the same rows), never
-                # appends duplicates and never touches earlier batches
-                (vio.withColumn("_vbatch", F.lit(violations_batch))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy(partition_col, "_vbatch")
-                    .parquet(violations_path))
-            else:
-                (vio.write.mode("overwrite"
-                                if violations_mode == "overwrite"
-                                else "append")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy(partition_col)
-                    .parquet(violations_path))
+            layout = [partition_col]
+            if batch is not None:
+                vio = vio.withColumn("_vbatch", F.lit(batch))
+                layout.append("_vbatch")
+            (vio.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy(*layout)
+                .parquet(violations_path))
 
         rows = (ann.groupBy(partition_key_col(partition_col).alias("_p"))
                 .agg(F.count(F.lit(1)).alias("n_rows"),
@@ -361,15 +351,6 @@ def validate_partitioned(spark: SparkSession, df: DataFrame, spec,
                      F.sum("violation_count").alias("n_violations"),
                      F.min(F.col("valid").cast("int")).alias("_all_valid"))
                 .collect())
-        metrics = {}
-        for r in rows:
-            m = {"n_rows": r.n_rows, "n_invalid": r.n_invalid,
-                 "n_violations": r.n_violations,
-                 "valid": bool(r._all_valid)}
-            if metrics_transform is not None:
-                m = metrics_transform(r._p, m)
-            fname = manifest.record(r._p, shash, m)
-            if replace_entries:
-                manifest.invalidate(r._p, keep=fname)
-            metrics[r._p] = m
-    return {"pending": pending, "skipped": skipped, "metrics": metrics}
+    return {r._p: {"n_rows": r.n_rows, "n_invalid": r.n_invalid,
+                   "n_violations": r.n_violations,
+                   "valid": bool(r._all_valid)} for r in rows}

@@ -74,32 +74,17 @@ def violation_rate(stream_df: DataFrame, spec, *, ts_col: str,
                         F.col("n_invalid") / F.col("n_rows")))
 
 
-def batch_partition_keys(batch_df: DataFrame, partition_col: str, *,
-                         max_partitions: int = 100_000) -> list:
-    """Distinct manifest partition keys of a batch, derived through the
-    ONE shared key expression (``manifest.partition_key_col``: Spark
-    cast-to-string + the ``__null__`` sentinel).  Python ``str()`` on
-    raw values would produce "None"/"True" where the manifest holds
-    "__null__"/"true", so a re-seen null/bool partition would never be
-    invalidated and its rows silently skipped as already-complete.
-    Carries the same ``max_partitions`` driver-OOM guard as
-    ``validate_partitioned`` (a high-cardinality column fails loudly
-    BEFORE the collect, not after it fills the driver)."""
-    from ..sources.manifest import collect_partition_rows
-
-    return [r._p for r in
-            collect_partition_rows(batch_df, partition_col,
-                                   max_partitions)]
-
-
 def stream_to_manifest(stream_df: DataFrame, spec, *, partition_col: str,
                        manifest_path: str, checkpoint: str,
                        violations_path: Optional[str] = None,
                        row_id: Optional[str] = None):
     """Bridge a stream into the batch lineage manifest: each micro-batch
-    is validated with :func:`validate_partitioned` via ``foreachBatch``,
-    so streaming ingestion lands in the SAME resumable manifest a batch
-    backfill uses (one source of truth for per-partition verdicts).
+    is validated via ``foreachBatch`` by the annotation pass
+    :func:`validate_partitioned` uses, so streaming ingestion lands in
+    the SAME resumable manifest a batch backfill uses (one source of
+    truth for per-partition verdicts).  ``spec`` is compiled once, when
+    this is called: a bad spec raises ``CompileError`` before the query
+    starts.
 
     A micro-batch carries only NEW rows of a partition, so per-partition
     metrics ACCUMULATE across batches (sums of rows/invalid/violations,
@@ -186,6 +171,8 @@ def manifest_batch_handler(spec, *, partition_col: str, manifest_path: str,
                            max_partitions: int = 100_000):
     """The ``foreachBatch`` handler behind :func:`stream_to_manifest`,
     exposed so the replay-idempotency contract is directly testable.
+    ``spec`` (a spec dict or a ``CompiledSchema``) is compiled once,
+    here: a bad spec raises ``CompileError`` before any batch runs.
     Pass either an explicit ``run_id`` (tests) or a ``checkpoint`` path —
     REQUIRED: with neither, every incarnation would stamp run_id ""
     and a wiped-and-recreated checkpoint's batch 0 would be mistaken
@@ -201,43 +188,43 @@ def manifest_batch_handler(spec, *, partition_col: str, manifest_path: str,
     (run_id, batch_id)):
 
     * violations are written per-(partition, batch) with dynamic
-      overwrite (``violations_batch``) — a replay rewrites its own
-      output dirs, never appends duplicates;
+      overwrite — a replay rewrites its own output dirs, never appends
+      duplicates;
     * prior cumulative counts are merged and the (run_id, batch_id)
-      stamp applied INSIDE the per-partition entry write
-      (``metrics_transform``) — never in a second pass, so there is no
-      window where counts exist unstamped and a replay double-applies;
+      stamp applied in the same entry write — never in a second pass,
+      so there is no window where counts exist unstamped and a replay
+      double-applies;
     * old entries are not pre-invalidated: the new entry is recorded
-      first, then older files removed (``replace_entries``), so a crash
-      leaves a stale extra entry (resolved by newest ``finished_at``,
-      cleaned on the partition's next touch) rather than destroying the
-      prior cumulative counts."""
+      first, then older files removed (``invalidate(keep=)``), so a
+      crash leaves a stale extra entry (resolved by newest
+      ``finished_at``, cleaned on the partition's next touch) rather
+      than destroying the prior cumulative counts."""
     if not run_id and not checkpoint:
         raise ValueError(
             "manifest_batch_handler needs run_id= or checkpoint= — "
             "without a run identity, a manifest that outlives its "
             "checkpoint would silently drop the new query's batch 0 "
             "as a replay of the old one")
-    from ..sources.manifest import (ValidationManifest,
-                                    collect_partition_rows, spec_hash,
-                                    validate_partitioned)
+    from ..sources.manifest import (ValidationManifest, _engine,
+                                    _validate_pending,
+                                    collect_partition_rows, spec_hash)
+    eng = _engine(spec, row_id)
+    shash = spec_hash(eng.compiled)
     state = {"run_id": run_id}
 
     def handle(batch_df: DataFrame, batch_id: int):
-        spark = batch_df.sparkSession
         rid = state["run_id"]
         if not rid and checkpoint:
             rid = state["run_id"] = \
-                run_id_for_checkpoint(checkpoint, spark)
+                run_id_for_checkpoint(checkpoint, batch_df.sparkSession)
         # ONE batch scan serves emptiness, seen-keys, replay detection
-        # AND validate_partitioned's pruning (passed via partition_rows)
+        # AND the annotation pass's pruning filter
         vrows = collect_partition_rows(batch_df, partition_col,
                                        max_partitions)
         if not vrows:
             return
         seen = {r._p for r in vrows}
         manifest = ValidationManifest(manifest_path)
-        shash = spec_hash(spec)
         # newest entry per partition: a crash between record and
         # old-entry removal can leave a stale older file alongside the
         # stamped one — finished_at picks the authoritative entry
@@ -258,28 +245,22 @@ def manifest_batch_handler(spec, *, partition_col: str, manifest_path: str,
                    or prior.get(p, {}).get("run_id") != rid}
         if not pending:
             return
-
-        def _merge(p, m):
+        metrics = _validate_pending(batch_df, partition_col, vrows,
+                                    pending, eng, violations_path,
+                                    batch=f"{rid}-{batch_id}")
+        for p, m in metrics.items():
             old = prior.get(p)
-            return {
-                "n_rows": m["n_rows"] + (old["n_rows"] if old else 0),
-                "n_invalid":
-                    m["n_invalid"] + (old["n_invalid"] if old else 0),
-                "n_violations":
-                    m["n_violations"] + (old["n_violations"] if old else 0),
-                "valid": bool(m["valid"]) and
-                    (bool(old["valid"]) if old else True),
-                "batch_id": batch_id,
-                "run_id": rid,
-            }
-
-        validate_partitioned(
-            spark, batch_df, spec, partition_col, manifest_path,
-            violations_path=violations_path, row_id=row_id,
-            partition_rows=vrows, force_pending=pending,
-            metrics_transform=_merge,
-            violations_batch=f"{rid}-{batch_id}",
-            replace_entries=True)
+            if old:
+                m = {"n_rows": m["n_rows"] + old["n_rows"],
+                     "n_invalid": m["n_invalid"] + old["n_invalid"],
+                     "n_violations":
+                         m["n_violations"] + old["n_violations"],
+                     "valid": m["valid"] and bool(old["valid"])}
+            # merged counts and the stamp land in ONE entry write; the
+            # new entry is recorded before the old files go
+            fname = manifest.record(
+                p, shash, {**m, "batch_id": batch_id, "run_id": rid})
+            manifest.invalidate(p, keep=fname)
 
     return handle
 

@@ -337,3 +337,54 @@ def test_yaml_native_scalars_and_malformed(tmp_path, spark):
     g.write_text("a: [unclosed\n")
     with _pytest.raises(ValueError, match="malformed YAML"):
         read_table(spark, str(g))
+
+
+# runs the CLI in a child process, counting the reads of lib.json
+_COUNT_LIB_LOADS = """
+import sys
+import boon_spark.cli as cli
+real, n = cli.load_schema, [0]
+def load_schema(path, *args):
+    n[0] += path.endswith("lib.json")
+    return real(path, *args)
+cli.load_schema = load_schema
+rc = cli.main(sys.argv[1:])
+print("LIB_LOADS", n[0])
+sys.exit(rc)
+"""
+
+
+def test_partition_report_reuses_compiled_schema(tmp_path):
+    # --partition-col validates with the schema the CLI compiled: a
+    # sibling $ref'd document is read once per run, and the manifest
+    # identity covers it, so editing it re-validates every partition
+    data = tmp_path / "rows.jsonl"
+    data.write_text("\n".join(json.dumps(d) for d in [
+        {"doc_id": "a", "p": "x", "n": 5},
+        {"doc_id": "b", "p": "y", "n": 50},
+    ]))
+    lib = tmp_path / "lib.json"
+    main = tmp_path / "main.json"
+    main.write_text(json.dumps(
+        {"properties": {"n": {"$ref": "lib.json#/$defs/bounded"}}}))
+
+    def run(maximum):
+        lib.write_text(json.dumps(
+            {"$defs": {"bounded": {"maximum": maximum}}}))
+        r = subprocess.run(
+            [sys.executable, "-c", _COUNT_LIB_LOADS,
+             "--schema", str(main), "--table", str(data),
+             "--row-id", "doc_id", "--partition-col", "p",
+             "--manifest", str(tmp_path / "m"), "--cpus", "2"],
+            capture_output=True, text=True, cwd=REPO, timeout=300)
+        body, _, loads = r.stdout.rstrip().rpartition("\n")
+        assert loads == "LIB_LOADS 1", r.stderr
+        return r.returncode, json.loads(body[body.index("{"):])
+
+    rc, out = run(100)
+    assert (rc, out["pending"]) == (0, ["x", "y"])
+    rc, out = run(100)
+    assert (rc, out["pending"], out["skipped"]) == (0, [], ["x", "y"])
+    rc, out = run(10)
+    assert (rc, out["pending"]) == (2, ["x", "y"])
+    assert out["metrics"]["y"]["valid"] is False

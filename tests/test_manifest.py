@@ -7,6 +7,7 @@ from contextlib import nullcontext
 import pytest
 
 from boon_spark.operators._ckpt import StorageLevel
+from boon_spark.schema import compile_schema
 from boon_spark.sources.manifest import (ValidationManifest, spec_hash,
                                          validate_partitioned)
 
@@ -54,15 +55,50 @@ def test_invalidate_recomputes_only_that_partition(spark, tmp_path):
     assert list(out["metrics"]) == ["books"]
 
 
-def test_changed_spec_invalidates_lineage(spark, tmp_path):
-    df = _df(spark)
+FMT_SPEC = {"properties": {"d": {"format": "date"}}}
+REF_SPEC = {"properties": {"n_tok": {"$ref": "lib.json#/$defs/bounded"}}}
+
+
+def _lib(maximum):
+    return {"lib.json": {"$defs": {"bounded": {"minimum": 1,
+                                               "maximum": maximum}}}}
+
+
+# (first run's spec, second run's spec): each pair differs in one input
+# the compile reads
+CHANGES = {
+    "spec": lambda: (SPEC, {"properties": {"n_tok": {"minimum": 1,
+                                                     "maximum": 50}}}),
+    "assert_format": lambda: (FMT_SPEC,
+                              compile_schema(FMT_SPEC, assert_format=True)),
+    "resources": lambda: (compile_schema(REF_SPEC, resources=_lib(100)),
+                          compile_schema(REF_SPEC, resources=_lib(50))),
+    "default_draft": lambda: (SPEC, compile_schema(SPEC, default_draft=7)),
+}
+
+
+@pytest.mark.parametrize("change", list(CHANGES))
+def test_changed_spec_invalidates_lineage(spark, tmp_path, change):
+    first, second = CHANGES[change]()
+    if change == "assert_format":
+        # format is annotation-only by default, so the first run records
+        # the partition valid; asserting it must not reuse that verdict
+        df, col = spark.createDataFrame(
+            [("d0", "a", "2020-01-01"), ("d1", "a", "not-a-date")],
+            "doc_id string, p string, d string"), "p"
+    else:
+        df, col = _df(spark), "source"
     mpath = str(tmp_path / "m")
-    validate_partitioned(spark, df, SPEC, "source", mpath, row_id="doc_id")
-    spec2 = {"properties": {"n_tok": {"minimum": 1, "maximum": 50}}}
-    assert spec_hash(spec2) != spec_hash(SPEC)
-    out = validate_partitioned(spark, df, spec2, "source", mpath,
+    validate_partitioned(spark, df, first, col, mpath, row_id="doc_id")
+    assert spec_hash(second) != spec_hash(first)
+    out = validate_partitioned(spark, df, second, col, mpath,
                                row_id="doc_id")
-    assert sorted(out["pending"]) == ["books", "code", "web"]
+    if change == "assert_format":
+        assert out["pending"] == ["a"]
+        assert out["metrics"]["a"]["n_invalid"] == 1
+        assert out["metrics"]["a"]["valid"] is False
+    else:
+        assert sorted(out["pending"]) == ["books", "code", "web"]
 
 
 def test_manifest_entries_carry_metrics(spark, tmp_path):
@@ -133,20 +169,20 @@ def test_no_violations_path_pins_nothing(spark, tmp_path, monkeypatch):
 def test_pin_released_before_return(spark, tmp_path, monkeypatch, fail_at):
     # "write": the violations path is a regular file, so the write fails
     # (before the pin's blocks are built); "record": the pin is filled
-    # and read when the manifest step raises
+    # and read, then the manifest step raises
     pins = _capture_pins(monkeypatch)
-    vpath, transform = tmp_path / "v", None
+    vpath = tmp_path / "v"
     if fail_at == "write":
         vpath.write_text("x")
     elif fail_at == "record":
-        def transform(p, m):
+        def record(self, partition, shash, metrics):
             raise RuntimeError("manifest step failed")
+        monkeypatch.setattr(ValidationManifest, "record", record)
     before = _persistent_rdds(spark)
     with pytest.raises(Exception) if fail_at else nullcontext():
         validate_partitioned(spark, _df(spark), SPEC, "source",
                              str(tmp_path / "m"),
-                             violations_path=str(vpath), row_id="doc_id",
-                             metrics_transform=transform)
+                             violations_path=str(vpath), row_id="doc_id")
     assert len(pins) == 1
     assert pins[0][0].storageLevel == StorageLevel.NONE
     # a set difference, not equality: the context cleaner may drop an

@@ -119,14 +119,16 @@ def test_batch_partition_keys_match_manifest_convention(spark):
     # regression: invalidate() must receive the SAME key string that
     # validate_partitioned records — Spark cast-to-string + "__null__"
     # sentinel, never Python str() ("None"/"True"/"1.5" mismatches)
-    from boon_spark.streaming.validate_stream import batch_partition_keys
+    from boon_spark.sources.manifest import collect_partition_rows
+
+    def keys(df):
+        return sorted(r._p for r in collect_partition_rows(df, "p", 100))
 
     df = spark.createDataFrame(
         [(None,), (True,), (False,)], "p boolean")
-    assert sorted(batch_partition_keys(df, "p")) == \
-        ["__null__", "false", "true"]
+    assert keys(df) == ["__null__", "false", "true"]
     df2 = spark.createDataFrame([(1.5,), (None,)], "p double")
-    assert sorted(batch_partition_keys(df2, "p")) == ["1.5", "__null__"]
+    assert keys(df2) == ["1.5", "__null__"]
 
 
 def test_manifest_batch_replay_is_idempotent(spark, tmp_path):
@@ -679,6 +681,26 @@ def test_manifest_handler_requires_run_identity(tmp_path):
         manifest_batch_handler(
             SPEC, partition_col="source",
             manifest_path=str(tmp_path / "m"))
+
+
+def test_manifest_bridge_rejects_bad_spec_before_any_batch(spark, input_dir,
+                                                         tmp_path):
+    # the spec is compiled once, when the handler is built: a bad spec
+    # fails the call, not the query's first micro-batch
+    from boon_spark.errors import CompileError
+    from boon_spark.streaming.validate_stream import (manifest_batch_handler,
+                                                      stream_to_manifest)
+    bad = {"type": "nope"}
+    with pytest.raises(CompileError, match="unknown type"):
+        manifest_batch_handler(bad, partition_col="source",
+                               manifest_path=str(tmp_path / "m"),
+                               run_id="r")
+    with pytest.raises(CompileError, match="unknown type"):
+        stream_to_manifest(_read_stream(spark, input_dir), bad,
+                           partition_col="source",
+                           manifest_path=str(tmp_path / "m"),
+                           checkpoint=str(tmp_path / "ck"))
+    assert not os.path.exists(tmp_path / "ck")
 
 
 def test_manifest_handler_resolves_stale_duplicate_entry(spark, tmp_path):
