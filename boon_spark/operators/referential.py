@@ -17,7 +17,13 @@ from pyspark.sql import functions as F
 def check_referential(df: DataFrame, column: str, dim: DataFrame, *,
                       dim_column: Optional[str] = None,
                       row_id: Optional[str] = None) -> DataFrame:
-    """Violation rows for fact values absent from the dimension."""
+    """Violation rows for fact values absent from the dimension.
+
+    A NULL fact value matches no dimension key, a NULL one included: it
+    is a violation with ``value`` NULL and error "value 'null' not
+    present ...".  A SQL ``MATCH SIMPLE`` foreign key passes NULL
+    instead (ICDE 2019, cited in :func:`check_unique`).
+    """
     dcol = dim_column or column
     dim_keys = dim.select(F.col(dcol).alias(column)).dropDuplicates([column])
     missing = df.join(F.broadcast(dim_keys), on=column, how="left_anti")

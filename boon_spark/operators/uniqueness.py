@@ -31,6 +31,12 @@ def check_unique(df: DataFrame, cols: list[str], *,
     """Violation rows for duplicated key tuples.
 
     Returns ``(instance_location, keyword_location, error, dup_count)``.
+
+    NULLs follow boon/JSON's ``null == null``: all-NULL keys form one
+    duplicate group (two such rows: ``dup_count`` 2).  SQL ``UNIQUE``
+    treats NULLs as distinct, and the embedded uniqueness of ICDE 2019
+    ("Entity Integrity, Referential Integrity, and Query Optimization
+    with Embedded Uniqueness Constraints") holds on total keys only.
     """
     if isinstance(cols, str):
         cols = [cols]

@@ -26,9 +26,11 @@ Design (scale-first):
 * violations land under ``violations_path`` partitioned by the same
   column, so each partition's output is independently replaceable
   (``partitionOverwriteMode=dynamic``);
-* the manifest itself is one tiny parquet file per completed partition,
-  written atomically (tmp + rename) on the driver with pyarrow — no Spark
-  job, no read-modify-write races, append-only lineage;
+* the manifest itself is one tiny parquet file per (spec hash,
+  partition), named by both (``<spec_hash>-<sha256(key)[:32]>.parquet``)
+  and swapped into place by ``os.replace`` on the driver (pyarrow, no
+  Spark job): a crash leaves the old entry or the new one, never two or
+  none, and a resume check lists the directory, reading no entry;
 * a manifest entry records the **spec hash** (:func:`spec_hash` of the
   compiled schema): it covers the spec, the compile options the spec
   does not set inline (``assert_format``, ``assert_content``,
@@ -48,6 +50,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
 import time
 import uuid
 from typing import Optional
@@ -71,34 +74,52 @@ def spec_hash(spec) -> str:
         json.dumps(spec, sort_keys=True, default=str).encode()).hexdigest()[:16]
 
 
+_ENTRY = re.compile(r"[0-9a-f]{16}-[0-9a-f]{32}\.parquet")
+
+
+def _name(partition, shash: str) -> str:
+    """An entry's file name: its identity, (spec hash, partition key)."""
+    key = hashlib.sha256(str(partition).encode()).hexdigest()[:32]
+    return f"{shash}-{key}.parquet"
+
+
 class ValidationManifest:
-    """Append-only lineage of validated partitions."""
+    """Lineage of validated partitions: one entry file per (spec hash,
+    partition), replaced in place."""
 
     def __init__(self, path: str):
         self.path = path
         os.makedirs(path, exist_ok=True)
-
-    @staticmethod
-    def _is_entry(fname: str) -> bool:
-        # dotfiles are in-progress temp writes: a crash between write and
-        # rename must never leave a truncated file that entries() then
-        # chokes on forever
-        return fname.endswith(".parquet") and not fname.startswith(".")
+        # keyed lookups miss entries of the older random-suffix layout,
+        # so streaming counts would silently restart from zero: refuse
+        alien = sorted(f for f in os.listdir(path)
+                       if f.endswith(".parquet") and not f.startswith(".")
+                       and not _ENTRY.fullmatch(f))
+        if alien:
+            raise ValueError(
+                f"manifest {path!r} holds entries of an older layout "
+                f"({', '.join(alien)}); use a fresh manifest directory")
 
     def entries(self) -> list[dict]:
         import pyarrow.parquet as pq
-        out = []
-        for f in sorted(os.listdir(self.path)):
-            if self._is_entry(f):
-                out.extend(pq.read_table(
-                    os.path.join(self.path, f)).to_pylist())
-        return out
+        return [row for f in sorted(os.listdir(self.path))
+                if _ENTRY.fullmatch(f)
+                for row in pq.read_table(
+                    os.path.join(self.path, f)).to_pylist()]
 
-    def completed(self, shash: str) -> set[str]:
-        return {e["partition"] for e in self.entries()
-                if e["status"] == "complete" and e["spec_hash"] == shash}
+    def entry(self, partition, shash: str) -> Optional[dict]:
+        """The partition's entry under ``shash``, or None."""
+        import pyarrow.parquet as pq
+        f = os.path.join(self.path, _name(partition, shash))
+        return pq.read_table(f).to_pylist()[0] if os.path.exists(f) else None
 
-    def record(self, partition: str, shash: str, metrics: dict) -> str:
+    def completed(self, shash: str, keys) -> set[str]:
+        """The ``keys`` with an entry under ``shash``: one directory
+        listing, no entry read."""
+        names = set(os.listdir(self.path))
+        return {k for k in keys if _name(k, shash) in names}
+
+    def record(self, partition: str, shash: str, metrics: dict) -> None:
         import pyarrow as pa
         import pyarrow.parquet as pq
         row = {
@@ -121,37 +142,17 @@ class ValidationManifest:
             "finished_at": time.time(),
         }
         tmp = os.path.join(self.path, f".tmp-{uuid.uuid4().hex}")
-        final = os.path.join(
-            self.path, f"{_safe(partition)}-{uuid.uuid4().hex[:8]}.parquet")
         pq.write_table(pa.Table.from_pylist([row]), tmp)
-        os.rename(tmp, final)  # atomic on POSIX
-        return os.path.basename(final)
+        # atomic on POSIX: a crash leaves the old entry or the new one
+        os.replace(tmp, os.path.join(self.path, _name(partition, shash)))
 
-    def invalidate(self, partition: str, *,
-                   keep: Optional[str] = None) -> None:
-        """Drop lineage for one partition (forces recompute on next run).
-
-        Candidate files are pre-filtered by the ``_safe(partition)-``
-        filename prefix ``record`` always writes, then confirmed by
-        content (``_safe`` is lossy, so two partitions can share a
-        prefix) — without the filter each invalidate reads EVERY entry
-        file, which is O(total partitions) driver parquet reads per
-        call on a long-lived manifest.  ``keep`` skips one filename:
-        the replace path records the new entry FIRST, then removes the
-        old ones, so a crash between the two leaves an extra stale
-        entry (cleaned up on the partition's next touch) rather than a
-        missing one (which would lose the cumulative counts a replayed
-        streaming batch needs)."""
-        import pyarrow.parquet as pq
-        pref = f"{_safe(partition)}-"
-        for f in list(os.listdir(self.path)):
-            if not self._is_entry(f) or not f.startswith(pref) \
-                    or f == keep:
-                continue
-            p = os.path.join(self.path, f)
-            rows = pq.read_table(p).to_pylist()
-            if any(str(r["partition"]) == str(partition) for r in rows):
-                os.remove(p)
+    def invalidate(self, partition: str) -> None:
+        """Drop the partition's lineage under every spec hash (forces
+        recompute on the next run)."""
+        suffix = _name(partition, "")  # "-<key>.parquet"
+        for f in os.listdir(self.path):
+            if f.endswith(suffix):
+                os.remove(os.path.join(self.path, f))
 
 
 NULL_PARTITION = "__null__"
@@ -184,10 +185,6 @@ def collect_partition_rows(df: DataFrame, partition_col: str,
             f"{max_partitions} distinct values — not a partition column; "
             f"pick a coarser column or raise max_partitions")
     return rows
-
-
-def _safe(s) -> str:
-    return "".join(c if c.isalnum() or c in "-_." else "_" for c in str(s))
 
 
 def _remove_stale_violations(violations_path: str, partition_col: str,
@@ -252,7 +249,7 @@ def validate_partitioned(spark: SparkSession, df: DataFrame, spec,
     manifest = ValidationManifest(manifest_path)
     key_rows = collect_partition_rows(df, partition_col, max_partitions)
     keys = {r._p for r in key_rows}
-    done = manifest.completed(shash)
+    done = manifest.completed(shash, keys)
     pending, skipped = sorted(keys - done), sorted(keys & done)
     if not pending:
         return {"pending": [], "skipped": skipped, "metrics": {}}

@@ -194,11 +194,9 @@ def manifest_batch_handler(spec, *, partition_col: str, manifest_path: str,
       stamp applied in the same entry write — never in a second pass,
       so there is no window where counts exist unstamped and a replay
       double-applies;
-    * old entries are not pre-invalidated: the new entry is recorded
-      first, then older files removed (``invalidate(keep=)``), so a
-      crash leaves a stale extra entry (resolved by newest
-      ``finished_at``, cleaned on the partition's next touch) rather
-      than destroying the prior cumulative counts."""
+    * that write replaces the partition's entry by one atomic rename, so
+      a crash leaves the prior entry or the merged one, never both and
+      never neither (no lost cumulative counts)."""
     if not run_id and not checkpoint:
         raise ValueError(
             "manifest_batch_handler needs run_id= or checkpoint= — "
@@ -225,16 +223,8 @@ def manifest_batch_handler(spec, *, partition_col: str, manifest_path: str,
             return
         seen = {r._p for r in vrows}
         manifest = ValidationManifest(manifest_path)
-        # newest entry per partition: a crash between record and
-        # old-entry removal can leave a stale older file alongside the
-        # stamped one — finished_at picks the authoritative entry
-        prior: dict = {}
-        for e in manifest.entries():
-            if e["spec_hash"] != shash or e["partition"] not in seen:
-                continue
-            cur = prior.get(e["partition"])
-            if cur is None or e["finished_at"] >= cur["finished_at"]:
-                prior[e["partition"]] = e
+        # only this batch's partitions' entries are read
+        prior = {p: e for p in seen if (e := manifest.entry(p, shash))}
         # a replayed batch: partitions already stamped with this
         # (run_id, batch_id) pair are excluded from pending, so they are
         # neither re-scanned nor re-counted and their violation dirs are
@@ -256,11 +246,9 @@ def manifest_batch_handler(spec, *, partition_col: str, manifest_path: str,
                      "n_violations":
                          m["n_violations"] + old["n_violations"],
                      "valid": m["valid"] and bool(old["valid"])}
-            # merged counts and the stamp land in ONE entry write; the
-            # new entry is recorded before the old files go
-            fname = manifest.record(
-                p, shash, {**m, "batch_id": batch_id, "run_id": rid})
-            manifest.invalidate(p, keep=fname)
+            # merged counts and the stamp land in ONE entry write
+            manifest.record(p, shash,
+                            {**m, "batch_id": batch_id, "run_id": rid})
 
     return handle
 

@@ -19,3 +19,17 @@ def spark():
          .getOrCreate())
     yield s
     s.stop()
+
+
+@pytest.fixture
+def parquet_reads(monkeypatch):
+    """The sources of every ``pyarrow.parquet.read_table`` call made
+    while the test runs (manifest entries are read through it)."""
+    import pyarrow.parquet as pq
+    reads, real = [], pq.read_table
+
+    def spy(source, *args, **kwargs):
+        reads.append(source)
+        return real(source, *args, **kwargs)
+    monkeypatch.setattr(pq, "read_table", spy)
+    return reads

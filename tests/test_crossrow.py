@@ -297,3 +297,19 @@ def test_fertility_stats(spark):
     assert w.fertility_ppm == 5_000_000  # 5 chars/token
     p = out["pdf"]
     assert (p.n_docs, p.sum_toks, p.fertility_ppm) == (1, 0, None)
+
+
+def test_table_constraints_null_semantics(spark):
+    # boon/JSON semantics, not SQL's: two NULL keys are ONE duplicate
+    # group (SQL UNIQUE treats NULLs as distinct) and a NULL foreign key
+    # is a violation (MATCH SIMPLE would pass it)
+    fact = spark.createDataFrame(
+        [("d1", None, "web"), ("d2", None, "web"), ("d3", "x", None)],
+        "rid string, doc_id string, source string")
+    dim = spark.createDataFrame([("web",), ("books",)], "source string")
+    u = check_unique(fact, ["doc_id"], row_id="rid").collect()
+    assert [(r.instance_location, r.dup_count) for r in u] == [("/␀", 2)]
+    v = check_referential(fact, "source", dim, row_id="rid").collect()
+    assert [(r.instance_location, r.value) for r in v] == \
+        [("/d3/source", None)]
+    assert v[0].error.startswith("value 'null' not present")

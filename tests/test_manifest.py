@@ -14,8 +14,8 @@ from boon_spark.sources.manifest import (ValidationManifest, spec_hash,
 SPEC = {"properties": {"n_tok": {"minimum": 1, "maximum": 100}}}
 
 
-def _df(spark):
-    rows = [(f"d{i}", i % 150 + 1, ["web", "books", "code"][i % 3])
+def _df(spark, sources=("web", "books", "code")):
+    rows = [(f"d{i}", i % 150 + 1, sources[i % len(sources)])
             for i in range(300)]
     return spark.createDataFrame(rows, "doc_id string, n_tok int, source string")
 
@@ -43,16 +43,61 @@ def test_rerun_skips_everything(spark, tmp_path):
     assert sorted(out2["skipped"]) == ["books", "code", "web"]
 
 
-def test_invalidate_recomputes_only_that_partition(spark, tmp_path):
+# (partition keys, the one invalidated); "a/b" and "a_b" shared a
+# filename prefix under the older entry names
+@pytest.mark.parametrize("keys,drop", [
+    (["web", "books", "code"], "books"),
+    (["a/b", "a_b"], "a/b"),
+], ids=["source", "collision"])
+def test_invalidate_recomputes_only_that_partition(spark, tmp_path, keys,
+                                                   drop):
+    df = _df(spark, keys)
+    mpath = str(tmp_path / "m")
+    validate_partitioned(spark, df, SPEC, "source", mpath, row_id="doc_id")
+    ValidationManifest(mpath).invalidate(drop)
+    out = validate_partitioned(spark, df, SPEC, "source", mpath,
+                               row_id="doc_id")
+    assert out["pending"] == [drop]
+    assert out["skipped"] == sorted(set(keys) - {drop})
+    assert list(out["metrics"]) == [drop]
+
+
+def test_rerun_reads_no_manifest_entry(spark, tmp_path, parquet_reads):
+    # the resume check is a directory listing: its cost does not grow
+    # with the entries' content or the manifest's history
     df = _df(spark)
     mpath = str(tmp_path / "m")
     validate_partitioned(spark, df, SPEC, "source", mpath, row_id="doc_id")
-    ValidationManifest(mpath).invalidate("books")
     out = validate_partitioned(spark, df, SPEC, "source", mpath,
                                row_id="doc_id")
-    assert out["pending"] == ["books"]
-    assert sorted(out["skipped"]) == ["code", "web"]
-    assert list(out["metrics"]) == ["books"]
+    assert out["pending"] == [] and len(out["skipped"]) == 3
+    assert parquet_reads == []
+
+
+def test_older_layout_manifest_fails_loudly(spark, tmp_path):
+    # an entry under the older random-suffix name is invisible to keyed
+    # lookups: both writers refuse the directory instead of restarting
+    # its partitions' counts from zero
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from boon_spark.streaming.validate_stream import manifest_batch_handler
+    mpath = tmp_path / "m"
+    mpath.mkdir()
+    pq.write_table(pa.Table.from_pylist([{
+        "partition": "web", "status": "complete",
+        "spec_hash": spec_hash(SPEC), "n_rows": 100, "n_invalid": 1,
+        "n_violations": 1, "valid": False, "batch_id": 0, "run_id": "r",
+        "finished_at": 0.0}]), str(mpath / "web-1a2b3c4d.parquet"))
+    df = _df(spark)
+    with pytest.raises(ValueError, match="web-1a2b3c4d.parquet"):
+        validate_partitioned(spark, df, SPEC, "source", str(mpath),
+                             row_id="doc_id")
+    handle = manifest_batch_handler(SPEC, partition_col="source",
+                                    manifest_path=str(mpath),
+                                    row_id="doc_id", run_id="r")
+    with pytest.raises(ValueError, match="web-1a2b3c4d.parquet"):
+        handle(df, 0)
 
 
 FMT_SPEC = {"properties": {"d": {"format": "date"}}}

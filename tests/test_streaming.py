@@ -703,40 +703,56 @@ def test_manifest_bridge_rejects_bad_spec_before_any_batch(spark, input_dir,
     assert not os.path.exists(tmp_path / "ck")
 
 
-def test_manifest_handler_resolves_stale_duplicate_entry(spark, tmp_path):
-    # a crash between record-new and remove-old can leave TWO entries
-    # for a partition; the handler must treat the newest (finished_at)
-    # as authoritative — replay detection AND cumulative merge both
-    import time as _time
-
+def test_manifest_record_replaces_the_partition_entry(spark, tmp_path):
+    # one entry file per (spec hash, partition): a second record
+    # replaces the first, and the handler's replay detection and
+    # cumulative merge both read that one entry
     from boon_spark.sources.manifest import ValidationManifest, spec_hash
     from boon_spark.streaming.validate_stream import manifest_batch_handler
 
     m = ValidationManifest(str(tmp_path / "m"))
     shash = spec_hash(SPEC)
-    # stale unstamped entry (old counts), then the stamped survivor
     m.record("web", shash, {"n_rows": 10, "n_invalid": 1,
                             "n_violations": 1, "valid": False})
-    _time.sleep(0.01)
     m.record("web", shash, {"n_rows": 15, "n_invalid": 2,
                             "n_violations": 2, "valid": False,
                             "batch_id": 0, "run_id": "r"})
+    ents = m.entries()
+    assert [(e["partition"], e["n_rows"]) for e in ents] == [("web", 15)]
     handle = manifest_batch_handler(
         SPEC, partition_col="source", manifest_path=str(tmp_path / "m"),
         row_id="doc_id", run_id="r")
     b = spark.createDataFrame([("d1", 50, "web")],
                               "doc_id string, n_tok int, source string")
-    # replay of batch 0: newest entry is stamped (r, 0) -> no-op, even
-    # though the STALE entry carries no stamp
+    # replay of batch 0: the entry is stamped (r, 0) -> no-op
     handle(b, 0)
-    ents = [e for e in m.entries() if e["partition"] == "web"]
-    assert {e["n_rows"] for e in ents} == {10, 15}
-    # batch 1 merges from the NEWEST entry (15), not the stale 10, and
-    # the replace path leaves exactly one file for the partition
+    assert m.entries() == ents
+    # batch 1 merges onto the entry's 15 rows and replaces it
     handle(b, 1)
-    ents = [e for e in m.entries() if e["partition"] == "web"]
+    ents = m.entries()
     assert len(ents) == 1
     assert ents[0]["n_rows"] == 16 and ents[0]["batch_id"] == 1
+
+
+def test_manifest_handler_reads_only_its_partitions(spark, tmp_path,
+                                                    parquet_reads):
+    # a micro-batch reads the entries of the partitions it carries, not
+    # the whole manifest
+    from boon_spark.sources.manifest import ValidationManifest
+    from boon_spark.streaming.validate_stream import manifest_batch_handler
+    handle = manifest_batch_handler(
+        SPEC, partition_col="source", manifest_path=str(tmp_path / "m"),
+        row_id="doc_id", run_id="r")
+    schema = "doc_id string, n_tok int, source string"
+    handle(spark.createDataFrame(
+        [("d1", 50, "web"), ("d2", 50, "books"), ("d3", 50, "code")],
+        schema), 0)
+    parquet_reads.clear()
+    handle(spark.createDataFrame([("d4", 50, "web")], schema), 1)
+    assert len(parquet_reads) <= 1
+    by_part = {e["partition"]: (e["n_rows"], e["batch_id"])
+               for e in ValidationManifest(str(tmp_path / "m")).entries()}
+    assert by_part == {"web": (2, 1), "books": (1, 0), "code": (1, 0)}
 
 
 def test_collider_survives_null_event_times():
