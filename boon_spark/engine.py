@@ -11,6 +11,16 @@ shuffle, whole-stage codegen):
 * ``violation_count``  — total violations *before* the cap, so truncation
                          is never silent (SURVEY.md §7 risk note)
 
+Compile once, build once: boon compiles a schema once and validates many
+instances.  The schema is compiled once per :class:`Engine`, and the
+Spark expression tree the :class:`PlanBuilder` lowers it to is built once
+per (schema identity, input schema, extension registries, SparkContext)
+and kept in a small process-local memo, so a second ``annotate`` of a
+frame with the same schema — the next call of a report, the next
+micro-batch of a stream — reuses the built ``Column`` objects (unresolved
+and immutable, so safe to share between frames).  The rule for the memo
+key: anything the builder reads must be in the key.
+
 Output formats mirror boon's flag/basic output (``src/output.rs:33-86``).
 Cross-row checks (uniqueness, referential, stats, drift — SURVEY.md §2.6)
 live in ``boon_spark.operators`` and are orchestrated by
@@ -19,21 +29,44 @@ live in ``boon_spark.operators`` and are orchestrated by
 
 from __future__ import annotations
 
+import threading
 from dataclasses import dataclass
-from typing import Optional
+from typing import NamedTuple, Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import functions as registries
 from .plans.builder import PlanBuilder
 from .schema import CompiledSchema, compile_schema
+
+
+class _Plan(NamedTuple):
+    """What one :meth:`PlanBuilder.build` produces for a schema over an
+    input schema: the prelude projection, the verdict, the keywords'
+    violation arrays and the empty violation array."""
+    prelude: dict
+    valid: Column
+    viol_arrays: list
+    empty: Column
+
+
+# built plans, oldest first; the oldest is evicted past the cap.  Each
+# entry holds a handful of py4j Column handles, so the cap bounds the
+# driver and JVM memory the memo can pin.
+_PLAN_CAP = 32
+_plans: dict[tuple, _Plan] = {}
+_plans_lock = threading.Lock()
 
 
 @dataclass
 class Engine:
     """Compile once on the driver, validate any number of DataFrames —
     mirroring boon's compile-then-validate split
-    (``src/compiler.rs:198-212`` / ``src/lib.rs:186-195``)."""
+    (``src/compiler.rs:198-212`` / ``src/lib.rs:186-195``).  The plan is
+    built once per (schema identity, input schema, extension registries,
+    SparkContext), shared by every engine over the same schema: see
+    :meth:`annotate`."""
 
     compiled: CompiledSchema
     row_id: Optional[str] = None
@@ -88,6 +121,10 @@ class Engine:
         evaluated twice (the single-select formulation duplicated the
         whole validity expression three times, uncollapsible because
         lambda variables defeat subexpression elimination).
+
+        The expressions come from :meth:`_plan`: built once per (schema
+        identity, input schema, extension registries, SparkContext), so
+        only the three selects cost py4j round trips on a repeat call.
         """
         reserved = {"valid", "violations", "violation_count", "_viols"}
         clash = reserved & set(df.columns)
@@ -95,38 +132,76 @@ class Engine:
             raise ValueError(
                 f"input columns {sorted(clash)} collide with the "
                 f"engine's output columns; rename them before validating")
-        pb = PlanBuilder(df.schema, row_id=self.row_id,
-                         content_causes=self.content_causes,
-                         base_uri=self.compiled.base_uri)
-        valid, viol_arrays = pb.build(
-            self.compiled.root, None, None, pb.root_iloc())
+        plan = self._plan(df)
         cap = self.max_violations_per_row
         base = df
-        if pb.prelude:
+        if plan.prelude:
             # stage 0: expensive shared subexpressions (JSON parses)
             # computed exactly once, codegen'd + CSE'd
             base = df.select("*", *[c.alias(a)
-                                    for a, c in pb.prelude.items()])
-        step1 = base.select("*", F.coalesce(valid, F.lit(False)).alias("valid"))
-        viols = _detail(pb, ~F.col("valid"), viol_arrays)
+                                    for a, c in plan.prelude.items()])
+        step1 = base.select("*", F.coalesce(plan.valid,
+                                            F.lit(False)).alias("valid"))
+        viols = _detail(plan, ~F.col("valid"))
         step2 = step1.select("*", viols.alias("_viols"))
         return step2.select(
             *df.columns, "valid",
             F.slice("_viols", 1, cap).alias("violations"),
             F.size("_viols").alias("violation_count"))
 
+    def _plan(self, df: DataFrame) -> _Plan:
+        """The built plan for ``df``'s schema, from the memo or built now.
+
+        The key holds everything the builder reads — anything it reads
+        must be in the key: the compiled schema's identity (spec, compile
+        options, fragment, every resource document), ``row_id``,
+        ``content_causes``, ``base_uri``, the input schema (types and
+        nullability), the extension registries' generation and the
+        SparkContext, whose application id changes on a restart, so
+        stale Java handles and UDFs are never reused.  Nothing is keyed
+        on ``id()``.  A build that raises is not kept."""
+        from .sources.manifest import spec_hash
+        key = (spec_hash(self.compiled), self.row_id, self.content_causes,
+               self.compiled.base_uri, df.schema.json(),
+               registries.generation,
+               df.sparkSession.sparkContext.applicationId)
+        with _plans_lock:
+            plan = _plans.get(key)
+        if plan is not None:
+            return plan
+        pb = PlanBuilder(df.schema, row_id=self.row_id,
+                         content_causes=self.content_causes,
+                         base_uri=self.compiled.base_uri)
+        valid, viol_arrays = pb.build(
+            self.compiled.root, None, None, pb.root_iloc())
+        plan = _Plan(pb.prelude, valid, viol_arrays, pb.empty)
+        with _plans_lock:
+            _plans[key] = plan
+            while len(_plans) > _PLAN_CAP:
+                del _plans[next(iter(_plans))]
+        return plan
+
     def validate(self, df: DataFrame) -> "ValidationResult":
         return ValidationResult(self.annotate(df), row_id=self.row_id)
 
 
-def _detail(pb: PlanBuilder, failed: Column, viol_arrays: list) -> Column:
+def _engine(spec, row_id: Optional[str]) -> Engine:
+    """The engine over ``spec``: a :class:`CompiledSchema` as given, a
+    spec dict compiled once with its inline options."""
+    if isinstance(spec, CompiledSchema):
+        return Engine(spec, row_id=row_id)
+    return Engine.from_schema(spec, row_id=row_id)
+
+
+def _detail(plan: _Plan, failed: Column) -> Column:
     """Lazy error materialization (boon bool_result,
     src/validator.rs:849-855): only failing rows concatenate their
     keywords' violation arrays."""
-    if not viol_arrays:
-        return pb.empty
-    arr = viol_arrays[0] if len(viol_arrays) == 1 else F.concat(*viol_arrays)
-    return F.when(failed, arr).otherwise(pb.empty)
+    arrays = plan.viol_arrays
+    if not arrays:
+        return plan.empty
+    arr = arrays[0] if len(arrays) == 1 else F.concat(*arrays)
+    return F.when(failed, arr).otherwise(plan.empty)
 
 
 @dataclass
@@ -222,7 +297,9 @@ def validate_table(df: DataFrame, spec, *, row_id: Optional[str] = None,
     ``annotated``, ``row_violations``, ``unique_violations``,
     ``referential_violations``, ``invariant_violations``.
 
-    ``spec`` may carry table-level extensions::
+    ``spec`` is a spec dict, compiled here with its inline options, or a
+    :class:`CompiledSchema`, used as given.  A spec dict may carry
+    table-level extensions::
 
         {"schema": {...json-schema...},
          "unique": ["doc_id"],
@@ -236,8 +313,8 @@ def validate_table(df: DataFrame, spec, *, row_id: Optional[str] = None,
     from .operators.invariants import check_invariants
     from .operators.equality import check_equality
 
-    compiled = compile_schema(spec)
-    eng = Engine(compiled, row_id=row_id)
+    eng = _engine(spec, row_id)
+    compiled = eng.compiled
     res = eng.validate(df)
     out: dict = {
         "annotated": res.annotated,

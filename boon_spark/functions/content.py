@@ -19,6 +19,8 @@ from typing import Callable
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from . import bump_generation
+
 
 def _decode_base64(col: Column) -> Column:
     return F.try_to_binary(col, F.lit("base64")).cast("string")
@@ -42,6 +44,7 @@ def register_content_encoding(name: str,
     """``decode(col) -> Column[string]`` returning NULL for undecodable
     values (mirrors boon's Decoder contract)."""
     ENCODINGS[name.lower()] = decode
+    bump_generation()
 
 
 def register_content_media_type(name: str,
@@ -49,3 +52,4 @@ def register_content_media_type(name: str,
     """``check(col) -> Column[boolean]`` (mirrors boon's MediaType
     contract)."""
     MEDIA_TYPES[name.lower()] = check
+    bump_generation()

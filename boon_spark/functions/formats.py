@@ -26,6 +26,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from . import bump_generation
+
 # ---------------------------------------------------------------------------
 # regex-expressible formats (JVM-side, codegen'd)
 # ---------------------------------------------------------------------------
@@ -321,6 +323,7 @@ def register_format(name: str, fn, *, column_expr: bool = False) -> None:
     ``Column -> Column[boolean]`` builder that stays JVM-side.
     """
     FORMATS[name] = fn if column_expr else _vectorized(fn)
+    bump_generation()
 
 
 def format_predicate(name: str) -> Callable[[Column], Column]:

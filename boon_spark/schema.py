@@ -15,6 +15,7 @@ is pure Python and unit-testable without a session.
 
 from __future__ import annotations
 
+import copy
 import re
 from dataclasses import dataclass, field
 from typing import Any, Optional
@@ -1301,5 +1302,7 @@ def compile_schema(doc: Any, *, resources: Optional[dict] = None,
         unique=unique,
         references=list(extra.get("references", [])),
         invariants=list(extra.get("invariants", [])),
-        identity={"spec": doc, **read} if read else doc,
+        # a snapshot: a caller editing the spec dict after the compile
+        # must not change the identity of the schema compiled before it
+        identity=copy.deepcopy({"spec": doc, **read} if read else doc),
     )

@@ -58,7 +58,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..engine import Engine
+from ..engine import Engine, _engine
 from ..operators import _ckpt
 from ..schema import CompiledSchema
 
@@ -267,14 +267,6 @@ def validate_partitioned(spark: SparkSession, df: DataFrame, spec,
     for p, m in metrics.items():
         manifest.record(p, shash, m)
     return {"pending": pending, "skipped": skipped, "metrics": metrics}
-
-
-def _engine(spec, row_id: Optional[str]) -> Engine:
-    """The engine over ``spec``: a :class:`CompiledSchema` as given, a
-    spec dict compiled once with its inline options."""
-    if isinstance(spec, CompiledSchema):
-        return Engine(spec, row_id=row_id)
-    return Engine.from_schema(spec, row_id=row_id)
 
 
 def _validate_pending(df: DataFrame, partition_col: str, key_rows: list,

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..engine import Engine
+from ..engine import Engine, _engine
 
 
 def annotate_stream(stream_df: DataFrame, spec, *,
@@ -203,8 +203,7 @@ def manifest_batch_handler(spec, *, partition_col: str, manifest_path: str,
             "without a run identity, a manifest that outlives its "
             "checkpoint would silently drop the new query's batch 0 "
             "as a replay of the old one")
-    from ..sources.manifest import (ValidationManifest, _engine,
-                                    _validate_pending,
+    from ..sources.manifest import (ValidationManifest, _validate_pending,
                                     collect_partition_rows, spec_hash)
     eng = _engine(spec, row_id)
     shash = spec_hash(eng.compiled)

@@ -210,6 +210,62 @@ def test_manifest_batch_handler_leaves_no_pins(spark, tmp_path,
         assert persistent() - before == set(), f"batch {batch_id} leaked"
 
 
+def test_manifest_batch_handler_builds_the_plan_once(spark, tmp_path,
+                                                     monkeypatch):
+    # the handler compiles once; the plan is built on the first batch and
+    # re-used by every later batch of the same schema, with the same
+    # metrics and violation rows as a handler that rebuilds every batch
+    import boon_spark.engine as engine
+    from boon_spark.plans.builder import PlanBuilder
+    from boon_spark.sources.manifest import ValidationManifest
+    from boon_spark.streaming.validate_stream import manifest_batch_handler
+
+    builds, depth, real = [], [0], PlanBuilder.build
+
+    def counted(self, *a, **kw):   # outer calls only: build recurses
+        if depth[0] == 0:
+            builds.append(1)
+        depth[0] += 1
+        try:
+            return real(self, *a, **kw)
+        finally:
+            depth[0] -= 1
+    monkeypatch.setattr(PlanBuilder, "build", counted)
+    monkeypatch.setattr(engine, "_plans", {})
+    batches = [spark.createDataFrame(
+        [(f"b{b}d{i}", (i * 37 + b) % 150, ["web", "books", "news"][i % 3])
+         for i in range(10 + b)], "doc_id string, n_tok int, source string")
+        for b in range(4)]
+
+    def run(name, rebuild):
+        handle = manifest_batch_handler(
+            SPEC, partition_col="source",
+            manifest_path=str(tmp_path / name / "m"),
+            violations_path=str(tmp_path / name / "v"), row_id="doc_id",
+            run_id="test-run")
+        per_batch = []
+        for batch_id, batch in enumerate(batches):
+            if rebuild:
+                engine._plans.clear()
+            n = len(builds)
+            handle(batch, batch_id)
+            per_batch.append(len(builds) - n)
+        entries = sorted((e["partition"], e["n_rows"], e["n_invalid"],
+                          e["n_violations"], e["valid"])
+                         for e in ValidationManifest(
+                             str(tmp_path / name / "m")).entries())
+        viols = sorted(tuple(r) for r in spark.read.parquet(
+            str(tmp_path / name / "v")).collect())
+        return per_batch, entries, viols
+
+    memo_builds, memo_entries, memo_viols = run("memo", rebuild=False)
+    assert memo_builds == [1, 0, 0, 0]
+    fresh_builds, fresh_entries, fresh_viols = run("fresh", rebuild=True)
+    assert fresh_builds == [1, 1, 1, 1]
+    assert memo_entries == fresh_entries and memo_viols == fresh_viols
+    assert memo_viols
+
+
 def test_manifest_new_run_batch_zero_is_not_a_replay(spark, tmp_path):
     # ADVICE r3: batch ids are per-checkpoint.  A manifest that outlives
     # its checkpoint sees the NEW query's batch 0 with the same batch_id
