@@ -58,25 +58,24 @@ def make_ssl_context(cacert=None, insecure=False):
 def load_schema(path: str, ssl_ctx=None):
     """Load a schema document from a file path or http(s) URL — the
     reference CLI supports both (cli/src/main.rs:231-276) plus YAML
-    (cli/src/main.rs:219-228)."""
-    if path.startswith(("http://", "https://")):
-        from urllib.request import urlopen
-        with urlopen(path, timeout=30, context=ssl_ctx) as r:
-            text = r.read().decode()
-    else:
-        with open(path) as f:
-            text = f.read()
-    if path.endswith((".yaml", ".yml")):
-        import yaml
-        return yaml.safe_load(text)
-    return json.loads(text)
+    (cli/src/main.rs:219-228), parsed by
+    :func:`~boon_spark.loaders.parse_document`."""
+    from .loaders import file_loader, parse_document
+    if not path.startswith(("http://", "https://")):
+        return file_loader(path)
+    from urllib.request import urlopen
+    with urlopen(path, timeout=30, context=ssl_ctx) as r:
+        return parse_document(r.read().decode(), path)
 
 
 def make_ref_loader(schema_path: str, ssl_ctx=None):
     """Cross-document $ref loader — boon ``FileLoader``/``UrlLoader``
-    parity (src/loader.rs:23-72): http(s) URIs load remotely; anything
-    else resolves as a file path relative to the schema document."""
+    parity (src/loader.rs:23-72): http(s) URIs load remotely, ``file:``
+    URIs through :func:`~boon_spark.loaders.file_loader`; anything else
+    resolves as a file path relative to the schema document."""
     import os
+
+    from .loaders import file_loader
     http = schema_path.startswith(("http://", "https://"))
     base = (schema_path.rsplit("/", 1)[0] + "/") if http \
         else os.path.dirname(os.path.abspath(schema_path))
@@ -87,10 +86,9 @@ def make_ref_loader(schema_path: str, ssl_ctx=None):
         if http:
             from urllib.parse import urljoin
             return load_schema(urljoin(base, uri), ssl_ctx)
-        p = uri[7:] if uri.startswith("file://") else uri
-        if not os.path.isabs(p):
-            p = os.path.join(base, p)
-        return load_schema(p)
+        if uri[:5].lower() == "file:":
+            return file_loader(uri)
+        return load_schema(os.path.join(base, uri))
 
     return load
 

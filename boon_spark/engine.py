@@ -37,7 +37,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from . import functions as registries
-from .plans.builder import PlanBuilder
+from .plans.builder import PlanBuilder, concat_violations, row_pointer
 from .schema import CompiledSchema, compile_schema
 
 
@@ -173,12 +173,15 @@ class Engine:
                          content_causes=self.content_causes,
                          base_uri=self.compiled.base_uri)
         valid, viol_arrays = pb.build(
-            self.compiled.root, None, None, pb.root_iloc())
+            self.compiled.root, None, None, row_pointer(self.row_id))
         plan = _Plan(pb.prelude, valid, viol_arrays, pb.empty)
         with _plans_lock:
+            # evict before inserting, so even a reader that skips the
+            # lock never sees more than the cap
+            if key not in _plans:
+                while len(_plans) >= _PLAN_CAP:
+                    del _plans[next(iter(_plans))]
             _plans[key] = plan
-            while len(_plans) > _PLAN_CAP:
-                del _plans[next(iter(_plans))]
         return plan
 
     def validate(self, df: DataFrame) -> "ValidationResult":
@@ -197,11 +200,45 @@ def _detail(plan: _Plan, failed: Column) -> Column:
     """Lazy error materialization (boon bool_result,
     src/validator.rs:849-855): only failing rows concatenate their
     keywords' violation arrays."""
-    arrays = plan.viol_arrays
-    if not arrays:
+    if not plan.viol_arrays:
         return plan.empty
-    arr = arrays[0] if len(arrays) == 1 else F.concat(*arrays)
-    return F.when(failed, arr).otherwise(plan.empty)
+    return F.when(failed, concat_violations(plan.viol_arrays)) \
+        .otherwise(plan.empty)
+
+
+def violation_rows(frame: DataFrame, *keep: str) -> DataFrame:
+    """One row per element of ``frame``'s ``violations`` array: the
+    ``keep`` columns followed by the violation struct's fields.  The one
+    place a violation array is exploded to rows.
+
+    Passing rows carry an EMPTY array, so the explode alone prunes them.
+    ``explode_outer`` + a post-generate null filter is deliberate: plain
+    ``explode`` makes Catalyst infer ``size(violations) > 0``
+    (InferFiltersFromGenerate), and predicate pushdown re-inlines the
+    whole violation expression — prelude JSON parses included, once per
+    alias reference — into a scan-side condition, blowing generated-code
+    size and its janino compile time ~4x (pinned by
+    test_plans.test_content_schema_plan_is_lean)."""
+    return (frame.select(*keep, F.explode_outer("violations").alias("v"))
+            .filter(F.col("v").isNotNull())
+            .select(*keep, "v.*"))
+
+
+def verdict_aggregates() -> list[Column]:
+    """The verdict of a group of annotated rows, as aggregate columns:
+    ``valid`` (an empty group is vacuously valid), then the counts
+    ``n_rows``, ``n_invalid`` and ``n_violations`` (before the cap).
+    The one definition behind :meth:`ValidationResult.flag`, the
+    manifest's per-partition metrics and the streaming violation rate."""
+    return [
+        # coalesce: min/sum over an empty group are NULL
+        F.coalesce(F.min(F.col("valid").cast("int")).cast("boolean"),
+                   F.lit(True)).alias("valid"),
+        F.count(F.lit(1)).alias("n_rows"),
+        F.coalesce(F.sum((~F.col("valid")).cast("long")),
+                   F.lit(0)).alias("n_invalid"),
+        F.coalesce(F.sum("violation_count"), F.lit(0)).alias("n_violations"),
+    ]
 
 
 @dataclass
@@ -214,37 +251,14 @@ class ValidationResult:
 
     def violations(self) -> DataFrame:
         """Basic-output units as rows (boon ``basic_output``,
-        ``src/output.rs:38-86``).  Passing rows carry an EMPTY violations
-        array, so the explode alone prunes them.  ``explode_outer`` +
-        post-generate null filter is deliberate: plain ``explode`` makes
-        Catalyst infer ``size(violations) > 0`` (InferFiltersFromGenerate)
-        and predicate pushdown re-inlines the whole violation expression
-        — prelude JSON parses included, once per alias reference — into a
-        scan-side condition, blowing generated-code size and its janino
-        compile time ~4x (pinned by
-        test_plans.test_content_schema_plan_is_lean)."""
-        return (self.annotated
-                .select(F.explode_outer("violations").alias("v"))
-                .filter(F.col("v").isNotNull())
-                .select(
-                    F.lit(False).alias("valid"),
-                    F.col("v.instance_location"),
-                    F.col("v.keyword_location"),
-                    F.col("v.absolute_keyword_location"),
-                    F.col("v.error")))
+        ``src/output.rs:38-86``), exploded by :func:`violation_rows`."""
+        return violation_rows(self.annotated).select(
+            F.lit(False).alias("valid"), "*")
 
     def flag(self, by: Optional[list[str]] = None) -> DataFrame:
         """Flag output ``{"valid": bool}`` (boon ``src/output.rs:33-35``),
         optionally per group (e.g. per partition column)."""
-        agg = [
-            # empty group is vacuously valid (coalesce handles min-of-empty)
-            F.coalesce(F.min(F.col("valid").cast("int")).cast("boolean"),
-                       F.lit(True)).alias("valid"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.coalesce(F.sum((~F.col("valid")).cast("long")),
-                       F.lit(0)).alias("n_invalid"),
-            F.coalesce(F.sum("violation_count"), F.lit(0)).alias("n_violations"),
-        ]
+        agg = verdict_aggregates()
         if by:
             return self.annotated.groupBy(*by).agg(*agg)
         return self.annotated.agg(*agg)
@@ -253,13 +267,9 @@ class ValidationResult:
         """Detailed output (boon ``src/output.rs:89-137``): one row per
         failing instance with its full violation list nested — the tree
         shape, flattened one level (our schemas are one level deep)."""
-        ptr = (F.concat(F.lit("/"),
-                        F.coalesce(F.col(self.row_id).cast("string"),
-                                   F.lit("?")))
-               if self.row_id else F.lit(""))
         return (self.annotated
                 .filter(~F.col("valid"))
-                .select(ptr.alias("instance_location"),
+                .select(row_pointer(self.row_id).alias("instance_location"),
                         F.col("valid"),
                         F.col("violations").alias("errors"),
                         F.col("violation_count")))
@@ -278,13 +288,10 @@ class ValidationResult:
                 for r in rows]
 
     def summary(self) -> DataFrame:
-        """Per-keyword failure counts — map-side partial agg, one shuffle.
-        explode_outer + null filter, see :meth:`violations` for the
-        inferred-filter pushdown-blowup rationale."""
-        return (self.annotated
-                .select(F.explode_outer("violations").alias("v"))
-                .filter(F.col("v").isNotNull())
-                .groupBy(F.col("v.keyword_location").alias("keyword_location"))
+        """Per-keyword failure counts — map-side partial agg, one shuffle
+        over :func:`violation_rows`."""
+        return (violation_rows(self.annotated)
+                .groupBy("keyword_location")
                 .agg(F.count(F.lit(1)).alias("n_violations")))
 
 

@@ -6,6 +6,8 @@ boon ships:
 
 * :func:`file_loader` — boon ``FileLoader`` (loader.rs:28-43): resolves
   ``file://`` URIs (and plain paths) to parsed JSON/YAML documents;
+* :func:`parse_document` — the one JSON/YAML document parser behind
+  both loaders and the CLI's schema loading;
 * :func:`scheme_loader` — boon ``SchemeUrlLoader`` (loader.rs:46-72):
   dispatches on the URI scheme to a registered loader, raising
   CompileError for unsupported schemes (boon UnsupportedUrlScheme).
@@ -41,11 +43,41 @@ def file_loader(uri: str):
                 f"file URI with non-local authority {p.netloc!r}: {uri!r}")
         path = unquote(p.path)
     with open(path, encoding="utf-8") as f:
-        text = f.read()
-    if path.endswith((".yaml", ".yml")):
+        return parse_document(f.read(), path)
+
+
+def parse_document(text: str, name: str):
+    """``text`` as a JSON data-model document: YAML when ``name`` ends in
+    ``.yaml``/``.yml`` (normalized by :func:`_yaml_jsonable`, so an
+    unquoted date is the string a JSON source would hold), JSON
+    otherwise."""
+    if name.endswith((".yaml", ".yml")):
         import yaml
-        return yaml.safe_load(text)
+        return _yaml_jsonable(yaml.safe_load(text), name)
     return json.loads(text)
+
+
+def _yaml_jsonable(v, location: str):
+    """Normalize PyYAML's YAML-1.1 native scalars into the JSON data
+    model: unquoted ISO dates/timestamps parse to datetime objects,
+    which json.dumps rejects and which compare unequal to every string
+    — render them as ISO-8601 strings, exactly what the reference's
+    YAML 1.2 pipeline sees (so ``format: date`` and ``enum`` keep
+    working).  Anything else non-JSON (e.g. ``!!binary``) fails loudly.
+    (YAML-1.1 booleans like unquoted ``yes`` still parse to true — quote
+    them in the source if a string is meant.)"""
+    import datetime
+    if isinstance(v, dict):
+        return {str(k): _yaml_jsonable(x, location) for k, x in v.items()}
+    if isinstance(v, list):
+        return [_yaml_jsonable(x, location) for x in v]
+    if isinstance(v, (datetime.date, datetime.datetime)):
+        return v.isoformat()
+    if v is None or isinstance(v, (bool, int, float, str)):
+        return v
+    raise ValueError(
+        f"{location}: YAML value of type {type(v).__name__} has no JSON "
+        f"equivalent (quote it as a string if that is what is meant)")
 
 
 def scheme_loader(loaders: dict[str, Loader]) -> Loader:

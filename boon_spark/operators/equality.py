@@ -15,7 +15,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .invariants import violation, violation_rows
+from ..engine import violation_rows
+from ..plans.builder import concat_violations
+from .invariants import violation
 
 
 def check_equality(cur: DataFrame, ref: DataFrame, *, key: str = "doc_id",
@@ -42,7 +44,8 @@ def check_equality(cur: DataFrame, ref: DataFrame, *, key: str = "doc_id",
         checks.append(violation(
             mismatch, F.concat(row, F.lit(f"/{c}")), f"/x-equality/{c}",
             f"value differs from reference for column '{c}'"))
-    return violation_rows(joined, checks)
+    return violation_rows(
+        joined.select(concat_violations(checks).alias("violations")))
 
 
 def snapshot_diff(old: DataFrame, new: DataFrame, *, key: str = "doc_id",

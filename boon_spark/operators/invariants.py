@@ -12,6 +12,9 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..engine import violation_rows
+from ..plans.builder import concat_violations, row_pointer
+
 
 def violation(fail: Column, iloc: Column, keyword_location: str,
               error: str) -> Column:
@@ -26,24 +29,13 @@ def violation(fail: Column, iloc: Column, keyword_location: str,
             "keyword_location:string,error:string>>"))
 
 
-def violation_rows(df: DataFrame, arrays: list[Column]) -> DataFrame:
-    """One row per violation in the concatenation of ``arrays``."""
-    arr = F.concat(*arrays) if len(arrays) > 1 else arrays[0]
-    return (df.select(arr.alias("_viols"))
-            .filter(F.size("_viols") > 0)
-            .select(F.explode("_viols").alias("v"))
-            .select("v.instance_location", "v.keyword_location", "v.error"))
-
-
 def check_invariants(df: DataFrame, invariants: list[dict], *,
                      row_id: Optional[str] = None) -> DataFrame:
     """``invariants``: list of ``{"name": str, "expr": sql_bool_expr}``.
     Returns violation rows (one per failed invariant per row)."""
-    iloc = (F.concat(F.lit("/"), F.coalesce(F.col(row_id).cast("string"),
-                                            F.lit("?")))
-            if row_id else F.lit("/"))
-    return violation_rows(df, [
+    iloc = row_pointer(row_id)
+    return violation_rows(df.select(concat_violations([
         violation(~F.coalesce(F.expr(inv["expr"]), F.lit(False)), iloc,
                   f"/x-invariants/{inv['name']}",
                   f"invariant failed: {inv['expr']}")
-        for inv in invariants])
+        for inv in invariants]).alias("violations")))

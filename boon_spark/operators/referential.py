@@ -13,6 +13,8 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.builder import row_pointer
+
 
 def check_referential(df: DataFrame, column: str, dim: DataFrame, *,
                       dim_column: Optional[str] = None,
@@ -27,12 +29,9 @@ def check_referential(df: DataFrame, column: str, dim: DataFrame, *,
     dcol = dim_column or column
     dim_keys = dim.select(F.col(dcol).alias(column)).dropDuplicates([column])
     missing = df.join(F.broadcast(dim_keys), on=column, how="left_anti")
-    iloc = (F.concat(F.lit("/"),
-                     F.coalesce(F.col(row_id).cast("string"), F.lit("?")),
-                     F.lit(f"/{column}"))
-            if row_id else F.lit(f"/{column}"))
     return missing.select(
-        iloc.alias("instance_location"),
+        F.concat(row_pointer(row_id),
+                 F.lit(f"/{column}")).alias("instance_location"),
         F.lit(f"/x-references/{column}").alias("keyword_location"),
         F.concat(F.lit(f"value '"), F.coalesce(F.col(column).cast("string"),
                                                F.lit("null")),

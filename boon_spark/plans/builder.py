@@ -43,6 +43,27 @@ VIOL_STRUCT = ("struct<instance_location:string,"
                "absolute_keyword_location:string,error:string>")
 VIOL_ARRAY = f"array<{VIOL_STRUCT}>"
 
+
+def row_pointer(row_id: Optional[str]) -> Column:
+    """The instance pointer of a row, which every violation row's
+    ``instance_location`` starts with: ``/<row_id>`` (``/?`` for a NULL
+    id), or ``""`` — the JSON Pointer root — without a ``row_id``."""
+    if not row_id:
+        return F.lit("")
+    return F.concat(F.lit("/"),
+                    F.coalesce(F.col(row_id).cast("string"), F.lit("?")))
+
+
+def concat_violations(arrays: list, empty: Optional[Column] = None
+                      ) -> Optional[Column]:
+    """One violation array from NULL-free ``arrays``: the array itself
+    when there is one, their ``concat`` when there are more, ``empty``
+    when there are none."""
+    if not arrays:
+        return empty
+    return arrays[0] if len(arrays) == 1 else F.concat(*arrays)
+
+
 _TRUE = None  # sentinel meaning "statically always valid" — lets us prune
 
 
@@ -200,13 +221,6 @@ class PlanBuilder:
         return F.col(alias)
 
     # ---------------------------------------------------------- helpers
-    def root_iloc(self) -> Column:
-        if self.row_id:
-            return F.concat(
-                F.lit("/"),
-                F.coalesce(F.col(self.row_id).cast("string"), F.lit("?")))
-        return F.lit("")
-
     def _viol(self, fail: Column, kw_loc: str, iloc: Column,
               msg: Column) -> Column:
         """One scalar check → a one-struct array when ``fail``, else the
@@ -228,6 +242,14 @@ class PlanBuilder:
             F.lit(kw_loc).alias("keyword_location"),
             F.lit(full).alias("absolute_keyword_location"),
             msg.alias("error")))).otherwise(self.empty)
+
+    def _check(self, valids: list, viols: list, fail: Column, kw_loc: str,
+               iloc: Column, msg: Column) -> None:
+        """Emit one keyword check: the verdict is ``~fail`` and a failing
+        row carries :meth:`_viol`'s violation.  ``fail`` must never be
+        NULL."""
+        valids.append(~fail)
+        viols.append(self._viol(fail, kw_loc, iloc, msg))
 
     @staticmethod
     def _fail(value: Optional[Column], pred: Column) -> Column:
@@ -304,11 +326,9 @@ class PlanBuilder:
         valids: list[Column] = []
         viols: list[Column] = []
 
-        def add(pred: Column, kw: str, msg: Column, *, raw_fail: Column = None):
-            fail = raw_fail if raw_fail is not None else self._fail(value, pred)
-            ok = ~fail
-            valids.append(ok)
-            viols.append(self._viol(fail, f"{node.loc}/{kw}", iloc, msg))
+        def add(pred: Column, kw: str, msg: Column):
+            self._check(valids, viols, self._fail(value, pred),
+                        f"{node.loc}/{kw}", iloc, msg)
 
         jt = "object" if dtype is None else json_type_of(dtype)
         sval = None
@@ -342,7 +362,8 @@ class PlanBuilder:
             if value is not None:
                 msg = F.when(value.isNull(), F.lit(MESSAGES["type"].format(
                     want=" or ".join(node.types), got="null"))).otherwise(msg)
-            add(None, "type", msg, raw_fail=F.coalesce(~ok, F.lit(True)))
+            self._check(valids, viols, F.coalesce(~ok, F.lit(True)),
+                        f"{node.loc}/type", iloc, msg)
 
         # ---- const / enum (src/validator.rs:127-139).  Comparison is
         # type-aware: a literal whose JSON type mismatches the column is
@@ -455,9 +476,8 @@ class PlanBuilder:
         sz = F.size(value)
 
         def add(pred, kw, msg):
-            fail = F.coalesce(value.isNotNull() & ~pred, F.lit(False))
-            valids.append(~fail)
-            viols.append(self._viol(fail, f"{node.loc}/{kw}", iloc, msg))
+            self._check(valids, viols, self._fail(value, pred),
+                        f"{node.loc}/{kw}", iloc, msg)
 
         if node.min_items is not None:
             add(sz >= node.min_items, "minItems", F.concat(
@@ -519,7 +539,7 @@ class PlanBuilder:
                 valid_all = F.forall(rest, lambda x: F.coalesce(
                     self.build(node.items, et, x, iloc)[0], F.lit(False)))
                 self._lambda_depth -= 1
-            fail = F.coalesce(value.isNotNull() & ~valid_all, F.lit(False))
+            fail = self._fail(value, valid_all)
             valids.append(~fail)
             # per-element violation detail with the element index in the
             # instance pointer (boon item! macro, src/validator.rs:13-17),
@@ -531,7 +551,7 @@ class PlanBuilder:
                 if not evs:
                     return self.empty
                 return F.when(F.coalesce(e_ok, F.lit(False)), self.empty) \
-                    .otherwise(F.concat(*evs) if len(evs) > 1 else evs[0])
+                    .otherwise(concat_violations(evs))
             self._lambda_depth += 1
             per_elem = F.flatten(F.transform(rest, elem_viols))
             self._lambda_depth -= 1
@@ -673,11 +693,9 @@ class PlanBuilder:
             target = self._hoist("decoded", target_inline)
             enc_ok_inline = target_inline.isNotNull()
             enc_ok = target.isNotNull()
-            fail = F.coalesce(value.isNotNull() & ~enc_ok, F.lit(False))
-            valids.append(~fail)
-            viols.append(self._viol(
-                fail, f"{node.loc}/contentEncoding", iloc,
-                F.lit(f"value is not '{enc}' encoded")))
+            self._check(valids, viols, self._fail(value, enc_ok),
+                        f"{node.loc}/contentEncoding", iloc,
+                        F.lit(f"value is not '{enc}' encoded"))
         parse_ok_inline = F.lit(True)
         parse_ok = F.lit(True)
         if node.content_media_type is not None:
@@ -689,11 +707,9 @@ class PlanBuilder:
             parse_ok_inline = MEDIA_TYPES[mt](target_inline)
             parse_ok = self._hoist("parse_ok", parse_ok_inline)
             ok = F.when(~enc_ok, F.lit(True)).otherwise(parse_ok)
-            fail = F.coalesce(value.isNotNull() & ~ok, F.lit(False))
-            valids.append(~fail)
-            viols.append(self._viol(
-                fail, f"{node.loc}/contentMediaType", iloc,
-                F.lit(f"value is not of mediatype '{mt}'")))
+            self._check(valids, viols, self._fail(value, ok),
+                        f"{node.loc}/contentMediaType", iloc,
+                        F.lit(f"value is not of mediatype '{mt}'"))
         # contentSchema only applies when contentMediaType is present
         # (gating mirrors boon src/compiler.rs:589-595 and the suite's
         # "contentSchema without contentMediaType" cases)
@@ -713,18 +729,15 @@ class PlanBuilder:
                 | parsed_inline.isNull(), F.lit(True)) \
                 .otherwise(F.coalesce(sub_valid, F.lit(False)))
             ok = self._hoist("cs_ok", ok_inline)
-            fail = F.coalesce(value.isNotNull() & ~ok, F.lit(False))
-            valids.append(~fail)
-            viols.append(self._viol(
-                fail, f"{node.loc}/contentSchema", iloc,
-                F.lit("contentSchema failed")))
+            fail = self._fail(value, ok)
+            self._check(valids, viols, fail, f"{node.loc}/contentSchema",
+                        iloc, F.lit("contentSchema failed"))
             if self.content_causes and sub_viols:
                 # the sub-validation's own violation rows, gated on the
                 # wrapper condition (boon attaches them as causes of the
                 # ContentSchema error; detailed_tree re-nests them)
-                sub = sub_viols[0] if len(sub_viols) == 1 \
-                    else F.concat(*sub_viols)
-                viols.append(F.when(fail, sub).otherwise(self.empty))
+                viols.append(F.when(fail, concat_violations(sub_viols))
+                             .otherwise(self.empty))
 
     # ---------------------------------------------------------- unevaluated
     def _branch_valid(self, s: Node, dtype, value: Optional[Column],
@@ -974,24 +987,31 @@ class PlanBuilder:
                 return va
             return F.when(value.isNotNull(), va).otherwise(self.empty)
 
+        def present_fail(name: str, cond: Optional[Column] = None) -> Column:
+            """fails where property ``name`` is present (and ``cond``)"""
+            core = get(name).isNotNull()
+            if cond is not None:
+                core = core & cond
+            return F.coalesce(core if is_row else value.isNotNull() & core,
+                              F.lit(False))
+
         # required (src/validator.rs:214-219): SQL NULL models absence
         if node.required:
             missing_static = [r for r in node.required if r not in fields]
             for r in node.required:
                 if r in fields:
                     ok = guard(get(r).isNotNull())
-                    fail = F.coalesce(~ok, F.lit(True))
-                    valids.append(~fail)
-                    viols.append(self._viol(
-                        fail, f"{node.loc}/required", iloc,
-                        F.lit(MESSAGES["required"].format(want=f"'{r}'"))))
+                    self._check(valids, viols, F.coalesce(~ok, F.lit(True)),
+                                f"{node.loc}/required", iloc,
+                                F.lit(MESSAGES["required"].format(
+                                    want=f"'{r}'")))
             if missing_static:
-                fail = F.lit(True) if is_row else value.isNotNull()
-                valids.append(~fail)
-                viols.append(self._viol(
-                    fail, f"{node.loc}/required", iloc,
+                self._check(
+                    valids, viols,
+                    F.lit(True) if is_row else value.isNotNull(),
+                    f"{node.loc}/required", iloc,
                     F.lit(MESSAGES["required"].format(
-                        want=", ".join(f"'{m}'" for m in missing_static)))))
+                        want=", ".join(f"'{m}'" for m in missing_static))))
 
         matched: set[str] = set()
         if node.properties:
@@ -1021,14 +1041,10 @@ class PlanBuilder:
                 # closed schema: extra columns fail on every row where the
                 # extra property is present (non-null)
                 for n in extra:
-                    present = get(n).isNotNull()
-                    fail = F.coalesce(
-                        present if is_row else value.isNotNull() & present,
-                        F.lit(False))
-                    valids.append(~fail)
-                    viols.append(self._viol(
-                        fail, f"{node.loc}/additionalProperties", iloc,
-                        F.lit(f"additionalProperties '{n}' not allowed")))
+                    self._check(
+                        valids, viols, present_fail(n),
+                        f"{node.loc}/additionalProperties", iloc,
+                        F.lit(f"additionalProperties '{n}' not allowed"))
             elif isinstance(node.additional_properties, Node):
                 sub = node.additional_properties
                 if not sub.is_trivial_true():
@@ -1053,15 +1069,10 @@ class PlanBuilder:
                     continue
                 not_ev = F.lit(True) if ev is False else ~ev
                 if sub is False:
-                    present = get(nm).isNotNull()
-                    core = present & not_ev
-                    fail = F.coalesce(
-                        core if is_row else value.isNotNull() & core,
-                        F.lit(False))
-                    valids.append(~fail)
-                    viols.append(self._viol(
-                        fail, f"{node.loc}/unevaluatedProperties", iloc,
-                        F.lit(f"unevaluated property '{nm}' not allowed")))
+                    self._check(
+                        valids, viols, present_fail(nm, not_ev),
+                        f"{node.loc}/unevaluatedProperties", iloc,
+                        F.lit(f"unevaluated property '{nm}' not allowed"))
                 elif isinstance(sub, Node) and not sub.is_trivial_true():
                     c_iloc = F.concat(iloc, F.lit(f"/{nm}"))
                     v2, vs2 = self.build(sub, fields[nm], get(nm), c_iloc)
@@ -1082,11 +1093,9 @@ class PlanBuilder:
                 ok = guard(F.when(get(prop).isNotNull(),
                                   F.coalesce(s_valid, F.lit(False)))
                            .otherwise(F.lit(True)))
-                fail = F.coalesce(~ok, F.lit(False))
-                valids.append(~fail)
-                viols.append(self._viol(
-                    fail, f"{node.loc}/dependentSchemas/{prop}", iloc,
-                    F.lit(f"schema for dependency '{prop}' failed")))
+                self._check(valids, viols, F.coalesce(~ok, F.lit(False)),
+                            f"{node.loc}/dependentSchemas/{prop}", iloc,
+                            F.lit(f"schema for dependency '{prop}' failed"))
 
         if node.property_names is not None:
             # key names validate against a subschema — static column set
@@ -1096,14 +1105,9 @@ class PlanBuilder:
                 name_ok = _py_string_check(node.property_names, name)
                 if name_ok:
                     continue
-                present = get(name).isNotNull()
-                fail = F.coalesce(
-                    present if is_row else value.isNotNull() & present,
-                    F.lit(False))
-                valids.append(~fail)
-                viols.append(self._viol(
-                    fail, f"{node.loc}/propertyNames", iloc,
-                    F.lit(f"invalid property '{name}'")))
+                self._check(valids, viols, present_fail(name),
+                            f"{node.loc}/propertyNames", iloc,
+                            F.lit(f"invalid property '{name}'"))
 
         if node.dependent_required:
             for prop, deps in node.dependent_required.items():
@@ -1116,36 +1120,27 @@ class PlanBuilder:
                     get(d).isNotNull() if d in fields else F.lit(False)
                     for d in deps], F.lit(True))
                 ok = guard(F.when(present, deps_ok).otherwise(F.lit(True)))
-                fail = F.coalesce(~ok, F.lit(False))
-                valids.append(~fail)
-                viols.append(self._viol(
-                    fail, f"{node.loc}/dependentRequired", iloc,
-                    F.lit(MESSAGES["dependent_required"].format(
-                        want=", ".join(f"'{d}'" for d in deps),
-                        prop=f"'{prop}'"))))
+                self._check(valids, viols, F.coalesce(~ok, F.lit(False)),
+                            f"{node.loc}/dependentRequired", iloc,
+                            F.lit(MESSAGES["dependent_required"].format(
+                                want=", ".join(f"'{d}'" for d in deps),
+                                prop=f"'{prop}'")))
 
         if node.min_properties is not None or node.max_properties is not None:
             cnt = reduce(lambda a, b: a + b,
                          [get(n).isNotNull().cast("int") for n in fields]) \
                 if fields else F.lit(0)
-            if node.min_properties is not None:
-                ok = guard(cnt >= node.min_properties)
-                fail = F.coalesce(~ok, F.lit(False))
-                valids.append(~fail)
-                viols.append(self._viol(
-                    fail, f"{node.loc}/minProperties", iloc, F.concat(
-                        F.lit(f"minimum {node.min_properties} properties "
-                              f"required, but got "),
-                        cnt.cast("string"), F.lit(" properties"))))
-            if node.max_properties is not None:
-                ok = guard(cnt <= node.max_properties)
-                fail = F.coalesce(~ok, F.lit(False))
-                valids.append(~fail)
-                viols.append(self._viol(
-                    fail, f"{node.loc}/maxProperties", iloc, F.concat(
-                        F.lit(f"maximum {node.max_properties} properties "
-                              f"required, but got "),
-                        cnt.cast("string"), F.lit(" properties"))))
+            for bound, kw, word in (
+                    (node.min_properties, "minProperties", "minimum"),
+                    (node.max_properties, "maxProperties", "maximum")):
+                if bound is None:
+                    continue
+                ok = guard(cnt >= bound if word == "minimum" else cnt <= bound)
+                self._check(valids, viols, F.coalesce(~ok, F.lit(False)),
+                            f"{node.loc}/{kw}", iloc, F.concat(
+                                F.lit(f"{word} {bound} properties "
+                                      f"required, but got "),
+                                cnt.cast("string"), F.lit(" properties")))
 
     def _map_checks(self, node: Node, dtype: T.MapType, value: Column,
                     iloc: Column, valids: list, viols: list):
@@ -1157,11 +1152,9 @@ class PlanBuilder:
         if node.required:
             for r in node.required:
                 ok = guard(F.map_contains_key(value, F.lit(r)))
-                fail = F.coalesce(~ok, F.lit(False))
-                valids.append(~fail)
-                viols.append(self._viol(
-                    fail, f"{node.loc}/required", iloc,
-                    F.lit(MESSAGES["required"].format(want=f"'{r}'"))))
+                self._check(valids, viols, F.coalesce(~ok, F.lit(False)),
+                            f"{node.loc}/required", iloc,
+                            F.lit(MESSAGES["required"].format(want=f"'{r}'")))
         if node.properties:
             for name, sub in node.properties.items():
                 if sub.is_trivial_true():
@@ -1186,12 +1179,10 @@ class PlanBuilder:
                         lambda mv: F.coalesce(
                             self.build(sub, vt, mv, iloc)[0], F.lit(False)))
                     self._lambda_depth -= 1
-                    fail = F.coalesce(value.isNotNull() & ~ok, F.lit(False))
-                    valids.append(~fail)
-                    viols.append(self._viol(
-                        fail, f"{node.loc}/patternProperties", iloc,
-                        F.lit(f"values for keys matching '{pat}' "
-                              f"do not match schema")))
+                    self._check(valids, viols, self._fail(value, ok),
+                                f"{node.loc}/patternProperties", iloc,
+                                F.lit(f"values for keys matching '{pat}' "
+                                      f"do not match schema"))
         if node.additional_properties is not None:
             known = list(node.properties or {})
             pats = list(node.pattern_properties or {})
@@ -1210,14 +1201,12 @@ class PlanBuilder:
                 extra_keys = F.filter(F.map_keys(value),
                                       lambda k: unmatched(k))
                 self._lambda_depth -= 1
-                ok = F.size(extra_keys) == 0
-                fail = F.coalesce(value.isNotNull() & ~ok, F.lit(False))
-                valids.append(~fail)
-                viols.append(self._viol(
-                    fail, f"{node.loc}/additionalProperties", iloc,
-                    F.concat(F.lit("additionalProperties "),
-                             F.array_join(extra_keys, ", "),
-                             F.lit(" not allowed"))))
+                self._check(valids, viols,
+                            self._fail(value, F.size(extra_keys) == 0),
+                            f"{node.loc}/additionalProperties", iloc,
+                            F.concat(F.lit("additionalProperties "),
+                                     F.array_join(extra_keys, ", "),
+                                     F.lit(" not allowed")))
             elif isinstance(ap, Node) and not ap.is_trivial_true():
                 self._lambda_depth += 1
                 ok = F.forall(
@@ -1226,22 +1215,19 @@ class PlanBuilder:
                     lambda mv: F.coalesce(
                         self.build(ap, vt, mv, iloc)[0], F.lit(False)))
                 self._lambda_depth -= 1
-                fail = F.coalesce(value.isNotNull() & ~ok, F.lit(False))
-                valids.append(~fail)
-                viols.append(self._viol(
-                    fail, f"{node.loc}/additionalProperties", iloc,
-                    F.lit("additional property values do not match schema")))
+                self._check(valids, viols, self._fail(value, ok),
+                            f"{node.loc}/additionalProperties", iloc,
+                            F.lit("additional property values do not "
+                                  "match schema"))
         if node.property_names is not None:
             pn = node.property_names
             self._lambda_depth += 1
             ok = F.forall(F.map_keys(value), lambda k: F.coalesce(
                 self.build(pn, T.StringType(), k, iloc)[0], F.lit(False)))
             self._lambda_depth -= 1
-            fail = F.coalesce(value.isNotNull() & ~ok, F.lit(False))
-            valids.append(~fail)
-            viols.append(self._viol(
-                fail, f"{node.loc}/propertyNames", iloc,
-                F.lit("invalid property name")))
+            self._check(valids, viols, self._fail(value, ok),
+                        f"{node.loc}/propertyNames", iloc,
+                        F.lit("invalid property name"))
         if node.dependent_required:
             for prop, deps in node.dependent_required.items():
                 present = F.map_contains_key(value, F.lit(prop))
@@ -1249,24 +1235,20 @@ class PlanBuilder:
                     F.map_contains_key(value, F.lit(d)) for d in deps],
                     F.lit(True))
                 ok = guard(F.when(present, deps_ok).otherwise(F.lit(True)))
-                fail = F.coalesce(~ok, F.lit(False))
-                valids.append(~fail)
-                viols.append(self._viol(
-                    fail, f"{node.loc}/dependentRequired", iloc,
-                    F.lit(MESSAGES["dependent_required"].format(
-                        want=", ".join(f"'{d}'" for d in deps),
-                        prop=f"'{prop}'"))))
+                self._check(valids, viols, F.coalesce(~ok, F.lit(False)),
+                            f"{node.loc}/dependentRequired", iloc,
+                            F.lit(MESSAGES["dependent_required"].format(
+                                want=", ".join(f"'{d}'" for d in deps),
+                                prop=f"'{prop}'")))
         if node.dependent_schemas:
             for prop, sub in node.dependent_schemas.items():
                 s_valid, _s_viols = self.build(sub, dtype, value, iloc)
                 ok = guard(F.when(F.map_contains_key(value, F.lit(prop)),
                                   F.coalesce(s_valid, F.lit(False)))
                            .otherwise(F.lit(True)))
-                fail = F.coalesce(~ok, F.lit(False))
-                valids.append(~fail)
-                viols.append(self._viol(
-                    fail, f"{node.loc}/dependentSchemas/{prop}", iloc,
-                    F.lit(f"schema for dependency '{prop}' failed")))
+                self._check(valids, viols, F.coalesce(~ok, F.lit(False)),
+                            f"{node.loc}/dependentSchemas/{prop}", iloc,
+                            F.lit(f"schema for dependency '{prop}' failed"))
         if node.unevaluated_properties is not None:
             # runtime KEY-annotation flow: map keys are runtime values, so
             # the evaluated-flag becomes a per-key lambda — static matches
@@ -1298,22 +1280,18 @@ class PlanBuilder:
                 ok = None
             self._lambda_depth -= 1
             if ok is not None:
-                fail = F.coalesce(value.isNotNull() & ~ok, F.lit(False))
-                valids.append(~fail)
-                viols.append(self._viol(
-                    fail, f"{node.loc}/unevaluatedProperties", iloc, msg))
+                self._check(valids, viols, self._fail(value, ok),
+                            f"{node.loc}/unevaluatedProperties", iloc, msg)
         for bound, kw, word in ((node.min_properties, "minProperties", ">="),
                                 (node.max_properties, "maxProperties", "<=")):
             if bound is None:
                 continue
             cnt = F.size(value)
             ok = guard(cnt >= bound if word == ">=" else cnt <= bound)
-            fail = F.coalesce(~ok, F.lit(False))
-            valids.append(~fail)
-            viols.append(self._viol(
-                fail, f"{node.loc}/{kw}", iloc,
-                F.lit(f"{'minimum' if word == '>=' else 'maximum'} {bound} "
-                      f"properties required")))
+            self._check(valids, viols, F.coalesce(~ok, F.lit(False)),
+                        f"{node.loc}/{kw}", iloc,
+                        F.lit(f"{'minimum' if word == '>=' else 'maximum'} "
+                              f"{bound} properties required"))
 
     # ---------------------------------------------------------- logic
     def _logic_checks(self, node: Node, dtype, value, iloc: Column,
@@ -1353,11 +1331,8 @@ class PlanBuilder:
                                if node.else_ is not None else (F.lit(True), []))
             valids.append(F.when(cond, F.coalesce(then_v, F.lit(False)))
                           .otherwise(F.coalesce(else_v, F.lit(False))))
-            t_arr = (F.concat(*then_vs) if len(then_vs) > 1
-                     else (then_vs[0] if then_vs else self.empty))
-            e_arr = (F.concat(*else_vs) if len(else_vs) > 1
-                     else (else_vs[0] if else_vs else self.empty))
-            viols.append(F.when(cond, t_arr).otherwise(e_arr))
+            viols.append(F.when(cond, concat_violations(then_vs, self.empty))
+                         .otherwise(concat_violations(else_vs, self.empty)))
 
 
 def _ddl_from_schema(node: Node) -> str:

@@ -58,7 +58,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..engine import Engine, _engine
+from ..engine import Engine, _engine, verdict_aggregates, violation_rows
 from ..operators import _ckpt
 from ..schema import CompiledSchema
 
@@ -316,14 +316,9 @@ def _validate_pending(df: DataFrame, partition_col: str, key_rows: list,
             ann = _ckpt.pin(ann.select(partition_col, "valid",
                                        "violations", "violation_count"),
                             _ckpt.StorageLevel.MEMORY_AND_DISK)
-            # explode_outer + null filter prunes passing rows (empty
-            # arrays) without the inferred-filter pushdown blowup
-            # (engine.violations)
-            vio = (ann.select(partition_col,
-                              F.explode_outer("violations").alias("v"))
-                   .filter(F.col("v").isNotNull())
-                   .select(partition_col, "v.instance_location",
-                           "v.keyword_location", "v.error"))
+            vio = violation_rows(ann, partition_col).select(
+                partition_col, "instance_location", "keyword_location",
+                "error")
             layout = [partition_col]
             if batch is not None:
                 vio = vio.withColumn("_vbatch", F.lit(batch))
@@ -334,12 +329,7 @@ def _validate_pending(df: DataFrame, partition_col: str, key_rows: list,
                 .parquet(violations_path))
 
         rows = (ann.groupBy(partition_key_col(partition_col).alias("_p"))
-                .agg(F.count(F.lit(1)).alias("n_rows"),
-                     F.sum((~F.col("valid")).cast("long"))
-                     .alias("n_invalid"),
-                     F.sum("violation_count").alias("n_violations"),
-                     F.min(F.col("valid").cast("int")).alias("_all_valid"))
-                .collect())
+                .agg(*verdict_aggregates()).collect())
     return {r._p: {"n_rows": r.n_rows, "n_invalid": r.n_invalid,
-                   "n_violations": r.n_violations,
-                   "valid": bool(r._all_valid)} for r in rows}
+                   "n_violations": r.n_violations, "valid": r.valid}
+            for r in rows}

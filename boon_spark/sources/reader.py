@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..loaders import _yaml_jsonable
+
 # corrupt-row marker column for JSON reads (see read_table): a
 # distinctive name because a dataset may legitimately contain a field
 # called _corrupt_record
@@ -23,28 +25,6 @@ def iceberg_available(spark: SparkSession) -> bool:
         return True
     except Exception:
         return False
-
-
-def _yaml_jsonable(v, location: str):
-    """Normalize PyYAML's YAML-1.1 native scalars into the JSON data
-    model: unquoted ISO dates/timestamps parse to datetime objects,
-    which json.dumps rejects — render them as ISO-8601 strings, exactly
-    what the reference's YAML 1.2 pipeline sees (so ``format: date``
-    keeps working).  Anything else non-JSON (e.g. ``!!binary``) fails
-    loudly.  (YAML-1.1 booleans like unquoted ``yes`` still parse to
-    true — quote them in the source if a string is meant.)"""
-    import datetime
-    if isinstance(v, dict):
-        return {str(k): _yaml_jsonable(x, location) for k, x in v.items()}
-    if isinstance(v, list):
-        return [_yaml_jsonable(x, location) for x in v]
-    if isinstance(v, (datetime.date, datetime.datetime)):
-        return v.isoformat()
-    if v is None or isinstance(v, (bool, int, float, str)):
-        return v
-    raise ValueError(
-        f"{location}: YAML value of type {type(v).__name__} has no JSON "
-        f"equivalent (quote it as a string if that is what is meant)")
 
 
 def read_table(spark: SparkSession, location: str, *,

@@ -29,14 +29,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..engine import Engine, _engine
+from ..engine import _engine, verdict_aggregates
 
 
 def annotate_stream(stream_df: DataFrame, spec, *,
                     row_id: Optional[str] = None) -> DataFrame:
     """Per-row verdicts + violations on a streaming DataFrame — the same
-    single projection as batch (stateless, no watermark needed)."""
-    return Engine.from_schema(spec, row_id=row_id).annotate(stream_df)
+    single projection as batch (stateless, no watermark needed).
+    ``spec`` is a spec dict or a ``CompiledSchema``."""
+    return _engine(spec, row_id).annotate(stream_df)
 
 
 def dedup_stream(stream_df: DataFrame, keys: list, *, ts_col: str,
@@ -66,10 +67,9 @@ def violation_rate(stream_df: DataFrame, spec, *, ts_col: str,
     keys = [F.window(F.col(ts_col), window).alias("window")]
     if by:
         keys.append(F.col(by))
-    return (ann.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("n_rows"),
-                 F.sum((~F.col("valid")).cast("long")).alias("n_invalid"),
-                 F.sum("violation_count").alias("n_violations"))
+    # the verdict counts; a window's verdict is its invalid_rate
+    _valid, *counts = verdict_aggregates()
+    return (ann.groupBy(*keys).agg(*counts)
             .withColumn("invalid_rate",
                         F.col("n_invalid") / F.col("n_rows")))
 

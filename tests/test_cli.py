@@ -62,6 +62,48 @@ def test_yaml_schema_and_basic_format(tmp_path):
     assert lines[0]["keywordLocation"] == "/properties/lang/enum"
 
 
+def test_yaml_schema_unquoted_date_is_a_string(tmp_path):
+    # an unquoted YAML date compiles to the string a JSON schema holds:
+    # the YAML and JSON spellings of one schema give one verdict
+    good, bad = tmp_path / "good.jsonl", tmp_path / "bad.jsonl"
+    good.write_text(json.dumps({"d": "2020-01-01"}) + "\n")
+    bad.write_text(json.dumps({"d": "2020-01-02"}) + "\n")
+    (tmp_path / "s.yaml").write_text(
+        "properties:\n  d: {enum: [2020-01-01]}\n")
+    (tmp_path / "s.json").write_text(json.dumps(
+        {"properties": {"d": {"enum": ["2020-01-01"]}}}))
+    for spec, table, rc in (("s.yaml", good, 0), ("s.json", good, 0),
+                            ("s.yaml", bad, 2)):
+        r = run_cli("--schema", str(tmp_path / spec), "--table", str(table),
+                    "--format", "basic", "--cpus", "1")
+        assert r.returncode == rc, (spec, table, r.stdout, r.stderr)
+
+
+def test_ref_loader_resolves_file_uri_forms(tmp_path):
+    # percent-encoded, single-slash and localhost file: URIs all load
+    from boon_spark.cli import make_ref_loader
+    lib = tmp_path / "dir x" / "lib.json"
+    lib.parent.mkdir()
+    lib.write_text(json.dumps({"maximum": 10}))
+    load = make_ref_loader(str(tmp_path / "main.json"))
+    for uri in (lib.as_uri(), f"file:{lib}", f"file://localhost{lib}"):
+        assert load(uri) == {"maximum": 10}, uri
+
+
+def test_cli_ref_to_percent_encoded_file_uri(tmp_path):
+    lib = tmp_path / "dir x" / "lib.json"
+    lib.parent.mkdir()
+    lib.write_text(json.dumps({"$defs": {"small": {"maximum": 10}}}))
+    (tmp_path / "main.json").write_text(json.dumps(
+        {"properties": {"n": {"$ref": lib.as_uri() + "#/$defs/small"}}}))
+    data = tmp_path / "t.jsonl"
+    data.write_text(json.dumps({"n": 50}) + "\n")
+    r = run_cli("--schema", str(tmp_path / "main.json"),
+                "--table", str(data), "--format", "basic", "--cpus", "1")
+    assert r.returncode == 2, r.stderr
+    assert "must be <=10" in r.stdout
+
+
 def test_cli_cross_file_ref(tmp_path):
     # split-across-files schema suite: $ref into a sibling document
     # (boon FileLoader parity, src/loader.rs:31-41)

@@ -102,6 +102,8 @@ def test_equality_invariant(spark):
     v = check_equality(cur, ref, key="doc_id").collect()
     locs = {r.instance_location for r in v}
     assert locs == {"/d2/tokens", "/d3/tokens"}
+    # an all-passing frame explodes to no rows
+    assert check_equality(cur, cur, key="doc_id").count() == 0
 
 
 def test_validate_table_end_to_end(spark):
@@ -313,3 +315,19 @@ def test_table_constraints_null_semantics(spark):
     assert [(r.instance_location, r.value) for r in v] == \
         [("/d3/source", None)]
     assert v[0].error.startswith("value 'null' not present")
+    # an invariant violation points at the row, at the JSON Pointer root
+    # "" without a row_id (as the engine's own violations do), and a row
+    # failing two invariants gives two rows
+    from boon_spark.operators.invariants import check_invariants
+    invs = [{"name": "has_doc", "expr": "doc_id is not null"},
+            {"name": "no_x", "expr": "coalesce(doc_id, '') <> 'x'"},
+            {"name": "web", "expr": "source = 'web'"}]
+    got = check_invariants(fact, invs, row_id="rid").collect()
+    assert sorted((r.instance_location, r.keyword_location)
+                  for r in got) == [
+        ("/d1", "/x-invariants/has_doc"), ("/d2", "/x-invariants/has_doc"),
+        ("/d3", "/x-invariants/no_x"), ("/d3", "/x-invariants/web")]
+    got = check_invariants(fact.filter("rid = 'd3'"), invs).collect()
+    assert [(r.instance_location, r.keyword_location) for r in got] == [
+        ("", "/x-invariants/no_x"), ("", "/x-invariants/web")]
+    assert check_invariants(fact.filter("rid = 'd3'"), invs[:1]).count() == 0

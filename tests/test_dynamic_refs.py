@@ -234,9 +234,9 @@ def test_recursive_contentschema_rejected():
                  "contentSchema": {"$ref": "#/$defs/n"}}},
                  "properties": {"x": {"$ref": "#/$defs/n"}}}})
         # the DDL derivation cannot express an unbounded parse schema
-        from boon_spark.plans.builder import PlanBuilder
+        from boon_spark.plans.builder import PlanBuilder, row_pointer
         pb = PlanBuilder(T.StructType([T.StructField("x", T.StringType())]))
-        pb.build(cs.root, None, None, pb.root_iloc())
+        pb.build(cs.root, None, None, row_pointer(None))
 
 
 def test_recursive_propertynames_rejected(spark):

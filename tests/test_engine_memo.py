@@ -284,14 +284,12 @@ def test_memo_under_concurrent_annotates(monkeypatch):
         def __init__(self, df_schema, **kw):
             self.prelude, self.empty = {}, df_schema
 
-        def root_iloc(self):
-            return None
-
         def build(self, *a):
             return self.empty, []
 
     monkeypatch.setattr(engine, "_plans", {})
     monkeypatch.setattr(engine, "PlanBuilder", FakeBuilder)
+    monkeypatch.setattr(engine, "row_pointer", lambda row_id: None)
     eng = Engine.from_schema({"properties": {"x": {"maximum": 1}}})
     sc = NS(applicationId="app")
 

@@ -70,6 +70,21 @@ def test_violation_rate_windows(spark, input_dir):
     assert {r.source for r in rows} == {"web", "books"}
 
 
+def test_streaming_entry_points_take_a_compiled_schema(spark, input_dir):
+    from boon_spark.schema import compile_schema
+    compiled = compile_schema(SPEC)
+    stream = _read_stream(spark, input_dir)
+    assert annotate_stream(stream, compiled).isStreaming
+    assert cumulative_source_state(stream, compiled,
+                                   key_col="source").isStreaming
+    _run(violation_rate(stream, compiled, ts_col="ts",
+                        window="10 minutes"), "t_rate_compiled",
+         out_mode="complete")
+    rows = spark.sql("select * from t_rate_compiled").collect()
+    assert (sum(r.n_rows for r in rows),
+            sum(r.n_invalid for r in rows)) == (120, 20)
+
+
 def test_cumulative_state_across_batches(spark, input_dir, tmp_path):
     st = cumulative_source_state(
         _read_stream(spark, input_dir, per_trigger=1), SPEC,
