@@ -29,38 +29,26 @@ class UnsupportedKeyword(CompileError):
     """
 
 
-# Message templates mirroring boon `src/lib.rs:560-698`.  `{got}` / `{want}`
-# are filled with Spark string expressions at plan-build time, so the text of
-# a violation row matches boon's Display output for the same failure.
+# Message templates mirroring boon `src/lib.rs:560-698`, so the text of a
+# violation row matches boon's Display output for the same failure.  The
+# plan builder fills `{want}` and `{prop}` from the schema when it builds
+# the plan, and `{got}` too where it is known then (`type`: the column's
+# type); a `{got}` that depends on the row (`min_properties`,
+# `max_properties`) becomes a Spark string expression evaluated per row.
+# Messages of the other keywords are written where the builder emits them.
 MESSAGES = {
     "false_schema": "false schema",
     "type": "want {want}, but got {got}",
     "enum": "value must be one of {want}",
     "enum_one": "value must be {want}",
     "const": "value must be {want}",
-    "format": "{got} is not valid {want}",
     "required": "missing properties {want}",
     "dependent_required": "properties {want} required, if {prop} property exists",
     "min_properties": "minimum {want} properties required, but got {got} properties",
     "max_properties": "maximum {want} properties required, but got {got} properties",
-    "min_items": "minimum {want} items required, but got {got} items",
-    "max_items": "maximum {want} items required, but got {got} items",
     "contains": "no items match contains schema",
-    "min_contains": "minimum {want} items required to match contains schema, but found {got}",
-    "max_contains": "maximum {want} items required to match contains schema, but found {got}",
-    "unique_items": "items at {i} and {j} are equal",
-    "min_length": "length must be >={want}, but got {got}",
-    "max_length": "length must be <={want}, but got {got}",
-    "pattern": "{got} does not match pattern {want}",
-    "minimum": "must be >={want}, but got {got}",
-    "maximum": "must be <={want}, but got {got}",
-    "exclusive_minimum": "must be > {want} but got {got}",
-    "exclusive_maximum": "must be < {want} but got {got}",
-    "multiple_of": "{got} is not multipleOf {want}",
     "not": "not failed",
-    "all_of": "allOf failed",
     "any_of": "anyOf failed",
     "one_of_none": "oneOf failed, none matched",
     "one_of_many": "oneOf failed, multiple subschemas matched",
-    "items": "item does not match items schema",
 }

@@ -2,13 +2,17 @@
 (reference ``src/formats.rs:24-48``) re-expressed Spark-first.
 
 Design: every format is a function ``Column -> Column[boolean]``.  Formats
-expressible as a single regex stay JVM-side (``rlike`` → whole-stage
-codegen); the residue (calendar math, leap-second rules, ipv6 grammar,
-URI grammar) runs as Arrow-batched pandas UDFs — never per-row Python
-(input_hint mandate).  Applicability follows the reference
-(``src/formats.rs:51-53``): format applies to strings only, non-strings and
-NULLs pass — the plan builder enforces that, these predicates may assume
-non-null string input.
+that need no Python grammar stay JVM-side (whole-stage codegen): a single
+``rlike`` for the regex formats, and for the calendar formats (date,
+time, date-time, period) a shape ``rlike`` plus integer field checks —
+so they also run inside higher-order functions (array items, map
+values).  The residue (ipv6, email, URI and IRI grammars, uri-template,
+regex, idn-*) runs as Arrow-batched pandas UDFs — never per-row Python
+(input_hint mandate), but never inside a higher-order function either:
+the plan builder refuses such a format under ``items`` and the like.
+Applicability follows the reference (``src/formats.rs:51-53``): format
+applies to strings only, non-strings and NULLs pass — the plan builder
+enforces that, these predicates may assume non-null string input.
 
 Custom registration mirrors boon's ``register_format``
 (``src/compiler.rs:146-150``): :func:`register_format` takes a name and
@@ -32,78 +36,89 @@ from . import bump_generation
 # regex-expressible formats (JVM-side, codegen'd)
 # ---------------------------------------------------------------------------
 
+# true end of input, read the same by Java and Python regex engines: ``$``
+# (and Java's ``\Z``) also match before a final line terminator, and
+# Python 3.11's ``re`` has no ``\z``
+_END = r"(?![\s\S])"
 _LABEL = r"[A-Za-z0-9](?:[A-Za-z0-9-]{0,61}[A-Za-z0-9])?"
 _JP_TOKEN = r"(?:[^~/]|~[01])*"
 
 _REGEXES = {
     "uuid": r"^[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-"
-            r"[0-9a-fA-F]{4}-[0-9a-fA-F]{12}$",
+            rf"[0-9a-fA-F]{{4}}-[0-9a-fA-F]{{12}}{_END}",
     "ipv4": r"^(?:(?:25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])\.){3}"
-            r"(?:25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])$",
-    "hostname": rf"^(?=.{{1,253}}$){_LABEL}(?:\.{_LABEL})*$",
-    "json-pointer": rf"^(?:/{_JP_TOKEN})*$",
-    "relative-json-pointer": rf"^(?:0|[1-9][0-9]*)(?:#|(?:/{_JP_TOKEN})*)$",
+            rf"(?:25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9]){_END}",
+    "hostname": rf"^(?=.{{1,253}}{_END}){_LABEL}(?:\.{_LABEL})*{_END}",
+    "json-pointer": rf"^(?:/{_JP_TOKEN})*{_END}",
+    "relative-json-pointer":
+        rf"^(?:0|[1-9][0-9]*)(?:#|(?:/{_JP_TOKEN})*){_END}",
     # ISO8601 duration (RFC3339 appendix A grammar, no fractions —
     # matches boon src/formats.rs:230-288)
     "duration": r"^P(?:\d+W|(?=\d|T)(?:\d+Y)?(?:\d+M)?(?:\d+D)?"
-                r"(?:T(?=\d)(?:\d+H)?(?:\d+M)?(?:\d+S)?)?)$",
+                rf"(?:T(?=\d)(?:\d+H)?(?:\d+M)?(?:\d+S)?)?){_END}",
 }
 
 # ---------------------------------------------------------------------------
-# python checkers for the non-regex residue (vectorized via pandas UDF)
+# calendar formats (JVM-side): one shape regex, then the fields read at
+# fixed positions — try_cast, because Catalyst does not promise to
+# evaluate the shape check first under ANSI mode
 # ---------------------------------------------------------------------------
 
-_DATE_RE = re.compile(r"^(\d{4})-(\d{2})-(\d{2})$")
-_TIME_RE = re.compile(
-    r"^(\d{2}):(\d{2}):(\d{2})(?:\.\d+)?(?:([Zz])|([+-])(\d{2}):(\d{2}))$")
-
-_DAYS = [31, 28, 31, 30, 31, 30, 31, 31, 30, 31, 30, 31]
+_DATE = r"[0-9]{4}-[0-9]{2}-[0-9]{2}"
+_TIME = (r"[0-9]{2}:[0-9]{2}:[0-9]{2}(?:\.[0-9]+)?"
+         r"(?:[Zz]|[+-][0-9]{2}:[0-9]{2})")
 
 
-def _leap(y: int) -> bool:
-    return y % 4 == 0 and (y % 100 != 0 or y % 400 == 0)
+def _int(c: Column, pos: int, n: int = 2) -> Column:
+    return F.substring(c, pos, n).try_cast("int")
 
 
-def _check_date(s: str) -> bool:
+def _date_fields_ok(c: Column) -> Column:
     # real calendar + leap years, matching boon src/formats.rs:73-124
-    m = _DATE_RE.match(s)
-    if not m:
-        return False
-    y, mo, d = int(m[1]), int(m[2]), int(m[3])
-    if not (1 <= mo <= 12) or d < 1:
-        return False
-    days = 29 if (mo == 2 and _leap(y)) else _DAYS[mo - 1]
-    return d <= days
+    y, mo, d = _int(c, 1, 4), _int(c, 6), _int(c, 9)
+    leap = (y % 4 == 0) & ((y % 100 != 0) | (y % 400 == 0))
+    days = (F.when(mo == 2, F.when(leap, 29).otherwise(28))
+            .when(mo.isin(4, 6, 9, 11), 30).otherwise(31))
+    return mo.between(1, 12) & (d >= 1) & (d <= days)
 
 
-def _check_time(s: str) -> bool:
-    # RFC3339 full-time; leap second only at 23:59 UTC after applying
-    # the offset, matching boon src/formats.rs:126-204
-    m = _TIME_RE.match(s)
-    if not m:
-        return False
-    h, mi, sec = int(m[1]), int(m[2]), int(m[3])
-    if h > 23 or mi > 59 or sec > 60:
-        return False
-    if m[5]:  # numeric offset
-        oh, om = int(m[6]), int(m[7])
-        if oh > 23 or om > 59:
-            return False
-        off = (oh * 60 + om) * (1 if m[5] == "+" else -1)
-    else:
-        off = 0
-    if sec == 60:
-        utc_min = (h * 60 + mi - off) % 1440
-        return utc_min == 23 * 60 + 59
-    return True
+def _time_fields_ok(c: Column, at: int) -> Column:
+    # RFC3339 full-time starting at ``at``, its offset the last six
+    # characters unless it ends in Z; a leap second only at 23:59 UTC
+    # after applying the offset, matching boon src/formats.rs:126-204
+    h, mi, sec = _int(c, at), _int(c, at + 3), _int(c, at + 6)
+    oh, om = _int(c, -5), _int(c, -2)
+    utc = F.substring(c, -1, 1).isin("Z", "z")
+    sign = F.when(F.substring(c, -6, 1) == "-", -1).otherwise(1)
+    off = F.when(utc, 0).otherwise(sign * (oh * 60 + om))
+    return ((h <= 23) & (mi <= 59) & (sec <= 60)
+            & (utc | ((oh <= 23) & (om <= 59)))
+            & ((sec < 60) | (F.pmod(h * 60 + mi - off, 1440) == 1439)))
 
 
-def _check_datetime(s: str) -> bool:
-    for t_char in ("T", "t"):
-        if t_char in s:
-            date_part, _, time_part = s.partition(t_char)
-            return _check_date(date_part) and _check_time(time_part)
-    return False
+def _date(c: Column) -> Column:
+    return c.rlike(f"^{_DATE}{_END}") & _date_fields_ok(c)
+
+
+def _time(c: Column) -> Column:
+    return c.rlike(f"^{_TIME}{_END}") & _time_fields_ok(c, 1)
+
+
+def _date_time(c: Column) -> Column:
+    return (c.rlike(f"^{_DATE}[Tt]{_TIME}{_END}") & _date_fields_ok(c)
+            & _time_fields_ok(c, 12))
+
+
+def _period(c: Column) -> Column:
+    # RFC3339 period: start/end, start/duration, or duration/end, split
+    # at the first '/' (boon src/formats.rs:290-321); without a '/' the
+    # end side is empty and fails
+    start = F.substring_index(c, "/", 1)
+    end = F.substring(c, F.length(start) + 2, F.length(c))
+    dur_start = start.rlike(_REGEXES["duration"])
+    dur_end = end.rlike(_REGEXES["duration"])
+    return ((_date_time(start) | dur_start) & (_date_time(end) | dur_end)
+            & ~(dur_start & dur_end))
 
 
 def _check_ipv6(s: str) -> bool:
@@ -219,20 +234,6 @@ def _check_regex_fmt(s: str) -> bool:
         return False
 
 
-def _check_period(s: str) -> bool:
-    # RFC3339 period: start/end, start/duration, or duration/end
-    # (boon src/formats.rs:290-321)
-    if "/" not in s:
-        return False
-    a, _, b = s.partition("/")
-    dur = re.compile(_REGEXES["duration"])
-    a_ok = _check_datetime(a) or bool(dur.match(a))
-    b_ok = _check_datetime(b) or bool(dur.match(b))
-    if not (a_ok and b_ok):
-        return False
-    return not (dur.match(a) and dur.match(b))
-
-
 def _check_idn_hostname(s: str) -> bool:
     try:
         import idna
@@ -260,9 +261,6 @@ def _check_idn_email(s: str) -> bool:
 
 
 _PY_CHECKERS: dict[str, Callable[[str], bool]] = {
-    "date": _check_date,
-    "time": _check_time,
-    "date-time": _check_datetime,
     "ipv6": _check_ipv6,
     "email": _check_email,
     "idn-email": _check_idn_email,
@@ -273,12 +271,13 @@ _PY_CHECKERS: dict[str, Callable[[str], bool]] = {
     "iri-reference": _check_uri_reference,
     "uri-template": _check_uri_template,
     "regex": _check_regex_fmt,
-    "period": _check_period,
 }
 
 
 def _vectorized(fn: Callable[[str], bool]) -> Callable[[Column], Column]:
-    """Wrap an elementwise checker as an Arrow-batched pandas UDF."""
+    """Wrap an elementwise checker as an Arrow-batched pandas UDF.  The
+    builder carries ``python_udf = True``: Spark cannot evaluate it inside
+    a higher-order function, so the plan builder refuses it there."""
 
     def make(col: Column) -> Column:
         @pandas_udf("boolean")
@@ -286,6 +285,7 @@ def _vectorized(fn: Callable[[str], bool]) -> Callable[[Column], Column]:
             return batch.map(lambda s: True if s is None else fn(s))
         return _check(col)
 
+    make.python_udf = True
     return make
 
 
@@ -306,6 +306,8 @@ FORMATS: dict[str, Callable[[Column], Column]] = {}
 
 for _name, _pat in _REGEXES.items():
     FORMATS[_name] = (lambda p: (lambda c: c.rlike(p)))(_pat)
+FORMATS.update({"date": _date, "time": _time, "date-time": _date_time,
+                "period": _period})
 
 # Python-checker formats are Arrow-batched UDFs (no JVM pre-prune: an
 # ArrowEvalPython stage evaluates the UDF for the whole batch regardless

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..engine import violation_rows
-from ..plans.builder import concat_violations
+from ..plans.builder import concat_violations, row_pointer
 from .invariants import violation
 
 
@@ -36,7 +36,7 @@ def check_equality(cur: DataFrame, ref: DataFrame, *, key: str = "doc_id",
     joined = cur.select(key, *columns).join(r, on=key, how="left")
 
     present = F.col("_ref_present").isNotNull()
-    row = F.concat(F.lit("/"), F.col(key).cast("string"))
+    row = row_pointer(key)
     checks = [violation(~present, row, "/x-equality/_missing",
                         "key missing from reference")]
     for c in columns:

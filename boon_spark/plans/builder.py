@@ -397,7 +397,14 @@ class PlanBuilder:
 
         # ---- format (src/validator.rs:141-146): strings only, others pass
         if node.format is not None and sval is not None:
-            pred = format_predicate(node.format)(sval)
+            check = format_predicate(node.format)
+            if self._lambda_depth > 0 and getattr(check, "python_udf", False):
+                raise CompileError(
+                    f"{node.loc}/format: format {node.format!r} runs as a "
+                    f"Python UDF, which Spark cannot evaluate inside a "
+                    f"higher-order function (array items, map keys or "
+                    f"values); only a Column-builder format can run there")
+            pred = check(sval)
             add(pred, "format", F.concat(
                 F.lit('"'), sval, F.lit(f'" is not valid {node.format}')))
 
@@ -1130,17 +1137,22 @@ class PlanBuilder:
             cnt = reduce(lambda a, b: a + b,
                          [get(n).isNotNull().cast("int") for n in fields]) \
                 if fields else F.lit(0)
-            for bound, kw, word in (
-                    (node.min_properties, "minProperties", "minimum"),
-                    (node.max_properties, "maxProperties", "maximum")):
-                if bound is None:
-                    continue
-                ok = guard(cnt >= bound if word == "minimum" else cnt <= bound)
-                self._check(valids, viols, F.coalesce(~ok, F.lit(False)),
-                            f"{node.loc}/{kw}", iloc, F.concat(
-                                F.lit(f"{word} {bound} properties "
-                                      f"required, but got "),
-                                cnt.cast("string"), F.lit(" properties")))
+            self._property_count_checks(node, cnt, guard, iloc, valids, viols)
+
+    def _property_count_checks(self, node: Node, cnt: Column, guard,
+                               iloc: Column, valids: list, viols: list):
+        """minProperties / maxProperties over ``cnt``, the number of
+        properties present (non-NULL struct fields, or a map's size)."""
+        for bound, kw, key in (
+                (node.min_properties, "minProperties", "min_properties"),
+                (node.max_properties, "maxProperties", "max_properties")):
+            if bound is None:
+                continue
+            ok = guard(cnt >= bound if kw == "minProperties" else cnt <= bound)
+            head, tail = MESSAGES[key].format(want=bound, got="\0").split("\0")
+            self._check(valids, viols, F.coalesce(~ok, F.lit(False)),
+                        f"{node.loc}/{kw}", iloc, F.concat(
+                            F.lit(head), cnt.cast("string"), F.lit(tail)))
 
     def _map_checks(self, node: Node, dtype: T.MapType, value: Column,
                     iloc: Column, valids: list, viols: list):
@@ -1282,16 +1294,9 @@ class PlanBuilder:
             if ok is not None:
                 self._check(valids, viols, self._fail(value, ok),
                             f"{node.loc}/unevaluatedProperties", iloc, msg)
-        for bound, kw, word in ((node.min_properties, "minProperties", ">="),
-                                (node.max_properties, "maxProperties", "<=")):
-            if bound is None:
-                continue
-            cnt = F.size(value)
-            ok = guard(cnt >= bound if word == ">=" else cnt <= bound)
-            self._check(valids, viols, F.coalesce(~ok, F.lit(False)),
-                        f"{node.loc}/{kw}", iloc,
-                        F.lit(f"{'minimum' if word == '>=' else 'maximum'} "
-                              f"{bound} properties required"))
+        if node.min_properties is not None or node.max_properties is not None:
+            self._property_count_checks(node, F.size(value), guard, iloc,
+                                        valids, viols)
 
     # ---------------------------------------------------------- logic
     def _logic_checks(self, node: Node, dtype, value, iloc: Column,

@@ -99,9 +99,15 @@ def test_equality_invariant(spark):
     ref = spark.createDataFrame(
         [("d1", [1, 2]), ("d2", [3, 5]), ("d3", None)],
         "doc_id string, tokens array<int>")
-    v = check_equality(cur, ref, key="doc_id").collect()
+    null_key = spark.createDataFrame([(None, [1, 2])],
+                                     "doc_id string, tokens array<int>")
+    v = check_equality(cur.union(null_key), ref, key="doc_id").collect()
     locs = {r.instance_location for r in v}
-    assert locs == {"/d2/tokens", "/d3/tokens"}
+    # a NULL key never joins: it is missing, pointed at "/?" like every
+    # other violation row of a NULL id
+    assert locs == {"/d2/tokens", "/d3/tokens", "/?"}
+    assert [r.keyword_location for r in v if r.instance_location == "/?"] \
+        == ["/x-equality/_missing"]
     # an all-passing frame explodes to no rows
     assert check_equality(cur, cur, key="doc_id").count() == 0
 

@@ -69,6 +69,18 @@ def test_unknown_format_is_compile_error():
                            assert_format=True)
 
 
+def test_udf_format_under_items_is_compile_error(spark):
+    # a pandas UDF cannot run inside a higher-order function: the builder
+    # refuses it by keyword location instead of Spark's AnalysisException
+    eng = Engine.from_schema(
+        {"properties": {"xs": {"items": {"format": "email"}}}},
+        assert_format=True)
+    df = spark.createDataFrame([(["a@b.com"],)], "xs array<string>")
+    with pytest.raises(CompileError,
+                       match="/properties/xs/items/format: format 'email'"):
+        eng.annotate(df)
+
+
 def test_anchor_resolution(spark):
     eng = Engine.from_schema({
         "$defs": {"pos": {"$anchor": "positive", "minimum": 0}},

@@ -76,6 +76,25 @@ def test_contains_reports_matching_indices(spark):
                           "schema, but found 1 items at 1")
 
 
+def test_property_count_message_same_for_struct_and_map(spark):
+    # boon: MinProperties { got, want } → "minimum 2 properties required,
+    # but got 1 properties" — a struct counts its present fields, a map
+    # its entries
+    eng = Engine.from_schema(
+        {"properties": {"s": {"minProperties": 2},
+                        "m": {"minProperties": 2}}}, row_id="k")
+    df = spark.createDataFrame([("r1", ("x", None), {"a": 1})],
+                               "k string, s struct<a:string,b:string>, "
+                               "m map<string,int>")
+    v = sorted(eng.validate(df).violations().collect(),
+               key=lambda r: r.keyword_location)
+    assert [(r.keyword_location, r.error) for r in v] == [
+        ("/properties/m/minProperties",
+         "minimum 2 properties required, but got 1 properties"),
+        ("/properties/s/minProperties",
+         "minimum 2 properties required, but got 1 properties")]
+
+
 def test_absolute_keyword_location_plain(res):
     # no $id, no $ref: dereferenced location == keyword location with a
     # bare-fragment prefix (boon output.rs:416-445)

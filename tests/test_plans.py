@@ -93,6 +93,23 @@ def test_table_checks_have_no_lambdas(spark, seq_parquet):
     assert "lambdafunction" not in _plan(eq)
 
 
+def test_calendar_format_runs_in_the_jvm(spark):
+    # the format_date gate's shape: a date string, every 10th corrupted;
+    # the calendar check is a Column expression, not an Arrow UDF
+    d = F.date_format(F.date_add(F.lit("2020-01-01").cast("date"),
+                                 F.col("id").cast("int")), "yyyy-MM-dd")
+    df = spark.range(100).select(
+        F.col("id").alias("o_orderkey"),
+        F.when(F.col("id") % 10 == 0, F.concat(d, F.lit("x")))
+        .otherwise(d).alias("d_str"))
+    eng = Engine.from_schema({"properties": {"d_str": {"format": "date"}}},
+                             row_id="o_orderkey", assert_format=True)
+    out = eng.validate(df).violations().select("instance_location",
+                                               "keyword_location")
+    assert "ArrowEvalPython" not in _plan(out)
+    assert out.count() == 10
+
+
 def test_column_pruning_reaches_scan(spark, tmp_path):
     p = str(tmp_path / "docs.parquet")
     spark.createDataFrame(
