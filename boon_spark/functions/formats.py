@@ -207,12 +207,17 @@ _TPL_VAR_RE = re.compile(
     r"(?:,(?:[A-Za-z0-9_%.]|%[0-9A-Fa-f]{2})+(?::[1-9][0-9]{0,3}|\*)?)*$")
 
 
+# what RFC 6570 §2.1 excludes from a literal: CTL, SP, '"', "'", '<',
+# '>', '\\', '^', '`', '|', and a '%' that starts no pct-encoded triplet
+_TPL_BAD_LIT_RE = re.compile(r"[\x00-\x20\x7f\"'<>\\^`|]|%(?![0-9A-Fa-f]{2})")
+
+
 def _check_uri_template(s: str) -> bool:
     # brace balancing + expression grammar (boon src/formats.rs:809-838)
     i = 0
     while i < len(s):
         c = s[i]
-        if c == "}":
+        if c == "}" or _TPL_BAD_LIT_RE.match(s, i):
             return False
         if c == "{":
             j = s.find("}", i)

@@ -24,9 +24,9 @@ Scale notes per operator:
   near-dup join uses the pigeonhole principle: fingerprints within
   hamming distance d share at least one of d+1 chunks, so candidates come
   from d+1 equi-joins on 16-bit chunks, never a cross join.
-* ``embedding_near_dups`` — SimHash random-hyperplane buckets
-  (deterministic planes) + within-bucket cosine; an equi-join on the
-  signature replaces the cross product.
+* ``embedding_near_dups_quantized`` — integer random-hyperplane
+  buckets (deterministic planes) + within-bucket squared-cosine verify,
+  all int64; an equi-join on the signature replaces the cross product.
 """
 
 from __future__ import annotations
@@ -38,7 +38,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ._ckpt import StorageLevel, pin
-from .similarity import _idot, cosine, simhash_signature
+from .similarity import _idot
 
 # ---------------------------------------------------------------------------
 # shingling + exact
@@ -735,11 +735,11 @@ def embedding_near_dups_quantized(df: DataFrame, *,
                                   bits: int = 4, seed: int = 42,
                                   q_bits: int = 10,
                                   max_bucket: int = 64) -> DataFrame:
-    """Integer-exact variant of :func:`embedding_near_dups` — every step
-    is int64 arithmetic, so the result is bit-identical across engines
-    (the float variant risks sign-flips on near-zero hyperplane
-    projections and threshold-boundary cosines; this one is the
-    oracle-pairable gate path).
+    """Embedding near-duplicate pairs ``(id_a, id_b)`` with cosine ≥
+    ``threshold_num/threshold_den`` — every step is int64 arithmetic, so
+    the result is bit-identical across engines (float hyperplane
+    projections risk sign-flips near zero, and float cosines flip at the
+    threshold boundary) and pairs with its DuckDB oracle.
 
     Pipeline: quantize each coordinate to ``floor(x·2^q_bits)``
     (multiplication by a power of two is EXACT in binary floating point,
@@ -756,7 +756,16 @@ def embedding_near_dups_quantized(df: DataFrame, *,
     norms could overflow raises ``ValueError`` there.  The verify's
     ``den²·dot²`` is JVM long arithmetic: |x|≤1, dim≤128, q_bits≤10 keep
     it under 2^63 for den ≤ 5, and past that ANSI mode (Spark 4's
-    default) fails the job instead of wrapping."""
+    default) fails the job instead of wrapping.
+
+    The threshold must satisfy ``threshold_den ≥ 1`` and ``0 ≤
+    threshold_num ≤ threshold_den``, else ``ValueError``: past 1 the
+    verify is always false (Cauchy–Schwarz), ``0/0`` would pass every
+    positive dot, and a negative numerator is squared away."""
+    if not (threshold_den >= 1 and 0 <= threshold_num <= threshold_den):
+        raise ValueError(
+            f"near-dup threshold must be a fraction in [0, 1] with "
+            f"threshold_den >= 1, got {threshold_num}/{threshold_den}")
     from .similarity import _quantized_sig_frame
 
     planes = quantized_planes(dim, bits, seed, q_bits)
@@ -839,36 +848,3 @@ def embedding_near_dups_oracle_sql(*, dim: int, threshold_num: int = 2,
         SELECT id_a, id_b FROM m
         WHERE dot > 0 AND {den2}*dot*dot >= {num2}*na*nb
     """
-
-
-def embedding_near_dups(df: DataFrame, *, vec_col: str = "embedding",
-                        id_col: str = "vec_id", dim: int,
-                        threshold: float = 0.95, bits: int = 12,
-                        seed: int = 42,
-                        max_bucket: int = 1024) -> DataFrame:
-    """Pairs with cosine ≥ threshold, blocked by random-hyperplane
-    signature buckets (deterministic planes; equi-join on the signature
-    replaces the cross product).  Recall trades off with ``bits``.
-
-    ``max_bucket`` bounds the within-bucket quadratic: a degenerate
-    signature bucket (e.g. zero vectors all hashing to one signature)
-    would otherwise re-create the cross join on a single reducer.
-    Over-cap buckets are dropped; audit with :func:`block_size_stats`
-    over the signature column."""
-    sig = simhash_signature(F.col(vec_col), dim, bits=bits, seed=seed)
-    base = df.select(F.col(id_col).alias("_id"),
-                     F.col(vec_col).alias("_v"), sig.alias("_sig"))
-    sizes = (base.groupBy("_sig")
-             .agg(F.count(F.lit(1)).alias("_bn"))
-             .filter(F.col("_bn").between(2, max_bucket))
-             .drop("_bn"))
-    base = base.join(sizes, on="_sig")
-    a = base.select(F.col("_id").alias("id_a"), F.col("_v").alias("v_a"),
-                    "_sig")
-    b = base.select(F.col("_id").alias("id_b"), F.col("_v").alias("v_b"),
-                    "_sig")
-    joined = a.join(b, on="_sig").filter(F.col("id_a") < F.col("id_b"))
-    return (joined
-            .select("id_a", "id_b",
-                    cosine(F.col("v_a"), F.col("v_b")).alias("cos"))
-            .filter(F.col("cos") >= threshold))

@@ -190,41 +190,6 @@ def _postings(corpus: DataFrame, terms: DataFrame, id_col: str,
             .agg(F.count(F.lit(1)).cast("long").alias("tf")))
 
 
-def _bm25_rank_pipeline(corpus: DataFrame, queries: DataFrame, *, k: int,
-                        id_col: str, text_col: str, query_id_col: str,
-                        query_text_col: str, max_query_len: int,
-                        max_doc_len: int, term_score: Column,
-                        agg_score: Column, score_alias: str) -> DataFrame:
-    """The ONE top-k plumbing both scoring variants share (quantized
-    gate + float convenience): persisted query terms and matched
-    postings (the two twice-consumed intermediates — no ReusedExchange
-    forms across a broadcast boundary, measured r5), df aggregate,
-    broadcast joins, per-(query, doc) ``agg_score`` over the caller's
-    ``term_score`` expression (resolved against columns ``df``, ``tf``,
-    ``dl``, ``qtf``, ``n_docs``, ``avg_dl_m``, with the per-term value
-    aliased ``_s``), and the (score desc, doc_id asc) rank window.
-    Keeping this shared is what stops the two variants' cache/join/rank
-    behavior drifting apart."""
-    qterms = pin(_query_terms(queries, query_id_col, query_text_col,
-                              max_query_len), StorageLevel.MEMORY_AND_DISK)
-    stats = _corpus_stats(corpus, text_col, max_doc_len)
-    post = pin(_postings(corpus, qterms, id_col, text_col, max_doc_len),
-               StorageLevel.MEMORY_AND_DISK)
-    dfreq = (post.groupBy("term")
-             .agg(F.count(F.lit(1)).cast("long").alias("df")))
-    scored = (post.join(F.broadcast(dfreq), "term")
-              .join(F.broadcast(qterms), "term")
-              .crossJoin(F.broadcast(stats))
-              .select("query_id", "doc_id", term_score.alias("_s"))
-              .groupBy("query_id", "doc_id")
-              .agg(agg_score.alias(score_alias)))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col(score_alias).desc(), F.col("doc_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id", score_alias))
-
-
 def bm25_topk(corpus: DataFrame, queries: DataFrame, *, k: int,
               id_col: str = "doc_id", text_col: str = "text",
               query_id_col: str = "query_id",
@@ -250,62 +215,25 @@ def bm25_topk(corpus: DataFrame, queries: DataFrame, *, k: int,
              + F.lit(k1n * bn * 1000).cast("long") * F.col("dl"))
     tfq = _div(F.lit(TF_SCALE * (k1n + k1d) * bd).cast("long")
                * adl * F.col("tf"), denom)
-    return _bm25_rank_pipeline(
-        corpus, queries, k=k, id_col=id_col, text_col=text_col,
-        query_id_col=query_id_col, query_text_col=query_text_col,
-        max_query_len=max_query_len, max_doc_len=max_doc_len,
-        term_score=F.col("qtf") * idf_int * tfq,
-        agg_score=F.sum("_s").cast("long"), score_alias="score_int")
-
-
-def bm25_topk_float(corpus: DataFrame, queries: DataFrame, *, k: int,
-                    id_col: str = "doc_id", text_col: str = "text",
-                    query_id_col: str = "query_id",
-                    query_text_col: str = "query_text",
-                    k1: float = 1.2, b: float = 0.75,
-                    max_query_len: int = 64,
-                    max_doc_len: int = 1 << 18) -> DataFrame:
-    """Textbook float-score BM25 top-``k``: ``(query_id, rank, doc_id,
-    score)`` with the canonical Lucene/Robertson idf ``ln(1 + (N - df
-    + 0.5) / (df + 0.5))`` and float tf saturation ``tf*(k1+1) / (tf +
-    k1*(1 - b + b*dl/avgdl))``.
-
-    **NOT oracle-pairable, by design**: ``ln()`` differs in the last
-    ulp across engines and a 1-ulp score difference flips tied ranks —
-    the reason the gate variant (:func:`bm25_topk`) quantizes.  Reach
-    for this one when textbook score VALUES matter (reporting, score
-    fusion with other retrievers); reach for the quantized variant
-    when cross-engine reproducibility matters.  The two RANKINGS agree
-    wherever scores aren't quantization-tied (for single-term queries
-    both are monotone in the same tf-saturation ratio; pinned in
-    test_search on a non-tied corpus).
-
-    Shares every plumbing stage and cap with the quantized path:
-    ``_query_terms`` (``max_query_len`` exclusion), ``_corpus_stats``
-    / ``_postings`` (``max_doc_len`` exclusion), the broadcast-gated
-    posting explode, and the persisted twice-consumed intermediates.
-    ``avgdl`` comes from the shared stats stage as integer
-    milli-tokens (≤ 0.001-token quantization — the one documented
-    deviation from the textbook formula).  No ``max_docs`` contract:
-    float scores cannot overflow, so the guard would be noise here.
-    """
-    if not (k1 > 0 and 0.0 <= b <= 1.0):
-        raise ValueError(f"k1 must be > 0 and b in [0, 1], "
-                         f"got k1={k1}, b={b}")
-    n = F.col("n_docs").cast("double")
-    avgdl = F.col("avg_dl_m").cast("double") / F.lit(1000.0)
-    idf = F.log(F.lit(1.0) + (n - F.col("df") + 0.5)
-                / (F.col("df") + 0.5))
-    tf = F.col("tf").cast("double")
-    tfs = (tf * F.lit(k1 + 1.0)
-           / (tf + F.lit(k1) * (F.lit(1.0 - b)
-                                + F.lit(b) * F.col("dl") / avgdl)))
-    return _bm25_rank_pipeline(
-        corpus, queries, k=k, id_col=id_col, text_col=text_col,
-        query_id_col=query_id_col, query_text_col=query_text_col,
-        max_query_len=max_query_len, max_doc_len=max_doc_len,
-        term_score=F.col("qtf") * idf * tfs,
-        agg_score=F.sum("_s"), score_alias="score")
+    qterms = pin(_query_terms(queries, query_id_col, query_text_col,
+                              max_query_len), StorageLevel.MEMORY_AND_DISK)
+    stats = _corpus_stats(corpus, text_col, max_doc_len)
+    post = pin(_postings(corpus, qterms, id_col, text_col, max_doc_len),
+               StorageLevel.MEMORY_AND_DISK)
+    dfreq = (post.groupBy("term")
+             .agg(F.count(F.lit(1)).cast("long").alias("df")))
+    scored = (post.join(F.broadcast(dfreq), "term")
+              .join(F.broadcast(qterms), "term")
+              .crossJoin(F.broadcast(stats))
+              .select("query_id", "doc_id",
+                      (F.col("qtf") * idf_int * tfq).alias("_s"))
+              .groupBy("query_id", "doc_id")
+              .agg(F.sum("_s").cast("long").alias("score_int")))
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score_int").desc(), F.col("doc_id").asc())
+    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "rank", "doc_id", "score_int"))
 
 
 def bm25_df_stats(corpus: DataFrame, queries: DataFrame, *,

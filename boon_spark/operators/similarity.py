@@ -16,9 +16,10 @@ Scale design for ``cosine_topk`` (brute force, the exact baseline):
 4. final global top-k over that tiny table.
 
 At 1000 executors × 100 TB this shuffles megabytes, not the cross
-product.  ``lsh_bucket_topk`` is the approximate scale path: deterministic
-random-hyperplane signatures bucket the corpus so each query only scans
-its bucket (plus multi-probe neighbors).
+product.  ``lsh_topk_quantized`` is the approximate scale path:
+deterministic integer random-hyperplane signatures bucket the corpus so
+each query only scans its bucket (plus multi-probe neighbors), and every
+step is int64 arithmetic, so it pairs with its DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -174,7 +175,7 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, *, k: int,
 
 
 # ---------------------------------------------------------------------------
-# LSH-bucketed approximate variant (scale path)
+# LSH-bucketed approximate top-k (integer-exact scale path)
 # ---------------------------------------------------------------------------
 
 def _hyperplane(dim: int, bit: int, seed: int) -> list[float]:
@@ -190,102 +191,6 @@ def _hyperplane(dim: int, bit: int, seed: int) -> list[float]:
         x ^= x >> 27
         out.append((x / 2**64) * 2.0 - 1.0)
     return out
-
-
-def simhash_signature(vec: Column, dim: int, *, bits: int = 16,
-                      seed: int = 42) -> Column:
-    """Random-hyperplane (SimHash) signature of an embedding as an int —
-    pure Column expressions, JVM-side."""
-    bit_cols = []
-    for b in range(bits):
-        plane = _hyperplane(dim, b, seed)
-        proj = F.aggregate(
-            F.zip_with(vec, F.array(*[F.lit(p) for p in plane]),
-                       lambda x, y: x * y),
-            F.lit(0.0), lambda acc, x: acc + x)
-        bit_cols.append(F.when(proj >= 0, F.lit(1 << b)).otherwise(F.lit(0)))
-    sig = bit_cols[0]
-    for c in bit_cols[1:]:
-        sig = sig + c
-    return sig.cast("long")
-
-
-def lsh_bucket_topk(corpus: DataFrame, queries: DataFrame, *, k: int,
-                    dim: int, id_col: str = "vec_id",
-                    vec_col: str = "embedding", bits: int = 8,
-                    seed: int = 42, multiprobe: bool = True,
-                    max_bucket: int | None = 1024,
-                    max_queries_per_pass: int | None = None) -> DataFrame:
-    """Approximate top-k: bucket corpus and queries by SimHash signature,
-    join on the bucket, rank within.  Recall < 1.0 by construction; the
-    bucket join replaces the cross product — at scale this is a standard
-    broadcast equi-join on the signature (bounded fan-out).
-
-    ``multiprobe`` explodes each QUERY into its bucket plus all 1-bit-
-    flipped neighbor buckets (bits+1 probes) — the classic recall lever
-    that costs query-side fan-out (small side) instead of corpus passes.
-
-    Skew/size bounds (round-4, mirroring ``dedup.minhash_lsh_pairs``):
-
-    - ``max_bucket`` drops corpus buckets holding more rows — exactly the
-      near-duplicate-heavy buckets this operator attracts would otherwise
-      make the bucket join arbitrarily skewed.  The drop is computed from
-      a count-only aggregation (the shuffle carries ``(_sig, partial
-      count)``, never embeddings — the corpus itself stays un-shuffled)
-      followed by a broadcast anti-join against the tiny over-cap list.
-      Audit the recall loss with :func:`lsh_bucket_stats` (same
-      parameters → the audited buckets ARE the join's buckets);
-    - ``max_queries_per_pass`` chunks the query broadcast (exact chunks
-      via row_number, BEFORE the ×(bits+1) multiprobe fan-out); chunked
-      mode persists the capped corpus projection so the corpus is read
-      once across chunks.
-    """
-    sig_c = simhash_signature(F.col(vec_col), dim, bits=bits, seed=seed)
-    c = corpus.select(F.col(id_col).alias("neighbor_id"),
-                      F.col(vec_col).alias("_cv"), sig_c.alias("_sig"))
-    if max_bucket is not None:
-        over = (c.groupBy("_sig").agg(F.count(F.lit(1)).alias("_n"))
-                .filter(F.col("_n") > max_bucket).select("_sig"))
-        c = c.join(F.broadcast(over), on="_sig", how="left_anti")
-    q_all = queries.select(F.col(id_col).alias("query_id"),
-                           F.col(vec_col).alias("_qv"), sig_c.alias("_sig0"))
-    if max_queries_per_pass is not None:
-        n_q = q_all.count()
-        chunks = _exact_query_chunks(q_all, n_q, max_queries_per_pass)
-        if len(chunks) > 1:
-            c = pin(c, StorageLevel.MEMORY_AND_DISK)
-    else:
-        chunks = [q_all]
-
-    scored_parts = []
-    for q in chunks:
-        if multiprobe:
-            probes = F.array(F.col("_sig0"), *[
-                F.col("_sig0").bitwiseXOR(F.lit(1 << b))
-                for b in range(bits)])
-            q = q.select("query_id", "_qv",
-                         F.explode(probes).alias("_sig"))
-        else:
-            q = q.withColumnRenamed("_sig0", "_sig")
-        joined = (c.join(F.broadcast(q), on="_sig")
-                  .filter(F.col("neighbor_id") != F.col("query_id")))
-        scored_parts.append(
-            joined.select("query_id", "neighbor_id",
-                          cosine(F.col("_cv"), F.col("_qv")).alias("cos"))
-            # null cosines (null/ragged embeddings) are never neighbors
-            .filter(F.col("cos").isNotNull()))
-    scored = scored_parts[0]
-    for extra in scored_parts[1:]:
-        scored = scored.unionByName(extra)
-    # dedup multiprobe double-hits AFTER the union: duplicate query_id
-    # rows can straddle a chunk boundary, so a per-chunk dedup would let
-    # the same (query, neighbor) pair take two of the k slots
-    scored = scored.dropDuplicates(["query_id", "neighbor_id"])
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank"))
 
 
 def _idot(x: Column, y: Column) -> Column:
@@ -402,12 +307,13 @@ def lsh_topk_quantized(corpus: DataFrame, queries: DataFrame, *, k: int,
                        rank_shift: int = 20, multiprobe: bool = True,
                        max_bucket: int | None = 1024,
                        coord_bound: float = 1.0) -> DataFrame:
-    """Integer-exact approximate top-k — the oracle-pairable variant of
-    :func:`lsh_bucket_topk` (same construction as
+    """Integer-exact approximate top-k (same construction as
     ``dedup.embedding_near_dups_quantized``: float LSH risks sign flips
     on near-zero projections and float-cosine rank flips between
     engines; every step here is int64 arithmetic, bit-identical
-    everywhere).
+    everywhere).  Cosine does not change when a vector is scaled, so
+    normalise unnormalised vectors first, or declare a ``coord_bound``
+    that covers their largest coordinate.
 
     - coordinates quantize to ``floor(x·2^q_bits)`` (power-of-two
       multiply = exact in binary FP);
@@ -602,9 +508,7 @@ def lsh_quantized_bucket_stats(corpus: DataFrame, *, dim: int,
     """Audit the recall loss of :func:`lsh_topk_quantized`'s bucket cap:
     one row with (n_buckets, n_kept_buckets, n_dropped_buckets,
     n_dropped_docs, largest_bucket) over the INTEGER ``sig_of``
-    signatures the quantized join actually buckets by
-    (:func:`lsh_bucket_stats` audits the float ``simhash_signature``
-    family — a different bucketing; ADVICE r4).  Shares
+    signatures the quantized join actually buckets by.  Shares
     :func:`_quantized_sig_frame` (clean rows + signatures) with the
     join, and is integer-exact, so it is DuckDB-oracle-pairable
     (:func:`lsh_quantized_bucket_stats_oracle_sql`).  Count-only: the
@@ -623,8 +527,8 @@ def lsh_quantized_bucket_stats(corpus: DataFrame, *, dim: int,
 def _cap_size_stats(sizes: DataFrame, cap: int, unit: str) -> DataFrame:
     """The shared cap-audit aggregate over a ``(key, n)`` sizes frame:
     one row ``(n_{unit}s, n_kept_{unit}s, n_dropped_{unit}s,
-    n_dropped_docs, largest_{unit})``.  ONE definition for all three
-    audit companions (quantized-LSH, IVF cells, float-LSH) so the
+    n_dropped_docs, largest_{unit})``.  ONE definition for both audit
+    companions (quantized-LSH buckets, IVF cells) so the
     kept/dropped accounting cannot drift between them — each audit's
     docstring promises the counts describe exactly what its join
     drops.  Empty input yields all zeros (coalesced)."""
@@ -686,8 +590,8 @@ def _ivf_guard(n_centroids: int, dim: int | None) -> None:
             f"= {n_centroids * dim} centroid literals exceeds the "
             f"{_IVF_MAX_CENTROID_LITERALS} expression budget (each Lloyd "
             "step inlines every centroid coordinate into the plan) — "
-            "lower n_centroids, or use lsh_topk_quantized / "
-            "lsh_bucket_topk for high-dimensional wide indexes")
+            "lower n_centroids, or use lsh_topk_quantized for "
+            "high-dimensional wide indexes")
 
 
 def _ivf_assign(cents: list[list[float]], vcol: str) -> Column:
@@ -876,20 +780,3 @@ def ivf_cell_stats(corpus: DataFrame, *, id_col: str = "vec_id",
         .filter(F.col("_cell").isNotNull())
     sizes = cc.groupBy("_cell").agg(F.count(F.lit(1)).alias("n"))
     return _cap_size_stats(sizes, cap, "cell")
-
-
-def lsh_bucket_stats(corpus: DataFrame, *, dim: int,
-                     id_col: str = "vec_id", vec_col: str = "embedding",
-                     bits: int = 8, seed: int = 42,
-                     max_bucket: int | None = 1024) -> DataFrame:
-    """Audit the recall loss of :func:`lsh_bucket_topk`'s bucket cap: one
-    row with (n_buckets, n_kept_buckets, n_dropped_buckets,
-    n_dropped_docs, largest_bucket) for the same signature parameters —
-    the no-silent-truncation companion (pattern:
-    ``dedup.minhash_lsh_bucket_stats``).  Count-only: the shuffle carries
-    (signature, partial count), never embeddings."""
-    cap = max_bucket if max_bucket is not None else (1 << 62)
-    sig_c = simhash_signature(F.col(vec_col), dim, bits=bits, seed=seed)
-    sizes = (corpus.select(sig_c.alias("_sig"))
-             .groupBy("_sig").agg(F.count(F.lit(1)).alias("n")))
-    return _cap_size_stats(sizes, cap, "bucket")

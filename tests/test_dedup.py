@@ -3,7 +3,8 @@
 import pytest
 from pyspark.sql import functions as F
 
-from boon_spark.operators.dedup import (embedding_near_dups,
+from boon_spark.operators._ckpt import scope
+from boon_spark.operators.dedup import (embedding_near_dups_quantized,
                                         exact_duplicates, minhash_lsh_pairs,
                                         minhash_signature, ngram_jaccard_pairs,
                                         simhash_near_dups, word_shingles)
@@ -75,48 +76,6 @@ def test_simhash_near_dups(spark, docs):
     assert ("d1", "d3") not in found and ("d2", "d3") not in found
 
 
-def test_embedding_near_dups(spark):
-    import random
-    rnd = random.Random(7)
-    base = [rnd.uniform(-1, 1) for _ in range(16)]
-    near = list(base)
-    near[0] += 0.01
-    far = [rnd.uniform(-1, 1) for _ in range(16)]
-    df = spark.createDataFrame(
-        [(1, base), (2, near), (3, far)],
-        "vec_id int, embedding array<float>")
-    pairs = embedding_near_dups(df, dim=16, threshold=0.99,
-                                bits=8).collect()
-    found = {(r.id_a, r.id_b) for r in pairs}
-    assert (1, 2) in found
-    assert (1, 3) not in found
-
-
-def test_lsh_topk_recall_vs_exact(spark):
-    """The approximate (LSH-bucketed) ANN must recover a decent fraction
-    of the exact top-k — the scale-path quality contract."""
-    from pyspark.sql import functions as F
-
-    from boon_spark.operators.similarity import cosine_topk, lsh_bucket_topk
-
-    emb = spark.range(400).select(
-        F.col("id").alias("vec_id"),
-        F.transform(F.sequence(F.lit(1), F.lit(16)),
-                    lambda i: ((F.pmod(F.xxhash64(F.col("id"), i),
-                                       F.lit(1000)) / 500.0) - 1.0)
-                    .cast("float")).alias("embedding"))
-    queries = emb.filter(F.col("vec_id") < 10)
-    exact = {(r.query_id, r.neighbor_id) for r in
-             cosine_topk(emb, queries, k=5).collect()}
-    approx = {(r.query_id, r.neighbor_id) for r in
-              lsh_bucket_topk(emb, queries, k=5, dim=16, bits=4).collect()}
-    recall = len(exact & approx) / len(exact)
-    # 4-bit buckets on 400 random vectors: expect moderate recall, and
-    # the approximate result must be a plausible subset, not garbage
-    assert recall >= 0.25, f"recall {recall:.2f} too low"
-    assert all(q < 10 for q, _ in approx)
-
-
 # ---------------------------------------------------------------------------
 # degenerate-input scale guards (bounded buffers, capped quadratics)
 # ---------------------------------------------------------------------------
@@ -171,11 +130,27 @@ def test_embedding_near_dups_max_bucket_caps_degenerate(spark):
     rows = [(i, [1.0, 0.0, 0.0, 0.0]) for i in range(40)]
     rows += [(100, [0.0, 1.0, 0.0, 0.0]), (101, [0.0, 1.0, 0.0, 0.0])]
     df = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
-    out = embedding_near_dups(df, dim=4, threshold=0.9, bits=8,
-                              max_bucket=8).collect()
-    pairs = {(r.id_a, r.id_b) for r in out}
-    assert (100, 101) in pairs
-    assert all(a >= 100 for a, _ in pairs)  # degenerate bucket dropped
+    with scope():
+        capped = {(r.id_a, r.id_b) for r in embedding_near_dups_quantized(
+            df, dim=4, threshold_num=9, threshold_den=10, bits=8,
+            max_bucket=8).collect()}
+        uncapped = embedding_near_dups_quantized(
+            df, dim=4, threshold_num=9, threshold_den=10, bits=8,
+            max_bucket=64).count()
+    assert capped == {(100, 101)}  # degenerate bucket dropped
+    assert uncapped == 40 * 39 // 2 + 1  # sanity: the cap did the drop
+
+
+@pytest.mark.parametrize("num,den", [(11, 10), (0, 0), (-9, 10), (1, 0),
+                                     (-1, -1)])
+def test_embedding_near_dups_quantized_rejects_bad_threshold(num, den):
+    # past 1 the squared-cosine verify is always false (Cauchy-Schwarz),
+    # 0/0 passes every positive dot and a negative numerator squares
+    # away: each would silently return a wrong pair set, so the call
+    # raises before any Spark work (df=None is never touched)
+    with pytest.raises(ValueError, match="threshold"):
+        embedding_near_dups_quantized(None, dim=2, threshold_num=num,
+                                      threshold_den=den)
 
 
 def test_minhash_bucket_stats(spark, docs):

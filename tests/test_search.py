@@ -170,52 +170,3 @@ def test_doc_len_overflow_guard_and_exclusion(spark):
         max_query_len=8, max_doc_len=10)).fetchall()
     # oracle over the shared 8-doc table: only in-contract docs appear
     assert all(w[2] != 2 for w in want)
-
-
-def test_float_variant_matches_quantized_ranking(spark):
-    # the documented convenience variant: textbook ln() scores, same
-    # plumbing/caps — its RANKING must agree with the quantized gate
-    # variant on a corpus without quantization ties (VERDICT r5 #6)
-    import math
-    from boon_spark.operators.search import bm25_topk_float
-    docs, qs = _frames(spark)
-    with scope():
-        fl = bm25_topk_float(docs, qs, k=3, max_query_len=8)
-        qt = bm25_topk(docs, qs, k=3, max_query_len=8)
-        got_f = [(r.query_id, r.rank, r.doc_id)
-                 for r in fl.orderBy("query_id", "rank").collect()]
-        got_q = [(r.query_id, r.rank, r.doc_id)
-                 for r in qt.orderBy("query_id", "rank").collect()]
-    assert got_f == got_q and got_f  # same ranking, non-degenerate
-
-    # score VALUES are the textbook formula (hand-computed reference
-    # for query 10 = "cat mat"; shared-stats avgdl is milli-token
-    # quantized, so compare against the same quantization)
-    scores = {(r.query_id, r.doc_id): r.score
-              for r in bm25_topk_float(docs, qs, k=8,
-                                       max_query_len=8).collect()}
-    # NULL/blank docs count as length-0 documents in the shared stats
-    # stage (doc_len coalesces to 0), exactly like the quantized path
-    def toks(t): return t.split() if t and t.strip() else []
-    in_contract = {d: toks(t) for d, t in DOCS}
-    n = len(in_contract)
-    avgdl = (1000 * sum(len(w) for w in in_contract.values()) // n) / 1000.0
-    def ref(term, doc):
-        dl = len(in_contract[doc])
-        tf = in_contract[doc].count(term)
-        if tf == 0: return 0.0
-        df = sum(1 for w in in_contract.values() if term in w)
-        idf = math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-        return idf * tf * 2.2 / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl))
-    for doc in (1, 3, 8):
-        want = ref("cat", doc) + ref("mat", doc)
-        assert abs(scores[(10, doc)] - want) < 1e-12, (doc, want)
-
-
-def test_float_variant_param_validation(spark):
-    from boon_spark.operators.search import bm25_topk_float
-    docs, qs = _frames(spark)
-    with pytest.raises(ValueError, match="k1 must be"):
-        bm25_topk_float(docs, qs, k=3, k1=0.0)
-    with pytest.raises(ValueError, match="k1 must be"):
-        bm25_topk_float(docs, qs, k=3, b=1.5)

@@ -140,41 +140,6 @@ def _hot_corpus(spark, n_hot=50, n_cold=20, dim=16):
     return hot.unionByName(cold)
 
 
-def test_lsh_bucket_cap_drops_hot_bucket(spark):
-    # VERDICT r3 #3: a near-duplicate-heavy bucket (exactly where LSH
-    # ANN gets used) must be droppable via max_bucket instead of skewing
-    # the bucket join; the stats companion audits the loss
-    from boon_spark.operators.similarity import (lsh_bucket_stats,
-                                                 lsh_bucket_topk)
-    corpus = _hot_corpus(spark)
-    q = corpus.filter(F.col("vec_id") == 1000)  # a hot-bucket member
-    uncapped = lsh_bucket_topk(corpus, q, k=5, dim=16, bits=6,
-                               max_bucket=None).collect()
-    assert any(r.neighbor_id >= 1000 for r in uncapped), \
-        "sanity: uncapped join must surface hot-bucket neighbors"
-    capped = lsh_bucket_topk(corpus, q, k=5, dim=16, bits=6,
-                             max_bucket=10).collect()
-    assert all(r.neighbor_id < 1000 for r in capped), \
-        "capped join must not read the over-cap bucket"
-    stats = lsh_bucket_stats(corpus, dim=16, bits=6, max_bucket=10) \
-        .collect()[0]
-    assert stats.n_dropped_buckets >= 1
-    assert stats.n_dropped_docs >= 50
-    assert stats.largest_bucket >= 50
-    assert stats.n_buckets == stats.n_kept_buckets + stats.n_dropped_buckets
-
-
-def test_lsh_topk_chunked_matches_single_pass(spark):
-    from boon_spark.operators.similarity import lsh_bucket_topk
-    corpus = _hot_corpus(spark, n_hot=5, n_cold=40)
-    q = corpus.filter(F.col("vec_id") < 12)
-    with scope():
-        chunked = lsh_bucket_topk(corpus, q, k=4, dim=16, bits=4,
-                                  max_queries_per_pass=3).collect()
-        single = lsh_bucket_topk(corpus, q, k=4, dim=16, bits=4).collect()
-        assert sorted(map(tuple, chunked)) == sorted(map(tuple, single))
-
-
 def test_lsh_topk_quantized_recall_and_determinism(spark):
     # the integer-exact approximate path must (a) be deterministic across
     # runs and (b) recover a decent fraction of the exact top-k
@@ -281,16 +246,17 @@ def test_exact_chunks_sweep_overflow_rows(spark):
     assert chunks[-1].count() == 20 - 8  # last chunk sweeps the rest
 
 
-def test_lsh_bucket_topk_dup_query_rows_across_chunks(spark):
-    # duplicate query_id rows straddling a chunk boundary must not let
-    # the same (query, neighbor) pair take two of the k slots
-    from boon_spark.operators.similarity import lsh_bucket_topk
+def test_lsh_topk_quantized_dup_query_rows_fill_distinct_slots(spark):
+    # duplicate query_id rows must not let the same (query, neighbor)
+    # pair take two of the k slots
+    from boon_spark.operators.similarity import lsh_topk_quantized
     emb = _emb(spark, 40, dim=8)
     q1 = emb.filter(F.col("vec_id") == 1)
     dup_q = q1.unionByName(q1).unionByName(q1)  # 3 copies of query 1
-    out = lsh_bucket_topk(emb, dup_q, k=4, dim=8, bits=3,
-                          max_queries_per_pass=1).collect()
+    with scope():
+        out = lsh_topk_quantized(emb, dup_q, k=4, dim=8, bits=3).collect()
     pairs = [(r.query_id, r.neighbor_id) for r in out]
+    assert len(pairs) == 4, "sanity: the bucket holds k neighbors"
     assert len(pairs) == len(set(pairs)), \
         f"duplicate pair occupied multiple slots: {sorted(pairs)}"
 
@@ -333,11 +299,10 @@ def test_ivf_cell_stats_audits_max_cell(spark):
 
 
 def test_lsh_quantized_bucket_stats_audits_the_joins_buckets(spark):
-    # ADVICE r4: lsh_bucket_stats buckets by the FLOAT simhash family —
-    # not the integer sig_of signatures the quantized join uses.  The
-    # quantized companion must count exactly the buckets the quantized
-    # join forms: the hot bucket the capped join drops shows up in its
-    # stats, and bucket totals account for every clean row.
+    # ADVICE r4: the audit must count exactly the buckets the quantized
+    # join forms (the integer sig_of signatures): the hot bucket the
+    # capped join drops shows up in its stats, and bucket totals account
+    # for every clean row.
     from boon_spark.operators.similarity import lsh_quantized_bucket_stats
     corpus = _hot_corpus(spark, n_hot=40, n_cold=30)
     stats = lsh_quantized_bucket_stats(corpus, dim=16, bits=5,
