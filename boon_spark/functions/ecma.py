@@ -22,11 +22,18 @@ divergences:
   Rewritten to ``\\A`` / ``\\z`` (Java) and ``\\A`` / ``\\Z`` (Python
   probe).  This one the reference does not need (Rust ``$`` is already
   end-of-haystack); it matters for Java.
+* ``(?`` groups — ECMA has only ``(?:``, ``(?=``, ``(?!``, ``(?<=``,
+  ``(?<!`` and ``(?<name>``; ``(?P<x>``, ``(?P=x)``, ``(?#…)``, ``(?>``
+  and inline flags are rejected, although Python or Java reads them.
 
 :func:`translate` returns ``(java, py)`` — the Java pattern handed to
 ``rlike`` and a Python-``re``-compatible probe used for compile-time
 validation and driver-side name matching (``patternProperties`` /
 ``propertyNames`` run on static column names, never on row data).
+:func:`compile_pattern` is the one validity rule — translate, then
+compile the probe — for ``pattern``, ``patternProperties`` and
+``format: regex``.  So ``\\p{…}`` and ``(?<name>…)``, valid ECMA-262,
+are rejected: the probe cannot compile them.
 """
 
 from __future__ import annotations
@@ -40,6 +47,9 @@ _ECMA_SPACE = " \\t\\n\\r\\x0b\\x0c\\u00a0\\ufeff\\u2003\\u2029"
 
 # a real quantifier form: {n} {n,} {n,m}
 _QUANT = _re.compile(r"\{\d+(,\d*)?\}")
+
+# the group openers ECMA-262 has: (?:  (?=  (?!  (?<=  (?<!  (?<name>
+_ECMA_GROUP = _re.compile(r"\(\?(?:[:=!]|<[=!]|<[A-Za-z_$])")
 
 # codepoint sets behind the perl classes (ECMA/ASCII semantics)
 _DIGITS = frozenset(range(0x30, 0x3A))
@@ -82,8 +92,8 @@ def translate(pattern: str, loc: str = "") -> tuple[str, str]:
     """Translate an ECMA-262 pattern → (java_pattern, python_probe).
 
     Raises :class:`CompileError` for constructs that cannot be mapped
-    (``\\a``, ``\\c`` with a non-letter, negated perl classes inside a
-    character class)."""
+    (``\\a``, ``\\c`` with a non-letter, a ``(?`` group ECMA-262
+    lacks)."""
     java: list[str] = []
     py: list[str] = []
 
@@ -167,6 +177,11 @@ def translate(pattern: str, loc: str = "") -> tuple[str, str]:
             emit("\\{")
             i += 1
             continue
+        if not in_class and c == "(" and pattern.startswith("?", i + 1) \
+                and not _ECMA_GROUP.match(pattern, i):
+            raise CompileError(
+                f"{loc}/pattern: {pattern[i:i + 3]!r} is not an ECMA 262 "
+                f"group")
         if not in_class and c == "^":
             emit("\\A")
             i += 1
@@ -180,3 +195,17 @@ def translate(pattern: str, loc: str = "") -> tuple[str, str]:
         emit(c)
         i += 1
     return "".join(java), "".join(py)
+
+
+def compile_pattern(pattern: str, loc: str = "") -> tuple[str, str]:
+    """The ECMA-262 validity rule: :func:`translate`, then compile the
+    Python probe.  Returns ``(java, py)``; raises :class:`CompileError`
+    for a pattern that is not ECMA-262 or that the probe cannot
+    compile."""
+    java, py = translate(pattern, loc)
+    try:
+        _re.compile(py)
+    except _re.error as e:
+        raise CompileError(
+            f"{loc}/pattern: invalid regex {pattern!r}: {e}") from e
+    return java, py

@@ -1,15 +1,23 @@
 """Format predicate registry — boon's 19 built-in ``format`` checkers
 (reference ``src/formats.rs:24-48``) re-expressed Spark-first.
 
-Design: every format is a function ``Column -> Column[boolean]``.  Formats
-that need no Python grammar stay JVM-side (whole-stage codegen): a single
-``rlike`` for the regex formats, and for the calendar formats (date,
-time, date-time, period) a shape ``rlike`` plus integer field checks —
-so they also run inside higher-order functions (array items, map
-values).  The residue (ipv6, email, URI and IRI grammars, uri-template,
-regex, idn-*) runs as Arrow-batched pandas UDFs — never per-row Python
-(input_hint mandate), but never inside a higher-order function either:
-the plan builder refuses such a format under ``items`` and the like.
+Design: every format is a function ``Column -> Column[boolean]``.  A
+built-in format is one anchored pattern string that both engines read:
+the JVM runs it as an ``rlike`` (whole-stage codegen, and inside
+higher-order functions — array items, map values), and Python compiles
+the same string where a UDF still needs it.
+
+* JVM, one ``rlike``: uuid, ipv4, hostname, json-pointer,
+  relative-json-pointer, duration, ipv6, email, uri, uri-reference, iri,
+  iri-reference, uri-template.
+* JVM, a shape ``rlike`` plus integer field checks: date, time,
+  date-time, period.
+* Arrow-batched pandas UDF (the residue — never per-row Python, never
+  inside a higher-order function: the plan builder refuses it under
+  ``items`` and the like): regex (the ECMA-262 rule of ``pattern``,
+  :func:`.ecma.compile_pattern`), idn-hostname and idn-email (IDNA
+  tables).
+
 Applicability follows the reference (``src/formats.rs:51-53``): format
 applies to strings only, non-strings and NULLs pass — the plan builder
 enforces that, these predicates may assume non-null string input.
@@ -30,7 +38,9 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..errors import CompileError
 from . import bump_generation
+from .ecma import compile_pattern
 
 # ---------------------------------------------------------------------------
 # regex-expressible formats (JVM-side, codegen'd)
@@ -42,12 +52,13 @@ from . import bump_generation
 _END = r"(?![\s\S])"
 _LABEL = r"[A-Za-z0-9](?:[A-Za-z0-9-]{0,61}[A-Za-z0-9])?"
 _JP_TOKEN = r"(?:[^~/]|~[01])*"
+_DEC_OCTET = r"(?:25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])"
+_IPV4 = rf"(?:{_DEC_OCTET}\.){{3}}{_DEC_OCTET}"
 
 _REGEXES = {
     "uuid": r"^[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-"
             rf"[0-9a-fA-F]{{4}}-[0-9a-fA-F]{{12}}{_END}",
-    "ipv4": r"^(?:(?:25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])\.){3}"
-            rf"(?:25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9]){_END}",
+    "ipv4": f"^{_IPV4}{_END}",
     "hostname": rf"^(?=.{{1,253}}{_END}){_LABEL}(?:\.{_LABEL})*{_END}",
     "json-pointer": rf"^(?:/{_JP_TOKEN})*{_END}",
     "relative-json-pointer":
@@ -121,121 +132,77 @@ def _period(c: Column) -> Column:
             & ~(dur_start & dur_end))
 
 
-def _check_ipv6(s: str) -> bool:
-    import ipaddress
-    if "%" in s:
-        return False
-    try:
-        ipaddress.IPv6Address(s)
-        return True
-    except ValueError:
-        return False
+# ---------------------------------------------------------------------------
+# grammar formats (JVM-side): one anchored pattern per RFC grammar, in
+# syntax Java and Python read the same way (Python reads ``email`` for
+# idn-email).  A repeat that can run the length of the input is
+# possessive: java.util.regex recurses once per iteration of a greedy
+# group repeat, and its StackOverflowError kills the executor
+# ---------------------------------------------------------------------------
+
+_HEX = "[0-9A-Fa-f]"
+_PCT = f"%{_HEX}{{2}}"
+_H16 = f"{_HEX}{{1,4}}"
+_LS32 = f"(?:{_H16}:{_H16}|{_IPV4})"
 
 
-_ATEXT = set("ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"
-             "0123456789!#$%&'*+-/=?^_`{|}~")
-_HOSTNAME_RE = re.compile(_REGEXES["hostname"])
-_IPV4_RE = re.compile(_REGEXES["ipv4"])
+def _gap(k: int) -> str:
+    # RFC 3986 '[ *k( h16 ":" ) h16 ] "::"'
+    return f"(?:(?:{_H16}:){{0,{k}}}{_H16})?::"
 
 
-def _check_email(s: str) -> bool:
-    # RFC5321-ish, matching boon src/formats.rs:581-657: dot-atom or
-    # quoted-string local part; hostname or [ip] domain.
-    at = s.rfind("@")
-    if at <= 0 or at == len(s) - 1:
-        return False
-    local, domain = s[:at], s[at + 1:]
-    if local.startswith('"') and local.endswith('"') and len(local) >= 2:
-        body = local[1:-1]
-        i = 0
-        while i < len(body):
-            c = body[i]
-            if c == "\\":
-                # quoted-pair: only \" and \\ (matches the reference's
-                # email checker, src/formats.rs:581-657)
-                if i + 1 >= len(body) or body[i + 1] not in '"\\':
-                    return False
-                i += 2
-            elif c in '"\r\n':
-                return False
-            else:
-                i += 1
-    else:
-        parts = local.split(".")
-        if any(not p or any(c not in _ATEXT for c in p) for p in parts):
-            return False
-    if domain.startswith("[") and domain.endswith("]"):
-        inner = domain[1:-1]
-        if inner.lower().startswith("ipv6:"):
-            return _check_ipv6(inner[5:])
-        return bool(_IPV4_RE.match(inner))
-    return bool(_HOSTNAME_RE.match(domain))
+# RFC 3986 IPv6address, one alternative per line of its ABNF
+_IPV6 = "(?:" + "|".join(
+    [f"(?:{_H16}:){{6}}{_LS32}", f"::(?:{_H16}:){{5}}{_LS32}"]
+    + [f"{_gap(k)}(?:{_H16}:){{{4 - k}}}{_LS32}" for k in range(5)]
+    + [f"{_gap(5)}{_H16}", _gap(6)]) + ")"
+# RFC 5321 mailbox as boon reads it (src/formats.rs:581-657): a dot-atom
+# or a quoted local part (quoted-pairs \" and \\ only), then a hostname,
+# an [IPv4] or an [IPv6:...] literal
+_ATEXT = r"[A-Za-z0-9!#$%&'*+/=?^_`{|}~-]"
+_EMAIL = (rf"^(?:{_ATEXT}++(?:\.{_ATEXT}++)*+"
+          r'|"(?:[^"\\\r\n]|\\["\\])*+")@'
+          rf"(?:(?=[A-Za-z0-9.-]{{1,253}}{_END}){_LABEL}(?:\.{_LABEL})*"
+          rf"|\[(?:{_IPV4}|[Ii][Pp][Vv]6:{_IPV6})\]){_END}")
+# RFC 3986 characters, '%' only in a pct-encoded triplet; a '[' or ']'
+# before the query needs an authority (a '//' somewhere); RFC 3987 IRIs
+# add every non-ASCII character
+_URI_CHAR = r"[A-Za-z0-9\-._~:/?#\[\]@!$&'()*+,;=]"
+_IRI_CHAR = rf"(?:{_URI_CHAR}|[^\x00-\x7f])"
+_SCHEME = r"(?=[A-Za-z][A-Za-z0-9+.-]*:)"
 
 
-_SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.\-]*$")
-_URI_CHARS = set("ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"
-                 "0123456789-._~:/?#[]@!$&'()*+,;=%")
-_PCT_RE = re.compile(r"%(?![0-9A-Fa-f]{2})")
+def _uri_ref(char: str) -> str:
+    return rf"(?:(?![^#?]*[\[\]])|(?=[\s\S]*//))(?:{char}|{_PCT})*+{_END}"
 
 
-def _uri_chars_ok(s: str) -> bool:
-    return all(c in _URI_CHARS for c in s) and not _PCT_RE.search(s)
+# RFC 6570: literals (section 2.1, any non-ASCII character kept) and
+# {expression}s of varspecs, varname = varchar *( ["."] varchar )
+_VARCHAR = f"(?:[A-Za-z0-9_]|{_PCT})"
+_VARSPEC = rf"{_VARCHAR}(?:\.?{_VARCHAR})*+(?::[1-9][0-9]{{0,3}}|\*)?"
+_TEMPLATE = (r"""^(?:[^\x00-\x20"'%<>\\^`{|}\x7f]"""
+             rf"|{_PCT}|\{{[+#./;?&=,!@|]?{_VARSPEC}(?:,{_VARSPEC})*+\}})*+"
+             f"{_END}")
 
-
-def _check_uri_reference(s: str) -> bool:
-    if not _uri_chars_ok(s):
-        return False
-    # '[' / ']' only legal inside an IP-literal authority
-    no_frag = s.split("#", 1)[0]
-    rest = no_frag.split("?", 1)[0]
-    if "[" in rest or "]" in rest:
-        if "//" not in s:
-            return False
-    return True
-
-
-def _check_uri(s: str) -> bool:
-    head = s.split(":", 1)
-    if len(head) != 2 or not _SCHEME_RE.match(head[0]):
-        return False
-    return _check_uri_reference(s)
-
-
-_TPL_VAR_RE = re.compile(
-    r"^(?:[+#./;?&=,!@|]?)(?:[A-Za-z0-9_%.]|%[0-9A-Fa-f]{2})+"
-    r"(?::[1-9][0-9]{0,3}|\*)?"
-    r"(?:,(?:[A-Za-z0-9_%.]|%[0-9A-Fa-f]{2})+(?::[1-9][0-9]{0,3}|\*)?)*$")
-
-
-# what RFC 6570 §2.1 excludes from a literal: CTL, SP, '"', "'", '<',
-# '>', '\\', '^', '`', '|', and a '%' that starts no pct-encoded triplet
-_TPL_BAD_LIT_RE = re.compile(r"[\x00-\x20\x7f\"'<>\\^`|]|%(?![0-9A-Fa-f]{2})")
-
-
-def _check_uri_template(s: str) -> bool:
-    # brace balancing + expression grammar (boon src/formats.rs:809-838)
-    i = 0
-    while i < len(s):
-        c = s[i]
-        if c == "}" or _TPL_BAD_LIT_RE.match(s, i):
-            return False
-        if c == "{":
-            j = s.find("}", i)
-            if j < 0 or "{" in s[i + 1:j]:
-                return False
-            if not _TPL_VAR_RE.match(s[i + 1:j]):
-                return False
-            i = j + 1
-        else:
-            i += 1
-    return True
+_REGEXES.update({
+    "ipv6": f"^{_IPV6}{_END}",
+    "email": _EMAIL,
+    "uri": f"^{_SCHEME}{_uri_ref(_URI_CHAR)}",
+    "uri-reference": f"^{_uri_ref(_URI_CHAR)}",
+    "iri": f"^{_SCHEME}{_uri_ref(_IRI_CHAR)}",
+    "iri-reference": f"^{_uri_ref(_IRI_CHAR)}",
+    "uri-template": _TEMPLATE,
+})
+_EMAIL_RE = re.compile(_EMAIL)
 
 
 def _check_regex_fmt(s: str) -> bool:
+    # the ECMA-262 rule ``pattern`` uses; Spark has no "does this
+    # compile" predicate, so this one stays a UDF
     try:
-        re.compile(s)
+        compile_pattern(s)
         return True
-    except re.error:
+    except CompileError:
         return False
 
 
@@ -261,20 +228,13 @@ def _check_idn_email(s: str) -> bool:
     if at <= 0 or at == len(s) - 1:
         return False
     if s[:at].isascii() and s[at + 1:].isascii():
-        return _check_email(s)
+        return bool(_EMAIL_RE.match(s))
     return _check_idn_hostname(s[at + 1:])
 
 
 _PY_CHECKERS: dict[str, Callable[[str], bool]] = {
-    "ipv6": _check_ipv6,
-    "email": _check_email,
     "idn-email": _check_idn_email,
     "idn-hostname": _check_idn_hostname,
-    "uri": _check_uri,
-    "iri": _check_uri,                       # IRI ⊇ URI; unicode allowed
-    "uri-reference": _check_uri_reference,
-    "iri-reference": _check_uri_reference,
-    "uri-template": _check_uri_template,
     "regex": _check_regex_fmt,
 }
 
@@ -292,18 +252,6 @@ def _vectorized(fn: Callable[[str], bool]) -> Callable[[Column], Column]:
 
     make.python_udf = True
     return make
-
-
-# IRI / iri-reference allow unicode beyond the URI charset — widen.
-def _iri_wrap(base: Callable[[str], bool]) -> Callable[[str], bool]:
-    def check(s: str) -> bool:
-        ascii_fold = "".join(c if ord(c) < 128 else "a" for c in s)
-        return base(ascii_fold)
-    return check
-
-
-_PY_CHECKERS["iri"] = _iri_wrap(_check_uri)
-_PY_CHECKERS["iri-reference"] = _iri_wrap(_check_uri_reference)
 
 
 # public registry: name -> Column builder
@@ -337,7 +285,6 @@ def format_predicate(name: str) -> Callable[[Column], Column]:
     if name not in FORMATS:
         # backstop — compile_schema fail-fasts first (schema.py), but a
         # format deregistered between compile and plan-build lands here
-        from ..errors import CompileError
         raise CompileError(
             f"unknown format {name!r}; register_format() it first")
     return FORMATS[name]

@@ -259,17 +259,6 @@ class PlanBuilder:
             return F.coalesce(~pred, F.lit(False))
         return F.coalesce(value.isNotNull() & ~pred, F.lit(False))
 
-    def _field(self, value: Optional[Column], name: str):
-        """Resolve a property of the current object → (expr, dtype) or None
-        if statically absent."""
-        if value is None:
-            if name in self.df_schema.fieldNames():
-                f = self.df_schema[name]
-                return F.col(f"`{name}`"), f.dataType
-            return None
-        # value is a struct or map column with known dtype threaded by caller
-        raise AssertionError("_field on non-root handled inline")
-
     # ---------------------------------------------------------- main
     def build(self, node: Node, dtype: Optional[T.DataType],
               value: Optional[Column], iloc: Column

@@ -16,11 +16,11 @@ is pure Python and unit-testable without a session.
 from __future__ import annotations
 
 import copy
-import re
 from dataclasses import dataclass, field
 from typing import Any, Optional
 
 from .errors import CompileError
+from .functions.ecma import compile_pattern
 
 # JSON types, exactly the reference's 7 (src/lib.rs:310-350).
 JSON_TYPES = {"null", "boolean", "number", "integer", "string", "array", "object"}
@@ -288,27 +288,6 @@ def _nonneg_int(v: Any, kw: str, loc: str) -> int:
     if isinstance(v, bool) or not isinstance(v, int) or v < 0:
         raise CompileError(f"{loc}/{kw}: expected non-negative integer, got {v!r}")
     return v
-
-
-def _check_regex(pat: str, loc: str) -> tuple[str, str]:
-    """Translate ECMA-262 pattern → (java, python_probe) and validate.
-
-    The Java direction of boon's ECMA→Rust translator
-    (``src/ecma.rs:8-153``): \\d/\\w/\\s become explicit ASCII/ECMA
-    classes, \\cX folds to the control character, \\a is rejected, and
-    ^/$ become input-only anchors (Java ``$`` would match before a final
-    newline; ECMA's does not).  The Python probe (``\\Z`` instead of
-    ``\\z``) validates structure at compile and drives the compile-time
-    name matching for patternProperties/propertyNames."""
-    from .functions.ecma import translate
-    java, py = translate(pat, loc)
-    try:
-        re.compile(py)
-    except re.error as e:
-        raise CompileError(f"{loc}/pattern: invalid regex {pat!r}: {e}") from e
-    if "(?P<" in pat:
-        raise CompileError(f"{loc}/pattern: named groups not portable to Java regex")
-    return java, py
 
 
 def root_base_uri(doc: Any, default_draft: Optional[int]) -> str:
@@ -1071,7 +1050,7 @@ class Compiler:
         if "pattern" in v:
             _expect(isinstance(v["pattern"], str), loc, "pattern",
                     "string (regex)", v["pattern"])
-            n.pattern, n.pattern_py = _check_regex(v["pattern"], loc)
+            n.pattern, n.pattern_py = compile_pattern(v["pattern"], loc)
             n.pattern_src = v["pattern"]
 
         if "minItems" in v:
@@ -1130,7 +1109,7 @@ class Compiler:
                 k: self.compile_value(s, f"{loc}/patternProperties/{k}")
                 for k, s in v["patternProperties"].items()}
             n.pattern_translations = {
-                k: _check_regex(k, loc)
+                k: compile_pattern(k, loc)
                 for k in v["patternProperties"]}
         if "additionalProperties" in v:
             ap = v["additionalProperties"]

@@ -6,7 +6,7 @@ tests/fixtures/ecma_regex.json."""
 import pytest
 
 from boon_spark.errors import CompileError
-from boon_spark.functions.ecma import translate
+from boon_spark.functions.ecma import compile_pattern, translate
 
 
 @pytest.mark.parametrize("src,want_java", [
@@ -35,6 +35,12 @@ def test_python_probe_uses_big_z():
 @pytest.mark.parametrize("src", [
     r"\c\n",       # \c{invalid_char} (ecma.rs test_ecma_compat_invalid)
     r"abc\adef",   # \a is not an ECMA escape
+    r"(?P<x>a)",   # Python named group (ECMA spells it (?<x>a))
+    r"(a)(?P=x)",  # Python named backreference
+    r"a(?#c)",     # comment group
+    r"(?i)a",      # inline flags
+    r"(?i:a)",
+    r"(?>a)",      # atomic group
 ])
 def test_translate_rejects(src):
     with pytest.raises(CompileError):
@@ -73,6 +79,30 @@ def test_class_internal_negated_perl_classes_java(spark):
     java2, _ = translate(r"^[^a\D]$")
     got2 = sorted(r.s for r in df.filter(F.col("s").rlike(java2)).collect())
     assert got2 == ["5"]
+
+
+@pytest.mark.parametrize("src", [
+    r"(?<x>a)",    # ECMA named group: the Python probe cannot compile it
+    r"\p{L}",      # ECMA property escape: same
+])
+def test_compile_pattern_rejects(src):
+    with pytest.raises(CompileError):
+        compile_pattern(src)
+
+
+@pytest.mark.parametrize("src", [
+    r"(?:a)(?=b)(?!c)(?<=d)(?<!e)",   # the (? groups ECMA-262 has
+    r"\(?a",                           # escaped paren, then a quantifier
+    r"[(?i)]",                         # '(?' inside a class is literal
+])
+def test_compile_pattern_accepts(src):
+    compile_pattern(src)
+
+
+def test_pattern_comment_group_is_compile_error():
+    from boon_spark.schema import compile_schema
+    with pytest.raises(CompileError, match=r"/properties/s/pattern"):
+        compile_schema({"properties": {"s": {"pattern": "(?#c)"}}})
 
 
 def test_compile_integrates_translation():

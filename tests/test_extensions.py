@@ -73,11 +73,11 @@ def test_udf_format_under_items_is_compile_error(spark):
     # a pandas UDF cannot run inside a higher-order function: the builder
     # refuses it by keyword location instead of Spark's AnalysisException
     eng = Engine.from_schema(
-        {"properties": {"xs": {"items": {"format": "email"}}}},
+        {"properties": {"xs": {"items": {"format": "idn-email"}}}},
         assert_format=True)
     df = spark.createDataFrame([(["a@b.com"],)], "xs array<string>")
     with pytest.raises(CompileError,
-                       match="/properties/xs/items/format: format 'email'"):
+                       match="/properties/xs/items/format: format 'idn-email'"):
         eng.annotate(df)
 
 

@@ -93,16 +93,29 @@ def test_table_checks_have_no_lambdas(spark, seq_parquet):
     assert "lambdafunction" not in _plan(eq)
 
 
-def test_calendar_format_runs_in_the_jvm(spark):
-    # the format_date gate's shape: a date string, every 10th corrupted;
-    # the calendar check is a Column expression, not an Arrow UDF
-    d = F.date_format(F.date_add(F.lit("2020-01-01").cast("date"),
-                                 F.col("id").cast("int")), "yyyy-MM-dd")
+# a valid and an invalid value of each format that runs in the JVM
+_JVM_FORMATS = [
+    ("date", "2020-02-29", "2021-02-29"),
+    ("ipv6", "2001:db8::1", "2001:db8::1::"),
+    ("email", "a.b@example.com", "a..b@example.com"),
+    ("uri", "https://example.com/a?b#c", "/a/b"),
+    ("uri-reference", "../a?b#c", "a b"),
+    ("iri", "https://\u4f8b.jp/\u00e9", "https://x/%\u00e91"),
+    ("iri-reference", "\u00e9?q", "%zz"),
+    ("uri-template", "/users{/id}{?q,lang}", "{a..b}"),
+]
+
+
+@pytest.mark.parametrize("fmt,good,bad", _JVM_FORMATS,
+                         ids=[case[0] for case in _JVM_FORMATS])
+def test_format_runs_in_the_jvm(spark, fmt, good, bad):
+    # every 10th row corrupted; a built-in grammar or calendar format is
+    # a Column expression, not an Arrow UDF
     df = spark.range(100).select(
         F.col("id").alias("o_orderkey"),
-        F.when(F.col("id") % 10 == 0, F.concat(d, F.lit("x")))
-        .otherwise(d).alias("d_str"))
-    eng = Engine.from_schema({"properties": {"d_str": {"format": "date"}}},
+        F.when(F.col("id") % 10 == 0, F.lit(bad)).otherwise(F.lit(good))
+        .alias("s"))
+    eng = Engine.from_schema({"properties": {"s": {"format": fmt}}},
                              row_id="o_orderkey", assert_format=True)
     out = eng.validate(df).violations().select("instance_location",
                                                "keyword_location")
